@@ -387,7 +387,7 @@ object Soak {
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
 
     def probe(df: org.apache.spark.sql.DataFrame, ef: Int) =
-      HnswSpark.searchResidentSq8Rerank(spark, sq8, corpus, df, 10,
+      HnswSpark.searchResidentRerank(spark, sq8, corpus, df, 10,
         candFactor = 4, ef = Some(ef), allow = allowFn)
     val sweep = efSweep.map { ef =>
       probe(qDf, ef).count() // warm
@@ -477,7 +477,7 @@ object Soak {
       .collect()
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     def probe(df: org.apache.spark.sql.DataFrame, ef: Int, cf: Int) =
-      HnswSpark.searchResidentPqRerank(spark, pq, corpus, df, 10,
+      HnswSpark.searchResidentRerank(spark, pq, corpus, df, 10,
         candFactor = cf, ef = Some(ef), allow = allowFn)
     // PQ's binding knob is the RERANK WIDTH, not the beam: with m=8
     // codes the ADC shortlist ordering is coarse, so the sweep crosses

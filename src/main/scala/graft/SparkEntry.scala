@@ -434,7 +434,7 @@ object SparkEntry {
 
   // ---- the query surface -------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O2+O5+A2: the reference search default (metric=cosine, k=10;
     // api/rest/server.py:93-99 defaults, :33 k default)
     "knn_cosine" -> ((s, d) => knnByMetric("cosine")(s, d)),
@@ -1064,7 +1064,7 @@ object SparkEntry {
     "hnsw_sq8_knn" -> ((s, d) => {
       hookResidentEviction(s)
       val sq8 = sq8Shards.getOrElseUpdate((s, d), buildSq8Shards(s, d))
-      HnswSpark.searchResidentSq8Rerank(s, sq8, Tables.embeddings(s, d),
+      HnswSpark.searchResidentRerank(s, sq8, Tables.embeddings(s, d),
         queryBatch(s, d), k = 10, candFactor = 50, ef = Some(60000))
         .withColumn("rank", col("rank").cast("long"))
         .orderBy(col("query_id"), col("rank"))
@@ -1077,7 +1077,7 @@ object SparkEntry {
     "hnsw_pq_knn" -> ((s, d) => {
       hookResidentEviction(s)
       val pq = pqShards.getOrElseUpdate((s, d), buildPqShards(s, d))
-      HnswSpark.searchResidentPqRerank(s, pq, Tables.embeddings(s, d),
+      HnswSpark.searchResidentRerank(s, pq, Tables.embeddings(s, d),
         queryBatch(s, d), k = 10, candFactor = 50, ef = Some(60000))
         .withColumn("rank", col("rank").cast("long"))
         .orderBy(col("query_id"), col("rank"))
@@ -1115,7 +1115,7 @@ object SparkEntry {
     "hnsw_sq8_knn_filtered" -> ((s, d) => {
       hookResidentEviction(s)
       val sq8 = sq8Shards.getOrElseUpdate((s, d), buildSq8Shards(s, d))
-      HnswSpark.searchResidentSq8Rerank(s, sq8, Tables.embeddings(s, d),
+      HnswSpark.searchResidentRerank(s, sq8, Tables.embeddings(s, d),
         queryBatch(s, d), k = 10, candFactor = 50, ef = Some(60000),
         allow = Some((id: Long) => id % 2 == 0))
         .withColumn("rank", col("rank").cast("long"))
@@ -1124,7 +1124,7 @@ object SparkEntry {
     "hnsw_pq_knn_filtered" -> ((s, d) => {
       hookResidentEviction(s)
       val pq = pqShards.getOrElseUpdate((s, d), buildPqShards(s, d))
-      HnswSpark.searchResidentPqRerank(s, pq, Tables.embeddings(s, d),
+      HnswSpark.searchResidentRerank(s, pq, Tables.embeddings(s, d),
         queryBatch(s, d), k = 10, candFactor = 50, ef = Some(60000),
         allow = Some((id: Long) => id % 2 == 0))
         .withColumn("rank", col("rank").cast("long"))
@@ -2029,7 +2029,7 @@ object SparkEntry {
          |  list_transform(codes, c -> vmin + c / 255.0 * (vmax - vmin)) AS vh FROM sqc)""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "profile_events" -> {
       // CAST sums to BIGINT (DuckDB integer sums are HUGEINT — the r1
       // type-parity lesson); value rounded upstream so min/max render

@@ -45,16 +45,17 @@ final class HnswIndex(
   // resumes where the original left off instead of replaying from `seed`
   private var draws: Long = 0L
 
-  // parallel arrays indexed by internal node index
-  private val ids = mutable.ArrayBuffer.empty[Long]
-  private val vecs = mutable.ArrayBuffer.empty[Array[Double]]
-  private val levels = mutable.ArrayBuffer.empty[Int]
+  // parallel arrays indexed by internal node index (package-visible so
+  // PackedHnsw can snapshot the graph into its immutable varint form)
+  private[index] val ids = mutable.ArrayBuffer.empty[Long]
+  private[index] val vecs = mutable.ArrayBuffer.empty[Array[Double]]
+  private[index] val levels = mutable.ArrayBuffer.empty[Int]
   // conns(i)(layer) = neighbor internal indexes, unboxed (IntVec): adjacency
   // iteration dominates search time and ArrayBuffer[Int] boxes every element
-  private val conns = mutable.ArrayBuffer.empty[Array[IntVec]]
+  private[index] val conns = mutable.ArrayBuffer.empty[Array[IntVec]]
   private val idToIdx = mutable.HashMap.empty[Long, Int]
-  private val dead = mutable.BitSet.empty
-  private var entry: Int = -1
+  private[index] val dead = mutable.BitSet.empty
+  private[index] var entry: Int = -1
   // next auto-assigned external id — the reference's `current_id` counter:
   // auto inserts take it, and an externally-supplied id bumps it past
   // itself so auto ids never collide (reference core/hnsw/graph.py:131-136)
@@ -70,7 +71,7 @@ final class HnswIndex(
 
   // metric resolved to an int once — `distance` runs per graph hop and a
   // string match would re-compare the metric name on every call
-  private val metricCode: Int = metric match {
+  private[index] val metricCode: Int = metric match {
     case "euclidean" => 0
     case "manhattan" => 1
     case "dot_product" => 2
@@ -106,11 +107,21 @@ final class HnswIndex(
     math.floor(-math.log(rng.nextDouble() + 1e-300) * ml).toInt
   }
 
-  /** Beam search within one layer (reference graph.py:88-125). Returns up to
-    * `ef` (distance, nodeIdx) pairs, unsorted.
+  /** Beam search within one layer (reference graph.py:88-125), with
+    * result-pool filtering: candidates (traversal) admit every live node,
+    * results admit only `allow`-passing ones. The frontier closes once the
+    * pool holds ef nodes AND the nearest open candidate is farther than the
+    * worst of them — with a short pool the beam keeps expanding (built-in
+    * oversampling). Under [[HnswIndex.AllowAll]] this is exactly the
+    * reference's unfiltered stop rule: until the pool first overflows no
+    * result was ever popped, so every candidate sits in the pool and
+    * `cd <= topDist`. Returns up to `ef` (distance, nodeIdx) pairs,
+    * unsorted.
     */
-  private def searchLayer(q: Array[Double], entryPoints: Seq[Int], ef: Int, layer: Int)
-    : mutable.ArrayBuffer[(Double, Int)] = {
+  private def searchLayer(
+      q: Array[Double], entryPoints: Seq[Int], ef: Int, layer: Int,
+      allow: Long => Boolean): mutable.ArrayBuffer[(Double, Int)] = {
+    val allowAll = allow eq HnswIndex.AllowAll
     val visited = new java.util.BitSet(ids.length)
     // candidates: min-heap by (dist, idx); results: max-heap, bounded to ef
     val candidates = new DistHeap(max = false)
@@ -120,7 +131,7 @@ final class HnswIndex(
         visited.set(ep)
         val d = distance(q, vecs(ep))
         candidates.add(d, ep)
-        results.add(d, ep)
+        if (!dead(ep) && (allowAll || allow(ids(ep)))) results.add(d, ep)
       }
     }
     var open = true
@@ -128,8 +139,8 @@ final class HnswIndex(
       val cd = candidates.topDist
       val c = candidates.topIdx
       candidates.pop()
-      if (results.nonEmpty && cd > results.topDist) {
-        open = false // nearest remaining candidate is worse than worst kept
+      if (results.size >= ef && cd > results.topDist) {
+        open = false // pool full and the frontier can no longer improve it
       } else {
         val layerConns = conns(c)
         if (layer < layerConns.length) {
@@ -142,8 +153,10 @@ final class HnswIndex(
               val d = distance(q, vecs(nb))
               if (results.size < ef || d < results.topDist) {
                 candidates.add(d, nb)
-                results.add(d, nb)
-                if (results.size > ef) results.pop()
+                if (allowAll || allow(ids(nb))) {
+                  results.add(d, nb)
+                  if (results.size > ef) results.pop()
+                }
               }
             }
             i += 1
@@ -179,14 +192,14 @@ final class HnswIndex(
     var beam: Seq[Int] = Seq(entry)
     var lc = levels(entry)
     while (lc > level) {
-      val best = searchLayer(vector, beam, 1, lc)
+      val best = searchLayer(vector, beam, 1, lc, HnswIndex.AllowAll)
       if (best.nonEmpty) beam = Seq(best.minBy(t => (t._1, ids(t._2)))._2)
       lc -= 1
     }
     // connect at each layer from min(level, maxLevel) down to 0
     var layer = math.min(level, levels(entry))
     while (layer >= 0) {
-      val cands = searchLayer(vector, beam, efConstruction, layer)
+      val cands = searchLayer(vector, beam, efConstruction, layer, HnswIndex.AllowAll)
       val sorted = cands.sortBy(t => (t._1, ids(t._2)))
       // simple M-nearest selection (reference graph.py:78-86), selecting up
       // to M_max0 at the base layer (graph.py:153-154 passes M_max0)
@@ -264,27 +277,8 @@ final class HnswIndex(
     }
 
   /** Top-k approximate search (reference graph.py:175-189). */
-  def search(q: Array[Double], k: Int, ef: Option[Int] = None): Seq[(Long, Double)] = {
-    // counted before validation/empty-check — the reference increments
-    // total_searches first thing under its lock (graph.py:177), so even
-    // empty-index and failing searches count there; exact parity here
-    searches += 1
-    if (entry < 0) return Seq.empty
-    require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
-    val efUsed = math.max(ef.getOrElse(efSearch), k)
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      val best = searchLayer(q, Seq(cur), 1, lc)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
-      lc -= 1
-    }
-    searchLayer(q, Seq(cur), efUsed, 0)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
-  }
+  def search(q: Array[Double], k: Int, ef: Option[Int] = None): Seq[(Long, Double)] =
+    searchFiltered(q, k, HnswIndex.AllowAll, ef)
 
   /** Predicate-filtered search (the hnswlib `filter_function` shape —
     * public knowledge, searchBaseLayerST's has_deletions/filter variant):
@@ -300,6 +294,9 @@ final class HnswIndex(
   def searchFiltered(
       q: Array[Double], k: Int, allow: Long => Boolean,
       ef: Option[Int] = None): Seq[(Long, Double)] = {
+    // counted before validation/empty-check — the reference increments
+    // total_searches first thing under its lock (graph.py:177), so even
+    // empty-index and failing searches count there; exact parity here
     searches += 1
     if (entry < 0) return Seq.empty
     require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
@@ -307,68 +304,15 @@ final class HnswIndex(
     var cur = entry
     var lc = levels(entry)
     while (lc > 0) {
-      val best = searchLayer(q, Seq(cur), 1, lc)
+      val best = searchLayer(q, Seq(cur), 1, lc, HnswIndex.AllowAll)
       if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
       lc -= 1
     }
-    searchLayerFiltered(q, Seq(cur), efUsed, 0, allow)
+    searchLayer(q, Seq(cur), efUsed, 0, allow)
       .map { case (d, idx) => (ids(idx), d) }
       .sortBy { case (id, d) => (d, id) }
       .take(k)
       .toSeq
-  }
-
-  /** searchLayer with result-pool filtering: candidates (traversal) admit
-    * every live node, results admit only `allow`-passing ones. The stop
-    * rule closes the frontier only once the pool holds ef passing nodes
-    * AND the nearest open candidate is farther than the worst of them —
-    * with a short pool the beam keeps expanding (built-in oversampling).
-    */
-  private def searchLayerFiltered(
-      q: Array[Double], entryPoints: Seq[Int], ef: Int, layer: Int,
-      allow: Long => Boolean): mutable.ArrayBuffer[(Double, Int)] = {
-    val visited = new java.util.BitSet(ids.length)
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
-    entryPoints.foreach { ep =>
-      if (!visited.get(ep)) {
-        visited.set(ep)
-        val d = distance(q, vecs(ep))
-        candidates.add(d, ep)
-        if (!dead(ep) && allow(ids(ep))) results.add(d, ep)
-      }
-    }
-    var open = true
-    while (open && candidates.nonEmpty) {
-      val cd = candidates.topDist
-      val c = candidates.topIdx
-      candidates.pop()
-      if (results.size >= ef && cd > results.topDist) {
-        open = false // pool full and the frontier can no longer improve it
-      } else {
-        val layerConns = conns(c)
-        if (layer < layerConns.length) {
-          val adj = layerConns(layer)
-          var i = 0
-          while (i < adj.length) {
-            val nb = adj(i)
-            if (!visited.get(nb) && !dead(nb)) {
-              visited.set(nb)
-              val d = distance(q, vecs(nb))
-              if (results.size < ef || d < results.topDist) {
-                candidates.add(d, nb)
-                if (allow(ids(nb))) {
-                  results.add(d, nb)
-                  if (results.size > ef) results.pop()
-                }
-              }
-            }
-            i += 1
-          }
-        }
-      }
-    }
-    results.toBuffer
   }
 
   /** Current entry-point external id, if any (persisted so a reloaded
@@ -463,21 +407,6 @@ final class HnswIndex(
       totalSearches = searches, totalInsertions = insertions,
       nextAutoId = nextId)
 
-  /** Read-only snapshot of the built topology + vectors for the
-    * SQ8-compressed serving index ([[HnswSq8Index.fromHnsw]]): copies of
-    * every structure, so the compressed index is immutable and
-    * independent of this one's later mutations.
-    */
-  private[index] def snapshotForCompression
-      : (Array[Long], Array[Array[Double]], Array[Int],
-         Array[Array[IntVec]], java.util.BitSet, Int, Int, Int) = {
-    val deadBits = new java.util.BitSet(ids.length)
-    dead.foreach(deadBits.set)
-    (ids.toArray, vecs.toArray, levels.toArray,
-      conns.toArray.map(_.map(v => IntVec.of(v.toArray))),
-      deadBits, entry, metricCode, efSearch)
-  }
-
   /** Approximate resident bytes of the FULL-PRECISION vector payload +
     * adjacency — the baseline the SQ8 serving index's memory line is
     * compared against (vectors: n·dim·8; adjacency: 4 B per edge slot).
@@ -509,6 +438,15 @@ final class HnswIndex(
 }
 
 object HnswIndex {
+  /** The allow-all predicate: `search` is `searchFiltered` under it, and
+    * the beams recognise it by reference to skip the per-node id lookup.
+    * A serializable singleton, so that identity survives shipping to
+    * executors.
+    */
+  object AllowAll extends (Long => Boolean) with Serializable {
+    def apply(id: Long): Boolean = true
+  }
+
   /** Rehydrate an index from exported nodes/edges without rebuilding —
     * the S2 load path (reference core/storage/engine.py:70-115).
     */

@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.mutable
-
 /** PQ-coded resident HNSW serving — the step past [[HnswSq8Index]] on
   * the same DiskANN axis (Subramanya et al. 2019; Jégou et al. 2011 for
   * ADC): the serving copy stores m ONE-BYTE subspace codes per vector
@@ -11,7 +9,7 @@ import scala.collection.mutable
   * shard): dist(node) = Σ_sub table(sub)(code_sub) — m lookups instead
   * of dim multiplies, so traversal gets FASTER as it gets smaller.
   * Exact ranks come back through the bounded rerank join
-  * ([[HnswSpark.searchResidentPqRerank]]), and at exhaustive ef with a
+  * ([[HnswSpark.searchResidentRerank]]), and at exhaustive ef with a
   * corpus-covering candFactor the answer equals exact kNN REGARDLESS
   * of codebook quality — which is what lets the hnsw_pq_knn face
   * hash-check while the codebooks themselves stay local float k-means.
@@ -20,46 +18,27 @@ import scala.collection.mutable
   * manhattan per subspace, negated dot per subspace; cosine encodes
   * L2-NORMALIZED vectors (at compress time) and scores −q̂·x per
   * subspace — a monotone transform of cosine distance, which is all a
-  * beam comparison needs. Adjacency is the sorted-gap LEB128 pack the
-  * SQ8 index uses.
+  * beam comparison needs. This class is only the codec (codes, books,
+  * the table and its lookup): the graph snapshot, the varint adjacency
+  * and the one beam search shared with SQ8 are [[PackedHnsw]]'s; the
+  * float [[HnswIndex]] keeps its own beam over its mutable adjacency.
   */
 final class HnswPqIndex private (
-    val dim: Int,
-    metricCode: Int,
-    ids: Array[Long],
-    levels: Array[Int],
-    conns: Array[Array[Array[Byte]]],
-    dead: java.util.BitSet,
-    entry: Int,
+    src: HnswIndex,
     codes: Array[Array[Byte]], // m bytes per node
-    books: Array[Array[Array[Double]]], // m × kSub × dsub
-    val efSearch: Int)
-  extends Serializable {
+    books: Array[Array[Array[Double]]]) // m × kSub × dsub
+  extends PackedHnsw(src) {
 
   private val m = books.length
   private val dsub = if (m == 0) 0 else dim / m
 
-  def size: Int = {
-    var n = 0
-    var i = 0
-    while (i < ids.length) { if (!dead.get(i)) n += 1; i += 1 }
-    n
-  }
+  protected type Query = Array[Array[Double]]
 
-  /** Resident bytes: id + m code bytes + level + packed adjacency +
-    * the (shard-global, node-independent) codebooks.
+  /** Per-node m code bytes plus the (shard-global, node-independent)
+    * codebooks.
     */
-  def memoryBytes: Long = {
-    var adj = 0L
-    var i = 0
-    while (i < conns.length) {
-      var l = 0
-      while (l < conns(i).length) { adj += conns(i)(l).length; l += 1 }
-      i += 1
-    }
-    val bookBytes = books.map(_.map(_.length.toLong * 8).sum).sum
-    ids.length.toLong * (8L + m.toLong + 4L) + adj + bookBytes
-  }
+  protected def payloadBytes: Long =
+    codes.length.toLong * m + books.map(_.map(_.length.toLong * 8).sum).sum
 
   /** Per-(query, shard) ADC table: table(sub)(code) = this metric's
     * additive contribution of subspace `sub` when the node's code is
@@ -67,7 +46,7 @@ final class HnswPqIndex private (
     * codebooks already quantize normalized vectors, so Σ = −q̂·x̂ —
     * monotone in cosine distance.
     */
-  private def adcTable(q0: Array[Double]): Array[Array[Double]] = {
+  protected def prepare(q0: Array[Double]): Array[Array[Double]] = {
     val q = if (metricCode == 3) {
       var s = 0.0; var i = 0
       while (i < q0.length) { s += q0(i) * q0(i); i += 1 }
@@ -95,176 +74,12 @@ final class HnswPqIndex private (
     }
   }
 
-  private def adcDist(table: Array[Array[Double]], idx: Int): Double = {
+  protected def dist(table: Array[Array[Double]], idx: Int): Double = {
     val c = codes(idx)
     var s = 0.0
     var sub = 0
     while (sub < m) { s += table(sub)(c(sub) & 0xff); sub += 1 }
     s
-  }
-
-  private def searchLayer(
-      table: Array[Array[Double]], entryPoints: Seq[Int], ef: Int,
-      layer: Int): mutable.ArrayBuffer[(Double, Int)] = {
-    val visited = new java.util.BitSet(ids.length)
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
-    entryPoints.foreach { ep =>
-      if (!visited.get(ep)) {
-        visited.set(ep)
-        val d = adcDist(table, ep)
-        candidates.add(d, ep)
-        results.add(d, ep)
-      }
-    }
-    var open = true
-    while (open && candidates.nonEmpty) {
-      val cd = candidates.topDist
-      val c = candidates.topIdx
-      candidates.pop()
-      if (results.nonEmpty && cd > results.topDist) {
-        open = false
-      } else {
-        val layerConns = conns(c)
-        if (layer < layerConns.length) {
-          val packed = layerConns(layer)
-          var pos = 0
-          var nb = -1
-          while (pos < packed.length) {
-            var shift = 0
-            var v = 0
-            var b = 0
-            do {
-              b = packed(pos) & 0xff
-              v |= (b & 0x7f) << shift
-              shift += 7
-              pos += 1
-            } while ((b & 0x80) != 0)
-            nb += v
-            if (!visited.get(nb) && !dead.get(nb)) {
-              visited.set(nb)
-              val d = adcDist(table, nb)
-              if (results.size < ef || d < results.topDist) {
-                candidates.add(d, nb)
-                results.add(d, nb)
-                if (results.size > ef) results.pop()
-              }
-            }
-          }
-        }
-      }
-    }
-    results.toBuffer
-  }
-
-  /** Top-k by ADC (HnswIndex.search semantics; returned distances are
-    * table sums — monotone rank surrogates, rerank restores exact).
-    */
-  def search(q: Array[Double], k: Int, ef: Option[Int] = None)
-      : Seq[(Long, Double)] = {
-    if (entry < 0) return Seq.empty
-    require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
-    val table = adcTable(q)
-    val efUsed = math.max(ef.getOrElse(efSearch), k)
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      val best = searchLayer(table, Seq(cur), 1, lc)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
-      lc -= 1
-    }
-    searchLayer(table, Seq(cur), efUsed, 0)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
-  }
-
-  /** Predicate-filtered search — HnswIndex.searchFiltered's semantics
-    * over the ADC-table oracle (see [[HnswSq8Index.searchFiltered]];
-    * identical stop rule, this one scores hops by table lookups).
-    */
-  def searchFiltered(
-      q: Array[Double], k: Int, allow: Long => Boolean,
-      ef: Option[Int] = None): Seq[(Long, Double)] = {
-    if (entry < 0) return Seq.empty
-    require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
-    val table = adcTable(q)
-    val efUsed = math.max(ef.getOrElse(efSearch), k)
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      val best = searchLayer(table, Seq(cur), 1, lc)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
-      lc -= 1
-    }
-    searchLayerFiltered(table, Seq(cur), efUsed, 0, allow)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
-  }
-
-  /** [[searchLayer]] with result-pool filtering: candidates admit every
-    * live node, results only `allow`-passing ones; the frontier closes
-    * only once the pool holds ef passing nodes AND the nearest open
-    * candidate can no longer improve it.
-    */
-  private def searchLayerFiltered(
-      table: Array[Array[Double]], entryPoints: Seq[Int], ef: Int,
-      layer: Int, allow: Long => Boolean)
-      : mutable.ArrayBuffer[(Double, Int)] = {
-    val visited = new java.util.BitSet(ids.length)
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
-    entryPoints.foreach { ep =>
-      if (!visited.get(ep)) {
-        visited.set(ep)
-        val d = adcDist(table, ep)
-        candidates.add(d, ep)
-        if (!dead.get(ep) && allow(ids(ep))) results.add(d, ep)
-      }
-    }
-    var open = true
-    while (open && candidates.nonEmpty) {
-      val cd = candidates.topDist
-      val c = candidates.topIdx
-      candidates.pop()
-      if (results.size >= ef && cd > results.topDist) {
-        open = false
-      } else {
-        val layerConns = conns(c)
-        if (layer < layerConns.length) {
-          val packed = layerConns(layer)
-          var pos = 0
-          var nb = -1
-          while (pos < packed.length) {
-            var shift = 0
-            var v = 0
-            var b = 0
-            do {
-              b = packed(pos) & 0xff
-              v |= (b & 0x7f) << shift
-              shift += 7
-              pos += 1
-            } while ((b & 0x80) != 0)
-            nb += v
-            if (!visited.get(nb) && !dead.get(nb)) {
-              visited.set(nb)
-              val d = adcDist(table, nb)
-              if (results.size < ef || d < results.topDist) {
-                candidates.add(d, nb)
-                if (allow(ids(nb))) {
-                  results.add(d, nb)
-                  if (results.size > ef) results.pop()
-                }
-              }
-            }
-          }
-        }
-      }
-    }
-    results.toBuffer
   }
 }
 
@@ -326,20 +141,19 @@ object HnswPqIndex {
     cents
   }
 
-  /** Quantize a built index into its PQ serving copy: snapshot the
-    * topology, L2-normalize the vectors when the metric is cosine,
-    * train m shard-local books, encode every node, pack adjacency.
+  /** Quantize a built index into its PQ serving copy: L2-normalize the vectors when the metric is cosine,
+    * train m shard-local books, encode every node (the graph snapshot
+    * and adjacency pack are [[PackedHnsw]]'s).
     */
   def fromHnsw(
       ix: HnswIndex, m: Int, kSub: Int = 256,
       iters: Int = 5): HnswPqIndex = {
     require(ix.dim % m == 0, s"m=$m must divide dim=${ix.dim}")
     require(kSub >= 1 && kSub <= 256, "codes are one byte: kSub in [1, 256]")
-    val (ids, vecs0, levels, rawConns, dead, entry, metricCode, efSearch) =
-      ix.snapshotForCompression
     val dsub = ix.dim / m
+    val vecs0 = ix.vecs.toArray
     val vecs =
-      if (metricCode == 3) vecs0.map { v =>
+      if (ix.metricCode == 3) vecs0.map { v =>
         var s = 0.0; var i = 0
         while (i < v.length) { s += v(i) * v(i); i += 1 }
         val n = math.sqrt(s)
@@ -368,8 +182,6 @@ object HnswPqIndex {
       }
       c
     }
-    val conns = rawConns.map(_.map(v => HnswSq8Index.packAdj(v.toArray)))
-    new HnswPqIndex(ix.dim, metricCode, ids, levels, conns, dead, entry,
-      codes, books, efSearch)
+    new HnswPqIndex(ix, codes, books)
   }
 }

@@ -51,14 +51,25 @@ object HnswSpark {
       params: Params,
       numPartitions: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): Array[HnswIndex] = {
+      vecCol: String = "embedding"): Array[HnswIndex] =
+    buildShards(df, params, numPartitions, idCol, vecCol).collect()
+
+  /** The per-partition construction both builds share. */
+  private def buildShards(
+      df: DataFrame,
+      params: Params,
+      numPartitions: Int,
+      idCol: String,
+      vecCol: String): RDD[HnswIndex] =
     df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .repartition(numPartitions, col(idCol))
       // insertion order drives the per-insert random level draws, and
       // Spark does NOT contractually fix within-partition row order after
       // a shuffle — sort so the shard graph is a function of the DATA,
       // not of shuffle internals (keeps rebuilds and the resident twin
-      // bit-identical)
+      // bit-identical; and an eviction-triggered partition replay
+      // rebuilds the SAME graph, closing the nondeterminism window the
+      // resident build's AND_DISK level narrows)
       .sortWithinPartitions(col(idCol))
       .rdd
       .mapPartitionsWithIndex { (pid, rows) =>
@@ -71,7 +82,14 @@ object HnswSpark {
         }
         if (idx.size > 0) Iterator.single(idx) else Iterator.empty
       }
-      .collect()
+
+  /** Persist at MEMORY_AND_DISK and materialize once (`count()`), so
+    * every later probe reuses the built artifact.
+    */
+  private def materialized[T](rdd: RDD[T]): RDD[T] = {
+    val cached = rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    cached.count()
+    cached
   }
 
   /** Executor-resident build: same per-partition construction as `build`,
@@ -87,41 +105,21 @@ object HnswSpark {
       params: Params,
       numPartitions: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): RDD[HnswIndex] = {
-    val rdd = df
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .repartition(numPartitions, col(idCol))
-      // same order-independence rationale as `build` — and the sort makes
-      // an eviction-triggered partition replay rebuild the SAME graph,
-      // closing the nondeterminism window the AND_DISK level narrows
-      .sortWithinPartitions(col(idCol))
-      .rdd
-      .mapPartitionsWithIndex { (pid, rows) =>
-        val idx = new HnswIndex(
-          params.dim, params.m, params.efConstruction, params.efSearch,
-          params.metric, seed = 42L + pid)
-        rows.foreach { r =>
-          val vec = r.getSeq[Double](1).toArray
-          idx.insert(r.getLong(0), vec)
-        }
-        if (idx.size > 0) Iterator.single(idx) else Iterator.empty
-      }
-      // AND_DISK, not MEMORY_ONLY: if a shard block were evicted it would
-      // be REBUILT by replaying its partition, and the within-partition
-      // row order after a shuffle is not deterministic — the rebuilt graph
-      // (random levels drawn per insert order) could differ from what was
-      // already served or persisted. Spilling to disk preserves the built
-      // artifact instead of re-deriving it.
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
+      vecCol: String = "embedding"): RDD[HnswIndex] =
+    // AND_DISK, not MEMORY_ONLY: if a shard block were evicted it would
+    // be REBUILT by replaying its partition, and the within-partition
+    // row order after a shuffle is not deterministic — the rebuilt graph
+    // (random levels drawn per insert order) could differ from what was
+    // already served or persisted. Spilling to disk preserves the built
+    // artifact instead of re-deriving it.
+    //
     // NOT registered with CacheTracker: a blanket releaseAll() evicting a
     // SERVING index would trigger exactly the nondeterministic shuffle
     // replay the AND_DISK level exists to prevent — subsequent probes
     // would silently serve a different graph. The index is a long-lived
     // artifact; its lifetime belongs to the caller (unpersist the
     // returned handle when done).
-    rdd
-  }
+    materialized(buildShards(df, params, numPartitions, idCol, vecCol))
 
   /** Probe executor-resident shards in place: broadcast the QUERY SET (the
     * small side), per-shard local top-k with unrounded distances, bounded
@@ -204,17 +202,6 @@ object HnswSpark {
     val bc = spark.sparkContext.broadcast(arr)
     (id: Long) => java.util.Arrays.binarySearch(bc.value, id) >= 0
   }
-
-  /** Probe all sub-indexes for one filtered query and merge top-k —
-    * the searchAll twin over HnswIndex.searchFiltered.
-    */
-  def searchAllFiltered(
-      indexes: Seq[HnswIndex], q: Array[Double], k: Int, allow: Long => Boolean,
-      ef: Option[Int] = None): Seq[(Long, Double)] =
-    indexes
-      .flatMap(_.searchFiltered(q, k, allow, ef))
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
 
   /** Incremental maintenance of a built index — the reference's online
     * insert/delete (A1/A3, reference api/rest/server.py:136-157, :188-200)
@@ -308,9 +295,8 @@ object HnswSpark {
           }
           if (base.size > 0) Iterator.single(base) else Iterator.empty
         }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    refreshed.count()
-    refreshed
+    }
+    materialized(refreshed)
   }
 
   /** Quantize built resident shards into SQ8 serving copies (one map
@@ -320,88 +306,8 @@ object HnswSpark {
     * be unpersisted afterwards: serving memory drops ~7× at dim 64
     * (memoryBytes on both sides is the soak's measured line).
     */
-  def compressResident(shards: RDD[HnswIndex]): RDD[HnswSq8Index] = {
-    val rdd = shards.map(HnswSq8Index.fromHnsw)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    rdd
-  }
-
-  /** Probe SQ8-resident shards: broadcast the bounded query set, each
-    * shard answers top-k by QUANTIZED distance, global merge = per-query
-    * k smallest by (distance, id) — the searchResident merge semantics.
-    * Output (query_id, vec_id, adc_distance); ranks are approximate,
-    * [[searchResidentSq8Rerank]] is the serving composition.
-    */
-  def searchResidentSq8(
-      spark: SparkSession,
-      shards: RDD[HnswSq8Index],
-      queries: DataFrame, // (query_id LONG, qv ARRAY<DOUBLE>), bounded
-      k: Int,
-      ef: Option[Int] = None,
-      allow: Option[Long => Boolean] = None): DataFrame = {
-    import spark.implicits._
-    val qRows = queries
-      .select(col("query_id").cast("long"), col("qv").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val bc = spark.sparkContext.broadcast(qRows)
-    val hits = shards.flatMap { shard =>
-      bc.value.iterator.flatMap { case (qid, qv) =>
-        val res = allow match {
-          case Some(f) => shard.searchFiltered(qv, k, f, ef)
-          case None => shard.search(qv, k, ef)
-        }
-        res.map { case (id, d) => (qid, id, d) }
-      }
-    }.toDF("query_id", "vec_id", "adc_distance")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_distance"), col("vec_id"))
-    hits.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k).drop("rn")
-  }
-
-  /** The DiskANN serving composition: SQ8 traversal generates
-    * k·candFactor candidates per query, the exact metric reranks ONLY
-    * those against the corpus frame (broadcast join-back — full vectors
-    * are touched for the bounded survivor set, never resident). At
-    * exhaustive ef the candidate set covers every reachable node, so
-    * the reranked answer equals exact kNN — the hash-checkable face.
-    * Output (query_id, vec_id, distance, rank).
-    */
-  def searchResidentSq8Rerank(
-      spark: SparkSession,
-      shards: RDD[HnswSq8Index],
-      emb: DataFrame,
-      queries: DataFrame, // (query_id LONG, qv ARRAY<DOUBLE>), bounded
-      k: Int,
-      candFactor: Int = 4,
-      ef: Option[Int] = None,
-      dist: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-        org.apache.spark.sql.Column = VectorFunctions.cosine,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      allow: Option[Long => Boolean] = None): DataFrame = {
-    require(k >= 1 && candFactor >= 1, "bad k/candFactor")
-    val cands = searchResidentSq8(spark, shards, queries,
-      k * candFactor, ef, allow)
-      .select(col("query_id"), col("vec_id").as(idCol))
-    val withVec = emb.join(broadcast(cands), Seq(idCol))
-    val qv = queries.select(
-      col("query_id").cast("long"), col("qv").cast("array<double>"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("distance"), col(idCol))
-    withVec
-      .join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col(idCol),
-        VectorFunctions.roundDist(dist(col(vecCol), col("qv")))
-          .as("distance"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def compressResident(shards: RDD[HnswIndex]): RDD[HnswSq8Index] =
+    materialized(shards.map(HnswSq8Index.fromHnsw))
 
   /** PQ-coded twin of [[compressResident]]: m one-byte codes per
     * vector against shard-local books (traversal = m table lookups per
@@ -410,37 +316,34 @@ object HnswSpark {
     */
   def compressResidentPq(
       shards: RDD[HnswIndex], m: Int, kSub: Int = 256,
-      iters: Int = 5): RDD[HnswPqIndex] = {
-    val rdd = shards.map(HnswPqIndex.fromHnsw(_, m, kSub, iters))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    rdd
-  }
+      iters: Int = 5): RDD[HnswPqIndex] =
+    materialized(shards.map(HnswPqIndex.fromHnsw(_, m, kSub, iters)))
 
-  /** Probe PQ-resident shards (the searchResidentSq8 merge semantics).
-    * Output (query_id, vec_id, adc_distance) — monotone rank
-    * surrogates; [[searchResidentPqRerank]] is the serving composition.
+  /** Probe compressed resident shards (SQ8 or PQ — one packed-graph
+    * beam serves both): broadcast the bounded query set, each shard
+    * answers top-k by CODEC distance, global merge = per-query k
+    * smallest by (distance, id) — the searchResident merge semantics.
+    * Output (query_id, vec_id, adc_distance); ranks are approximate,
+    * [[searchResidentRerank]] is the serving composition.
     */
-  def searchResidentPq(
+  private def probeCompressed(
       spark: SparkSession,
-      shards: RDD[HnswPqIndex],
+      shards: RDD[_ <: PackedHnsw],
       queries: DataFrame, // (query_id LONG, qv ARRAY<DOUBLE>), bounded
       k: Int,
-      ef: Option[Int] = None,
-      allow: Option[Long => Boolean] = None): DataFrame = {
+      ef: Option[Int],
+      allow: Option[Long => Boolean]): DataFrame = {
     import spark.implicits._
     val qRows = queries
       .select(col("query_id").cast("long"), col("qv").cast("array<double>"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val bc = spark.sparkContext.broadcast(qRows)
+    val allowF = allow.getOrElse(HnswIndex.AllowAll)
     val hits = shards.flatMap { shard =>
       bc.value.iterator.flatMap { case (qid, qv) =>
-        val res = allow match {
-          case Some(f) => shard.searchFiltered(qv, k, f, ef)
-          case None => shard.search(qv, k, ef)
-        }
-        res.map { case (id, d) => (qid, id, d) }
+        shard.searchFiltered(qv, k, allowF, ef)
+          .map { case (id, d) => (qid, id, d) }
       }
     }.toDF("query_id", "vec_id", "adc_distance")
     val w = org.apache.spark.sql.expressions.Window
@@ -450,15 +353,19 @@ object HnswSpark {
       .where(col("rn") <= k).drop("rn")
   }
 
-  /** PQ traversal candidates + exact rerank against the corpus frame —
-    * [[searchResidentSq8Rerank]] with the smaller/faster index. At
-    * exhaustive ef with a corpus-covering candFactor the answer equals
-    * exact kNN regardless of codebook quality (the hash-checkable
-    * face). Output (query_id, vec_id, distance, rank).
+  /** The DiskANN serving composition over SQ8 or PQ shards: codec
+    * traversal generates k·candFactor candidates per query, the exact
+    * metric reranks ONLY those against the corpus frame (broadcast
+    * join-back — full vectors are touched for the bounded survivor set,
+    * never resident). At exhaustive ef the candidate set covers every
+    * reachable node, so the reranked answer equals exact kNN — for PQ
+    * regardless of codebook quality — the hash-checkable face. `allow`
+    * filters in traversal (the searchFiltered pool semantics).
+    * Output (query_id, vec_id, distance, rank).
     */
-  def searchResidentPqRerank(
+  def searchResidentRerank(
       spark: SparkSession,
-      shards: RDD[HnswPqIndex],
+      shards: RDD[_ <: PackedHnsw],
       emb: DataFrame,
       queries: DataFrame, // (query_id LONG, qv ARRAY<DOUBLE>), bounded
       k: Int,
@@ -470,8 +377,8 @@ object HnswSpark {
       vecCol: String = "embedding",
       allow: Option[Long => Boolean] = None): DataFrame = {
     require(k >= 1 && candFactor >= 1, "bad k/candFactor")
-    val cands = searchResidentPq(spark, shards, queries, k * candFactor, ef,
-      allow)
+    val cands = probeCompressed(spark, shards, queries,
+      k * candFactor, ef, allow)
       .select(col("query_id"), col("vec_id").as(idCol))
     val withVec = emb.join(broadcast(cands), Seq(idCol))
     val qv = queries.select(

@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.mutable
-
 /** SQ8-compressed resident HNSW serving index — the DiskANN idea
   * (Subramanya et al. 2019, public) applied to the executor-resident
   * shards: the GRAPH is built once over full-precision vectors
@@ -12,64 +10,35 @@ import scala.collection.mutable
   * with asymmetric distances — full-precision query against
   * decoded-on-the-fly nodes. Callers restore exact ranks by reranking
   * the bounded candidate output against the corpus frame
-  * (HnswSpark.searchResidentSq8Rerank), exactly the ADC → exact-rerank
+  * (HnswSpark.searchResidentRerank), exactly the ADC → exact-rerank
   * composition the PQ family uses.
   *
   * Memory: n·(dim + 16 + 8) bytes of vector payload vs the float
   * index's n·dim·8 — ~7.3× smaller at dim 64 (and the ratio grows with
-  * dim) — PLUS delta-varint adjacency: each layer's neighbor list is
-  * sorted, de-duplicated, and gap-encoded as LEB128 varints (~1.5 B
-  * per edge vs the 4 B int slots), because at M=16 the adjacency would
-  * otherwise dominate the compressed copy and cap the total ratio
-  * around 2.5×. Sorting the lists changes neighbor VISIT order inside
-  * a beam step — harmless: the exhaustive-ef face visits the whole
-  * component (order-free), and operating-point recall is gated by
-  * measurement, not by order parity with the float index. Traversal
-  * semantics are otherwise IDENTICAL to HnswIndex.search (greedy
-  * descent ef=1 above layer 0, the same beam/stop rule, id
-  * tie-breaks) — only the distance oracle is quantized.
+  * dim) — plus the packed graph's delta-varint adjacency. This class is
+  * only the codec: the graph snapshot, its adjacency format and the one
+  * beam search that serves both SQ8 and PQ live in [[PackedHnsw]]; the
+  * float [[HnswIndex]] keeps its own beam because its adjacency is
+  * mutable (`IntVec` lists that inserts and deletes rewrite in place).
   */
 final class HnswSq8Index private (
-    val dim: Int,
-    metricCode: Int,
-    ids: Array[Long],
-    levels: Array[Int],
-    conns: Array[Array[Array[Byte]]], // node → layer → varint gap list
-    dead: java.util.BitSet,
-    entry: Int,
+    src: HnswIndex,
     codes: Array[Array[Byte]],
     vmins: Array[Double],
-    vmaxs: Array[Double],
-    val efSearch: Int)
-  extends Serializable {
+    vmaxs: Array[Double])
+  extends PackedHnsw(src) {
 
-  def size: Int = {
-    var n = 0
-    var i = 0
-    while (i < ids.length) { if (!dead.get(i)) n += 1; i += 1 }
-    n
-  }
+  protected type Query = Array[Double]
+  protected def prepare(q: Array[Double]): Array[Double] = q
 
-  /** Approximate resident bytes of the quantized vector payload +
-    * adjacency — the soak's memory line.
-    */
-  def memoryBytes: Long = {
-    var adj = 0L
-    var i = 0
-    while (i < conns.length) {
-      var l = 0
-      while (l < conns(i).length) { adj += conns(i)(l).length; l += 1 }
-      i += 1
-    }
-    // id + code bytes + (min, max) + level + packed adjacency bytes
-    ids.length.toLong * (8L + dim.toLong + 16L + 4L) + adj
-  }
+  // code bytes + (min, max) per node
+  protected def payloadBytes: Long = codes.length.toLong * (dim.toLong + 16L)
 
   /** Asymmetric distance: full-precision query vs the decoded node. The
     * decode is folded into the metric loop — no scratch allocation per
     * hop (this runs once per visited edge).
     */
-  private def dist(q: Array[Double], idx: Int): Double = {
+  protected def dist(q: Array[Double], idx: Int): Double = {
     val c = codes(idx)
     val lo = vmins(idx)
     val span = (vmaxs(idx) - lo) / 255.0
@@ -100,179 +69,6 @@ final class HnswSq8Index private (
         if (prod == 0.0) 1.0 else 1.0 - dot / prod
     }
   }
-
-  /** The HnswIndex.searchLayer algorithm verbatim over the quantized
-    * distance oracle.
-    */
-  private def searchLayer(
-      q: Array[Double], entryPoints: Seq[Int], ef: Int, layer: Int)
-      : mutable.ArrayBuffer[(Double, Int)] = {
-    val visited = new java.util.BitSet(ids.length)
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
-    entryPoints.foreach { ep =>
-      if (!visited.get(ep)) {
-        visited.set(ep)
-        val d = dist(q, ep)
-        candidates.add(d, ep)
-        results.add(d, ep)
-      }
-    }
-    var open = true
-    while (open && candidates.nonEmpty) {
-      val cd = candidates.topDist
-      val c = candidates.topIdx
-      candidates.pop()
-      if (results.nonEmpty && cd > results.topDist) {
-        open = false
-      } else {
-        val layerConns = conns(c)
-        if (layer < layerConns.length) {
-          // decode the gap-varint neighbor list in place — no
-          // materialized int array per hop
-          val packed = layerConns(layer)
-          var pos = 0
-          var nb = -1 // gaps are (value + 1) deltas so dup-free lists
-                      // can start at node 0
-          while (pos < packed.length) {
-            var shift = 0
-            var v = 0
-            var b = 0
-            do {
-              b = packed(pos) & 0xff
-              v |= (b & 0x7f) << shift
-              shift += 7
-              pos += 1
-            } while ((b & 0x80) != 0)
-            nb += v
-            if (!visited.get(nb) && !dead.get(nb)) {
-              visited.set(nb)
-              val d = dist(q, nb)
-              if (results.size < ef || d < results.topDist) {
-                candidates.add(d, nb)
-                results.add(d, nb)
-                if (results.size > ef) results.pop()
-              }
-            }
-          }
-        }
-      }
-    }
-    results.toBuffer
-  }
-
-  /** Top-k by quantized distance (HnswIndex.search semantics; the
-    * returned distances are ADC values — rerank restores exact ones).
-    */
-  def search(q: Array[Double], k: Int, ef: Option[Int] = None)
-      : Seq[(Long, Double)] = {
-    if (entry < 0) return Seq.empty
-    require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
-    val efUsed = math.max(ef.getOrElse(efSearch), k)
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      val best = searchLayer(q, Seq(cur), 1, lc)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
-      lc -= 1
-    }
-    searchLayer(q, Seq(cur), efUsed, 0)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
-  }
-
-  /** Predicate-filtered search — HnswIndex.searchFiltered's semantics
-    * over the quantized oracle: the beam TRAVERSES the graph
-    * unfiltered (connectivity must not depend on the predicate), only
-    * `allow`-passing ids enter the result pool, and the beam keeps
-    * expanding until the pool holds ef passing nodes or the frontier
-    * closes — self-oversampling, no caller-side ef inflation. At scale
-    * the compressed index is the one serving, so predicates must not
-    * force the float path.
-    */
-  def searchFiltered(
-      q: Array[Double], k: Int, allow: Long => Boolean,
-      ef: Option[Int] = None): Seq[(Long, Double)] = {
-    if (entry < 0) return Seq.empty
-    require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
-    val efUsed = math.max(ef.getOrElse(efSearch), k)
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      val best = searchLayer(q, Seq(cur), 1, lc)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
-      lc -= 1
-    }
-    searchLayerFiltered(q, Seq(cur), efUsed, 0, allow)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
-  }
-
-  /** [[searchLayer]] with result-pool filtering (the
-    * HnswIndex.searchLayerFiltered stop rule): candidates admit every
-    * live node, results only `allow`-passing ones; the frontier closes
-    * only once the pool holds ef passing nodes AND the nearest open
-    * candidate can no longer improve it.
-    */
-  private def searchLayerFiltered(
-      q: Array[Double], entryPoints: Seq[Int], ef: Int, layer: Int,
-      allow: Long => Boolean): mutable.ArrayBuffer[(Double, Int)] = {
-    val visited = new java.util.BitSet(ids.length)
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
-    entryPoints.foreach { ep =>
-      if (!visited.get(ep)) {
-        visited.set(ep)
-        val d = dist(q, ep)
-        candidates.add(d, ep)
-        if (!dead.get(ep) && allow(ids(ep))) results.add(d, ep)
-      }
-    }
-    var open = true
-    while (open && candidates.nonEmpty) {
-      val cd = candidates.topDist
-      val c = candidates.topIdx
-      candidates.pop()
-      if (results.size >= ef && cd > results.topDist) {
-        open = false
-      } else {
-        val layerConns = conns(c)
-        if (layer < layerConns.length) {
-          val packed = layerConns(layer)
-          var pos = 0
-          var nb = -1
-          while (pos < packed.length) {
-            var shift = 0
-            var v = 0
-            var b = 0
-            do {
-              b = packed(pos) & 0xff
-              v |= (b & 0x7f) << shift
-              shift += 7
-              pos += 1
-            } while ((b & 0x80) != 0)
-            nb += v
-            if (!visited.get(nb) && !dead.get(nb)) {
-              visited.set(nb)
-              val d = dist(q, nb)
-              if (results.size < ef || d < results.topDist) {
-                candidates.add(d, nb)
-                if (allow(ids(nb))) {
-                  results.add(d, nb)
-                  if (results.size > ef) results.pop()
-                }
-              }
-            }
-          }
-        }
-      }
-    }
-    results.toBuffer
-  }
 }
 
 object HnswSq8Index {
@@ -280,36 +76,9 @@ object HnswSq8Index {
   /** Quantize a built index into its serving copy (one pass over the
     * snapshot; the source index is untouched and independent).
     */
-  /** Sorted-distinct gap LEB128 pack of one neighbor list: gaps are
-    * (v₀ + 1, v₁ − v₀, …) so every varint is ≥ 1 and the decoder can
-    * start from −1; duplicates (possible in the source adjacency after
-    * bidirectional linking + prune churn) collapse — the visited set
-    * deduped them during traversal anyway.
-    */
-  private[index] def packAdj(src: Array[Int]): Array[Byte] = {
-    if (src.isEmpty) return Array.emptyByteArray
-    val a = src.clone()
-    java.util.Arrays.sort(a)
-    val out = new java.io.ByteArrayOutputStream(a.length * 2)
-    var prev = -1
-    var i = 0
-    while (i < a.length) {
-      if (a(i) != prev) {
-        var g = a(i) - prev
-        prev = a(i)
-        while ((g & ~0x7f) != 0) { out.write((g & 0x7f) | 0x80); g >>>= 7 }
-        out.write(g)
-      }
-      i += 1
-    }
-    out.toByteArray
-  }
-
   def fromHnsw(ix: HnswIndex): HnswSq8Index = {
-    val (ids, vecs, levels, rawConns, dead, entry, metricCode, efSearch) =
-      ix.snapshotForCompression
-    val conns = rawConns.map(_.map(v => packAdj(v.toArray)))
-    val n = ids.length
+    val vecs = ix.vecs
+    val n = vecs.length
     val codes = new Array[Array[Byte]](n)
     val vmins = new Array[Double](n)
     val vmaxs = new Array[Double](n)
@@ -335,7 +104,6 @@ object HnswSq8Index {
       codes(i) = c; vmins(i) = lo; vmaxs(i) = if (hi > lo) hi else lo
       i += 1
     }
-    new HnswSq8Index(ix.dim, metricCode, ids, levels, conns, dead, entry,
-      codes, vmins, vmaxs, efSearch)
+    new HnswSq8Index(ix, codes, vmins, vmaxs)
   }
 }

@@ -395,14 +395,6 @@ object Ivf {
       saltFactor: Int = 8,
       broadcastProbeBytesCap: Long = 64L << 20): KnnGraphRefreshResult = {
     require(saltFactor >= 1, "saltFactor must be >= 1")
-    // env-gated stage attribution for soak tuning (forces mid-plan
-    // counts, so leave unset in production runs)
-    val dbg: (String, => DataFrame) => Unit =
-      if (sys.env.contains("GRAFT_REFRESH_DEBUG")) { (label, df) =>
-        val t0 = System.nanoTime()
-        val c = df.count()
-        println(f"REFRESH-STAGE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($c rows)")
-      } else (_, _) => ()
     val normed = knnNormed(newEmb, idCol, vecCol).persist()
     graft.CacheTracker.register(normed)
     // centroid stability: both frames' first-nCentroids (id, vector)
@@ -459,7 +451,6 @@ object Ivf {
     // populate: the ranked union and the merge pass's addAssigned both
     // scan this delta-sized cache concurrently
     deltaRanked.count()
-    dbg("deltaRanked", deltaRanked)
     val ranked = base.ranked
       .join(broadcast(removedOrChanged), Seq("src_id"), "left_anti")
       .unionByName(deltaRanked)
@@ -481,8 +472,6 @@ object Ivf {
       .select(col("src_id"))
     val fullSrcs = lossySrcs.union(addedOrChanged).distinct().persist()
     graft.CacheTracker.register(fullSrcs)
-    dbg("ranked-union", ranked)
-    dbg("fullSrcs", fullSrcs)
     // the broadcast-probes join ships |fullSrcs|·nProbe rows EACH
     // carrying a dim-length src vector; near the 10%-delta ceiling that
     // is ~0.1·n·nProbe vector rows (hundreds of MB at the 500k/64-dim
@@ -498,7 +487,6 @@ object Ivf {
       if (estProbeBytes <= broadcastProbeBytesCap)
         knnEdgesBroadcastProbes(probeRanked, ranked, k)
       else knnEdges(probeRanked, ranked, k, saltFactor)
-    dbg("fullEdges", fullEdges)
     // MERGE srcs: base rows all survive (no removed/changed neighbor,
     // unchanged own vector) — only add-candidates can displace them
     val keepRanked = ranked.join(broadcast(fullSrcs), Seq("src_id"), "left_anti")
@@ -527,7 +515,6 @@ object Ivf {
         col("r.vec_id").as("nbr_id"),
         col("r.distance").as("distance"),
         (col("pos") + 1).cast("long").as("rank"))
-    dbg("merged", merged)
     // the may-have-changed set: full-recompute srcs, removed srcs
     // (their rows vanish), and merge srcs whose top-k an add-candidate
     // ACTUALLY enters. The merge test is exact, not the

@@ -353,11 +353,16 @@ object KnnGraphTables {
     // are one mutation (knnRanked's groupBy already dedups the state),
     // so the counts feeding meta.n and the 10% gate must be id counts.
     // ONE tagged collect brings both sides back; all further delta set
-    // algebra is driver arithmetic
+    // algebra is driver arithmetic. The collect is bounded by the gate:
+    // (nAdds + nRems)·10 > n holds exactly when the union reaches
+    // ⌊n/10⌋ + 1 rows, so the limit truncates only a delta the gate
+    // rejects anyway, and an oversized delta never lands on the driver
+    val gateRows = math.min(m.n / 10 + 1, Int.MaxValue.toLong).toInt
     val arRows = adds.select(col(idCol).cast("long").as("id")).distinct()
       .select(lit("a").as("__t"), col("id"))
       .unionAll(removes.select(col(idCol).cast("long").as("id")).distinct()
         .select(lit("r").as("__t"), col("id")))
+      .limit(gateRows)
       .collect()
     val addIdsA = arRows.filter(_.getString(0) == "a")
       .map(_.getLong(1)).sorted

@@ -187,14 +187,11 @@ case class HnswResidentProbeExec(
         val kept = buf.sortBy { case (id, d) => (d, id) }.take(kk)
         buf.clear(); buf ++= kept
       }
-    val allowF = allow
+    val allowF = allow.getOrElse(HnswIndex.AllowAll)
     val partial: RDD[(Int, (Long, Double))] = shards.flatMap { idx =>
       bcQ.value.iterator.flatMap { case (rowIdx, qv) =>
-        val hits = allowF match {
-          case Some(f) => idx.searchFiltered(qv, kk, f, efv)
-          case None => idx.search(qv, kk, efv)
-        }
-        hits.iterator.map { case (id, d) => (rowIdx, (id, d)) }
+        idx.searchFiltered(qv, kk, allowF, efv)
+          .iterator.map { case (id, d) => (rowIdx, (id, d)) }
       }
     }
     val merged = partial.aggregateByKey(

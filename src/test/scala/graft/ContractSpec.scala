@@ -22,7 +22,7 @@ class ContractSpec extends AnyFunSuite {
       val s = scala.io.Source.fromFile(srcFile, "UTF-8")
       try s.mkString finally s.close()
     }
-    val qi = src.indexOf("def queries"); val oi = src.indexOf("def oracleSql")
+    val qi = src.indexOf("lazy val queries"); val oi = src.indexOf("lazy val oracleSql")
     assert(qi >= 0 && oi > qi)
     val qkeys = """"([a-z0-9_]+)" -> \(\(s""".r
       .findAllMatchIn(src.substring(qi, oi)).map(_.group(1)).toSeq

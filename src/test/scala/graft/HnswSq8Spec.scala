@@ -39,7 +39,7 @@ class HnswSq8Spec extends SparkSpec {
       emb, HnswSpark.Params(dim = 64), numPartitions = 4)
     val sq8 = HnswSpark.compressResident(full)
     full.unpersist(blocking = false)
-    val got = HnswSpark.searchResidentSq8Rerank(spark, sq8, emb, queries,
+    val got = HnswSpark.searchResidentRerank(spark, sq8, emb, queries,
       k = 10, candFactor = 50, ef = Some(60000))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
@@ -97,7 +97,7 @@ class HnswSq8Spec extends SparkSpec {
       emb, HnswSpark.Params(dim = 64), numPartitions = 4)
     val pq = HnswSpark.compressResidentPq(full, m = 8, kSub = 64, iters = 4)
     full.unpersist(blocking = false)
-    val got = HnswSpark.searchResidentPqRerank(spark, pq, emb, queries,
+    val got = HnswSpark.searchResidentRerank(spark, pq, emb, queries,
       k = 10, candFactor = 50, ef = Some(60000))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
@@ -118,11 +118,11 @@ class HnswSq8Spec extends SparkSpec {
     val pq = HnswSpark.compressResidentPq(full, m = 8, kSub = 64, iters = 4)
     full.unpersist(blocking = false)
     val even = Some((id: Long) => id % 2 == 0)
-    val gotS = HnswSpark.searchResidentSq8Rerank(spark, sq8, emb, queries,
+    val gotS = HnswSpark.searchResidentRerank(spark, sq8, emb, queries,
       k = 10, candFactor = 50, ef = Some(60000), allow = even)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
-    val gotP = HnswSpark.searchResidentPqRerank(spark, pq, emb, queries,
+    val gotP = HnswSpark.searchResidentRerank(spark, pq, emb, queries,
       k = 10, candFactor = 50, ef = Some(60000), allow = even)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
@@ -154,9 +154,9 @@ class HnswSq8Spec extends SparkSpec {
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         (got & exact).size.toDouble / exact.size
       }
-      val rs = recallOf(HnswSpark.searchResidentSq8Rerank(spark, sq8, emb,
+      val rs = recallOf(HnswSpark.searchResidentRerank(spark, sq8, emb,
         queries, k = 10, candFactor = 4, ef = Some(100), allow = allow))
-      val rp = recallOf(HnswSpark.searchResidentPqRerank(spark, pq, emb,
+      val rp = recallOf(HnswSpark.searchResidentRerank(spark, pq, emb,
         queries, k = 10, candFactor = 4, ef = Some(100), allow = allow))
       assert(rs >= 0.9, s"SQ8 filtered recall at 1/$mod selectivity: $rs")
       assert(rp >= 0.9, s"PQ filtered recall at 1/$mod selectivity: $rp")
@@ -183,6 +183,38 @@ class HnswSq8Spec extends SparkSpec {
     // empty predicate -> empty result, no hang (the frontier closes)
     assert(sq8.searchFiltered(q, 5, _ => false).isEmpty)
     assert(pq.searchFiltered(q, 5, _ => false).isEmpty)
+  }
+
+  test("search equals searchFiltered under an allow-all predicate on all three index classes") {
+    // the one-beam property: unfiltered search IS the filtered beam with
+    // an allow-all predicate, through deletes, overwrites and every metric
+    for (metric <- Seq("cosine", "euclidean", "dot_product", "manhattan")) {
+      val ix = new HnswIndex(dim = 8, seed = 3L, metric = metric)
+      val rnd = new java.util.Random(11)
+      (0 until 1500).foreach { i =>
+        ix.insert(i.toLong, Array.fill(8)(rnd.nextDouble() * 2 - 1))
+        if (i % 7 == 3) ix.delete((i / 2).toLong)
+        if (i % 11 == 5) ix.insert((i / 3).toLong, Array.fill(8)(rnd.nextDouble()))
+      }
+      assert(ix.deadCount > 0)
+      val sq8 = HnswSq8Index.fromHnsw(ix)
+      val pq = graft.index.HnswPqIndex.fromHnsw(ix, m = 4, kSub = 32, iters = 3)
+      val faces: Seq[(String, (Array[Double], Int, Option[Int]) => Seq[(Long, Double)],
+          (Array[Double], Int, Long => Boolean, Option[Int]) => Seq[(Long, Double)])] = Seq(
+        ("float", ix.search, ix.searchFiltered),
+        ("sq8", sq8.search, sq8.searchFiltered),
+        ("pq", pq.search, pq.searchFiltered))
+      val qr = new java.util.Random(5)
+      for (_ <- 0 until 10) {
+        val q = Array.fill(8)(qr.nextDouble() * 2 - 1)
+        for ((name, plain, filtered) <- faces; k <- Seq(1, 10);
+             ef <- Seq(Some(5), None, Some(200))) {
+          val got = plain(q, k, ef)
+          assert(got.nonEmpty)
+          assert(got == filtered(q, k, _ => true, ef), s"$name $metric k=$k ef=$ef")
+        }
+      }
+    }
   }
 
   test("compression is a snapshot: mutating the source leaves the copy intact") {

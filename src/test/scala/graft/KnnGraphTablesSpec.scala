@@ -275,6 +275,16 @@ class KnnGraphTablesSpec extends SparkSpec {
       changedVecs(Seq(3L)), Seq.empty[Long].toDF("vec_id")).isEmpty)
     assert(KnnGraphTables.refresh(spark, dir,
       vecs(Seq.empty[Long]), (250L until 290L).toDF("vec_id")).isEmpty)
+    // the delta id collect stops at n/10 + 1 ids: far above the gate it
+    // still falls back, and at the boundary the gate stays exact —
+    // 31 ids over n = 300 is rejected, 30 (30·10 = n) refreshes
+    assert(KnnGraphTables.refresh(spark, dir, vecs(1000L until 1600L),
+      (200L until 300L).toDF("vec_id")).isEmpty)
+    assert(KnnGraphTables.refresh(spark, dir, vecs(300L until 331L),
+      Seq.empty[Long].toDF("vec_id")).isEmpty)
+    val atGate = KnnGraphTables.refresh(spark, dir, vecs(300L until 330L),
+      Seq.empty[Long].toDF("vec_id"))
+    assert(atGate.nonEmpty && atGate.get.corpusSize == 330L)
     // the fallback is a re-init on the new corpus — subsequent deltas
     // refresh against it
     val corpus2 = vecs((0L until 250L) ++ (290L until 300L))

@@ -273,7 +273,7 @@ class PlanSpec extends SparkSpec {
         emb, graft.index.HnswSpark.Params(dim = 64), numPartitions = 2))
     val queries = emb.where(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val p = physical(graft.index.HnswSpark.searchResidentSq8Rerank(
+    val p = physical(graft.index.HnswSpark.searchResidentRerank(
       spark, shards, emb, queries, k = 5, candFactor = 4, ef = Some(64)))
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 2,
       s"join-backs not broadcast:\n$p")

@@ -1054,7 +1054,7 @@ class StreamingSpec extends SparkSpec {
         .persist()
       val queriesDf = emb.where(col("vec_id") >= 450 && col("vec_id") < 455)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val served = HnswSpark.searchResidentSq8Rerank(
+      val served = HnswSpark.searchResidentRerank(
         spark, servingSq8(), folded, queriesDf, k = 10, candFactor = 50,
         ef = Some(60000))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
