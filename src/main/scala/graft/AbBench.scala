@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** In-window A/B harness: cross-window bench totals on this VM are noise
   * (seconds-long host bursts), so variant comparisons run INTERLEAVED in
   * ONE JVM — seven reps per side, A/B order alternating per rep to kill
@@ -9,38 +7,22 @@ import org.apache.spark.sql.SparkSession
   * in-window delta only (median-of-3 proved too noisy: it flipped the
   * sign of a ~20% effect run to run).
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... java ... graft.AbBench
-  * Prints one JSON line per (query, variant) with the median seconds.
+  * Usage: SPARK_GRAFT_SF_DIR=... java ... graft.AbBench <mode> [args]
+  * Each mode prints JSON lines; with no mode it prints the mode list.
   */
 object AbBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private val modes = Seq("jobs", "assign", "winnowstages", "topkbuild",
+    "lshcensus", "simhashstages", "bloom")
 
-    if (args.contains("explain")) {
-      // plan probe: does exchange reuse already dedupe the self-join
-      // sides when the prefix persist is off?
-      for (setting <- Seq("true", "false")) {
-        spark.conf.set("spark.graft.dedup.prefixPersist", setting)
-        val df = SparkEntry.queries("winnow_pairs")(spark, sfDir)
-        df.count()
-        val plan = df.queryExecution.executedPlan.toString
-        println(s"persist=$setting reused=" +
-          "ReusedExchange".r.findAllIn(plan).length +
-          " exchanges=" + "Exchange".r.findAllIn(plan).length +
-          " inmem=" + "InMemoryTableScan".r.findAllIn(plan).length)
-        CacheTracker.releaseAll()
-      }
-      spark.stop()
+  def main(args: Array[String]): Unit = {
+    if (!args.exists(modes.contains)) {
+      println(s"usage: graft.AbBench <${modes.mkString("|")}> [args]")
       return
     }
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
+
     if (args.contains("jobs")) {
       // per-query driver-round-trip census: run each named query once
       // (after one suite-level warmup) and report how many Spark jobs,
@@ -93,7 +75,7 @@ object AbBench {
         s"((abs(xxhash64(vec_id, j, $salt)) % 1000000000) + 0.5) / 1000000000.0"
       val gauss = (s1: Int, s2: Int) =>
         s"sqrt(-2.0 * ln(${u(s1)})) * cos(6.283185307179586 * ${u(s2)})"
-      val emb = spark.range(0, n, 1, cpus.toInt)
+      val emb = spark.range(0, n, 1, cpus)
         .select(col("id").as("vec_id"),
           expr(s"transform(sequence(0, ${dim - 1}), j -> ${gauss(1, 2)})")
             .as("embedding"))
@@ -245,7 +227,7 @@ object AbBench {
         s"((abs(xxhash64(vec_id, j, $salt)) % 1000000000) + 0.5) / 1000000000.0"
       val gauss = (s1: Int, s2: Int) =>
         s"sqrt(-2.0 * ln(${u(s1)})) * cos(6.283185307179586 * ${u(s2)})"
-      val emb = spark.range(0, n, 1, cpus.toInt)
+      val emb = spark.range(0, n, 1, cpus)
         .select(col("id").as("vec_id"),
           expr(s"transform(sequence(0, ${dim - 1}), j -> ${gauss(1, 2)})")
             .as("embedding"))
@@ -339,7 +321,7 @@ object AbBench {
       val rest = args.dropWhile(_ != "bloom").drop(1)
       val nBatch = rest.headOption.map(_.toLong).getOrElse(4000000L)
       val nHist = rest.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
-      val batch = spark.range(0, nBatch, 1, cpus.toInt)
+      val batch = spark.range(0, nBatch, 1, cpus)
         .select(col("id").as("doc_id"),
           when(col("id") % 100 === 0,
             concat(lit("dup "), (col("id") % 2000).cast("string")))
@@ -347,7 +329,7 @@ object AbBench {
             .as("text"))
         .persist()
       batch.foreach(_ => ())
-      val hist = spark.range(0, nHist, 1, cpus.toInt)
+      val hist = spark.range(0, nHist, 1, cpus)
         .select(operators.TextAnalysis.fingerprint(
           concat(lit("dup "), col("id").cast("string"))).as("fingerprint"))
         .persist()
@@ -414,41 +396,6 @@ object AbBench {
         println(f"""{"experiment":"bloomIncremental","variant":"$variant","n_batch":$nBatch,"n_hist":$nHist,"rows":$want,"median_sec":$med%.3f,"reps":[${v.map(x => f"$x%.3f").mkString(",")}]}""")
       }
       spark.stop()
-      return
     }
-
-    // (experiment, conf key, query names)
-    val experiments = Seq(
-      ("prefixPersist", "spark.graft.dedup.prefixPersist",
-        Seq("winnow_pairs", "fuzzy_pairs", "dedup_ngram_jaccard")))
-
-    // warmup + page cache
-    try SparkEntry.queries("knn_cosine")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    Seq(Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir))
-      .foreach(t => try t.foreach(_ => ()) catch { case _: Throwable => () })
-
-    val samples = scala.collection.mutable.Map
-      .empty[(String, String, String), Vector[Double]].withDefaultValue(Vector.empty)
-    for {
-      rep <- 0 until 7
-      (exp, confKey, queries) <- experiments
-      setting <- (if (rep % 2 == 0) Seq("true", "false") else Seq("false", "true"))
-      name <- queries
-    } {
-      spark.conf.set(confKey, setting)
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case e: Throwable => println(s"ERR $name: $e") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      CacheTracker.releaseAll()
-      samples((exp, setting, name)) = samples((exp, setting, name)) :+ dt
-      spark.conf.unset(confKey)
-    }
-    for (((exp, setting, name), v) <- samples.toSeq.sortBy(_._1)) {
-      val med = v.sorted.apply(v.length / 2)
-      println(f"""{"experiment":"$exp","setting":$setting,"query":"$name","median_sec":$med%.3f,"reps":[${v.map(x => f"$x%.3f").mkString(",")}]}""")
-    }
-    spark.stop()
   }
 }

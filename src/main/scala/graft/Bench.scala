@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Isolation mode: `--only k1,k2` runs ONLY those keys in this (fresh)
     // JVM, everything else — warmup, fixture prewarm, interleaved 3-rep
     // median, artifact format — identical to a full run. Purpose: A/B a
@@ -20,30 +18,7 @@ object Bench {
       val unknown = keys -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"--only names unknown keys: ${unknown.mkString(",")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-coalesce CACHED plans: the delta-sized pinned
-      // frames otherwise cache at the full shuffle partition count and
-      // every downstream scan (including each broadcast-exchange
-      // collect) pays one task per tiny partition — measured 1840 vs
-      // 352 tasks per graph-tables refresh at fixture scale (r18)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // the generated-class cache defaults to 100 entries; a session
-      // running 181 distinct queries × 3 interleaved reps cycles far
-      // past that, so every rep pays full Janino recompilation of every
-      // WholeStageCodegen/projection unit it already compiled two
-      // passes ago. Size the cache to the workload (not to this box:
-      // the knob is workload-shaped — any long-lived session serving
-      // many distinct queries wants it; compiled classes are small, the
-      // driver holds them either way while in use). Overridable for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(4))
     // Untimed warmup: JIT, codegen, parquet reader, and shuffle machinery
     // otherwise land on whichever query happens to run first.
     try SparkEntry.queries("knn_cosine")(spark, sfDir).count()

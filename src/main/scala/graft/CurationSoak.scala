@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Coreset, Dsir, Projection, Sketches}
@@ -36,22 +35,9 @@ import graft.operators.{Coreset, Dsir, Projection, Sketches}
 object CurationSoak {
   def main(args: Array[String]): Unit = {
     val mode = if (args.length > 0) args(0) else "all"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-coalesce CACHED plans: the delta-sized pinned
-      // frames otherwise cache at the full shuffle partition count and
-      // every downstream scan (including each broadcast-exchange
-      // collect) pays one task per tiny partition — measured 1840 vs
-      // 352 tasks per graph-tables refresh at fixture scale (r18)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val nPart = cpus.toInt
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
+    val nPart = cpus
 
     def vecs(n: Long, dim: Int) = spark.range(0, n, 1, nPart)
       .select(col("id").as("vec_id"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -51,14 +50,8 @@ object DedupSoak {
     // sweep's SIX pipelines exceed this box's scratch disk — core is
     // what the 20×-scale linearity claim actually needs.
     val scope = if (args.length > 2) args(2) else "full"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     // Size shuffle partitions to the CORPUS, not the core count — the
     // 10M lesson: at 32 partitions the ppjoin's shuffled-hash build side
     // is ~10M·prefix rows / 32 ≈ a 256 MB+ hash relation per task, and
@@ -69,7 +62,7 @@ object DedupSoak {
     // sweeps the docs-per-partition sizing (the r15 operating-rule
     // measurement: 50k / 100k / 200k at 10M).
     val docsPerPartition = if (args.length > 3) args(3).toInt else 100000
-    val shufflePartitions = math.max(cpus.toInt, n / docsPerPartition)
+    val shufflePartitions = math.max(cpus, n / docsPerPartition)
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
 
     val peakShuffle = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -87,7 +80,7 @@ object DedupSoak {
       })
 
     // deterministic distributed corpus (see scaladoc)
-    val docs = spark.range(0, n, 1, cpus.toInt)
+    val docs = spark.range(0, n, 1, cpus)
       .select(
         col("id").as("doc_id"),
         when(col("id") % 100 < 5, col("id") - col("id") % 100)

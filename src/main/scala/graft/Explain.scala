@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture utility: prints the formatted physical plan of one or more
   * SparkEntry queries. Usage: graft.Explain <sfDir> <queryName> [...]
   */
@@ -9,13 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus(4))
     names.foreach { n =>
       println(s"== $n ==")
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -26,17 +26,11 @@ import graft.operators.Multimodal
 object MediaSoak {
   def main(args: Array[String]): Unit = {
     val nPerFormat = if (args.length > 0) args(0).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
-    def ids: DataFrame = spark.range(0, nPerFormat, 1, cpus.toInt)
+    def ids: DataFrame = spark.range(0, nPerFormat, 1, cpus)
       .select(col("id").as("doc_id"))
 
     def soakFormat(

@@ -559,21 +559,8 @@ object OnlineSoak {
     val stateBuckets = if (args.length > 3) args(3).toInt else 64
     val graphTables = args.length > 4 && args(4) == "tables"
     val occWriter = args.contains("occ")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-coalesce CACHED plans: the delta-sized pinned
-      // frames otherwise cache at the full shuffle partition count and
-      // every downstream scan (including each broadcast-exchange
-      // collect) pays one task per tiny partition — measured 1840 vs
-      // 352 tasks per graph-tables refresh at fixture scale (r18)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     val stateDir = java.nio.file.Files
       .createTempDirectory("online-soak-state").toString
     val s = runLoop(spark, n, gens, perGen, stateBuckets, stateDir,

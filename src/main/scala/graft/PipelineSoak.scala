@@ -313,14 +313,8 @@ object PipelineSoak {
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "all"
     val n = if (args.length > 1) args(1).toLong else 500000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     if (mode == "ops" || mode == "all") opsSoak(spark, n)
     if (mode == "pipeline" || mode == "all") pipelineSoak(spark, n)
     if (mode == "exactann" || mode == "all") exactAnnSoak(spark, n,

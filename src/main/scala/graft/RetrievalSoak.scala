@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Hybrid, Ranking}
@@ -44,14 +43,8 @@ object RetrievalSoak {
     val tokensPerDoc = if (args.length > 3) args(3).toInt else 50
     val dim = 64
     val legK = 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
 
     val peakShuffle = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
@@ -64,7 +57,7 @@ object RetrievalSoak {
       })
 
     // deterministic distributed corpus: space-joined hashed tokens
-    val docs = spark.range(0, nDocs, 1, cpus.toInt)
+    val docs = spark.range(0, nDocs, 1, cpus)
       .select(
         col("id").as("doc_id"),
         expr(s"array_join(transform(sequence(0, ${tokensPerDoc - 1}), j -> " +
@@ -76,7 +69,7 @@ object RetrievalSoak {
       s"((abs(xxhash64($src, j, $salt)) % 1000000000) + 0.5) / 1000000000.0"
     val gauss = (src: String, s1: Int, s2: Int) =>
       s"sqrt(-2.0 * ln(${u(src, s1)})) * cos(6.283185307179586 * ${u(src, s2)})"
-    val emb = spark.range(0, nDocs, 1, cpus.toInt)
+    val emb = spark.range(0, nDocs, 1, cpus)
       .select(
         col("id").as("vec_id"),
         expr(s"transform(sequence(0, ${dim - 1}), j -> ${gauss("vec_id", 1, 2)})")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SemanticDedup
@@ -46,14 +45,8 @@ object SemanticSoak {
     val nCents = if (args.length > 2) args(2).toInt else math.sqrt(n.toDouble).toInt
     val eps = if (args.length > 3) args(3).toDouble else 0.01
     val mode = if (args.length > 4) args(4) else "det"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
 
     val peakShuffle = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
@@ -71,7 +64,7 @@ object SemanticSoak {
       s"((abs(xxhash64($src, j, $salt)) % 1000000000) + 0.5) / 1000000000.0"
     val gauss = (src: String, s1: Int, s2: Int) =>
       s"sqrt(-2.0 * ln(${u(src, s1)})) * cos(6.283185307179586 * ${u(src, s2)})"
-    val emb = spark.range(0, n, 1, cpus.toInt)
+    val emb = spark.range(0, n, 1, cpus)
       .select(
         col("id").as("vec_id"),
         when(col("id") % 100 < 5, col("id") - col("id") % 100)

@@ -48,14 +48,8 @@ object Soak {
     val shards = if (args.length > 2) args(2).toInt else 8
     val nq = if (args.length > 3) args(3).toInt else 200
     val mode = if (args.length > 4) args(4) else "all"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
     // optional ef_search sweep list for resident mode (arg 6, comma-sep);
@@ -141,7 +135,7 @@ object Soak {
     val resident = HnswSpark.buildResident(df, HnswSpark.Params(dim = dim), shards)
     val buildResidentSec = (System.nanoTime() - tr0) / 1e9
 
-    val qDf = spark.sparkContext.parallelize(queries.toSeq, math.min(cpus.toInt, nq))
+    val qDf = spark.sparkContext.parallelize(queries.toSeq, math.min(cpus, nq))
       .toDF("query_id", "qv")
     // warm-up materializes plan + broadcast, then one timed batched probe
     HnswSpark.searchResident(spark, resident, qDf, 10).count()

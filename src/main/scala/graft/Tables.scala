@@ -16,10 +16,8 @@ object Tables {
   // and file listing 40+ times per Verify/Bench session. The cached value
   // is an immutable logical plan — sharing it across queries is safe and
   // lets Spark reuse the FileIndex/schema.
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def memo(spark: SparkSession, path: String)(build: => DataFrame): DataFrame =
-    cache.getOrElseUpdate((spark, path), build)
+    GraftSession.memo(spark, path)(build)
 
   import org.apache.spark.sql.types._
 

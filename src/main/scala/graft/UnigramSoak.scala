@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, UnigramLm}
@@ -29,17 +28,11 @@ object UnigramSoak {
     val emIters = 2
     val pruneRounds = 2
     val wordsPerDoc = 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
-    val docs = spark.range(0, nWords, 1, cpus.toInt)
+    val docs = spark.range(0, nWords, 1, cpus)
       .select((col("id") / wordsPerDoc).cast("long").as("doc_id"),
         when(col("id") % 10 === 0,
           concat(lit("qz"), conv(col("id").cast("string"), 10, 16)))

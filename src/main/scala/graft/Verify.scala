@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-coalesce CACHED plans: the delta-sized pinned
-      // frames otherwise cache at the full shuffle partition count and
-      // every downstream scan (including each broadcast-exchange
-      // collect) pays one task per tiny partition — measured 1840 vs
-      // 352 tasks per graph-tables refresh at fixture scale (r18)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Round-start fixture canary (the round-9 lesson): if the driver's
     // regeneration changed any table's shape beyond what the normalizing

@@ -53,19 +53,14 @@ object CorpusStats {
     // explode below fans out to at most C(nSources, 2) dimension-sized
     // rows per shingle, and both downstream aggregates shuffle tiny
     // (source, source) / (source) keyed rows.
-    // A/B-able knob: shuffle the one corpus-sized exchange on an 8-byte
-    // xxhash64 of the shingle instead of the ~30-byte string. UNLIKE the
-    // ppjoin hash-keying (collisions only add verified-away candidates),
-    // a collision here would MERGE two shingles' source sets and perturb
-    // counts — default stays exact; the knob exists for the measured
-    // trade (r7 in-window A/B, README)
-    val hashKey = docs.sparkSession.conf
-      .getOption("spark.graft.overlap.hashShingles").exists(_.toBoolean)
+    // The shingle key stays the exact string: UNLIKE the ppjoin
+    // hash-keying (collisions only add verified-away candidates), an
+    // xxhash64 collision here would MERGE two shingles' source sets and
+    // perturb counts, and the r7 in-window A/B found no reliable win for
+    // the 8-byte key (README)
     val bySh = docs
       .select(col("source"),
         explode(VectorFunctions.wordShingles(col("text"), n)).as("shingle"))
-      .select(col("source"),
-        (if (hashKey) xxhash64(col("shingle")) else col("shingle")).as("shingle"))
       .groupBy(col("shingle"))
       .agg(sort_array(collect_set(col("source"))).as("srcs"))
       .persist() // read twice: per-source sizes + pair counts

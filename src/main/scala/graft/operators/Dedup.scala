@@ -568,18 +568,12 @@ object Dedup {
     // prefix-sized subset of the postings) but its lineage carries the
     // df aggregate + the per-doc rank window — re-running those on each
     // side of the self-join would double two shuffles
-    val prefixBase = sh
+    val prefix = graft.CacheTracker.register(sh
       .join(dfreq, Seq("__key"))
       .withColumn("__pos", row_number().over(byRarity))
       .where(col("__pos") <= prefixLen(col("n_shingles")) + lit(q - 1))
       .select(col("doc_id"), col("n_shingles"), col("__key"), col("__pos"))
-    // A/B-able knob (default measured-in): r7 in-window A/B at sf0.1,
-    // median-of-3 — see README's measured section
-    val prefix =
-      if (sets.sparkSession.conf
-          .getOption("spark.graft.dedup.prefixPersist").forall(_.toBoolean))
-        graft.CacheTracker.register(prefixBase.persist())
-      else prefixBase
+      .persist())
     val a = prefix.select(col("doc_id").as("doc_a"), col("n_shingles").as("sa"),
       col("__key"), col("__pos").as("pa"))
     val b = prefix.select(col("doc_id").as("doc_b"), col("n_shingles").as("sb"),

@@ -40,6 +40,27 @@ class ContractSpec extends AnyFunSuite {
       s"parsed ${okeys.size} oracle declarations vs Map ${SparkEntry.oracleSql.size}")
   }
 
+  test("sessions are built and session-keyed memos are held only in GraftSession") {
+    // one session policy for every entry point and one owner for what a
+    // session keeps alive: a second builder drifts from the first (the
+    // Explain/Verify/soak copies did), and a second session-keyed map
+    // needs its own eviction hook
+    val root = new java.io.File("src/main/scala")
+    assume(root.isDirectory, "source tree not visible from the test JVM")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val sessionMap = """TrieMap\s*(?:\.\s*empty\s*)?\[\s*\(?\s*SparkSession\b""".r
+    val offenders = files(root).filter(_.getName != "GraftSession.scala").flatMap { f =>
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      val src = try s.mkString finally s.close()
+      (if (src.contains("SparkSession.builder")) Seq(s"${f.getPath}: SparkSession.builder")
+       else Nil) ++
+        sessionMap.findFirstIn(src).map(m => s"${f.getPath}: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("every oracle key has a matching query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
