@@ -24,6 +24,13 @@ object CacheTracker {
     df
   }
 
+  /** The frames registered and not yet released, oldest first — what a
+    * caller inspects to see which caches an operator call left pinned.
+    */
+  private[graft] def registered(): Seq[DataFrame] = live.synchronized {
+    (0 until live.size).map(live.get)
+  }
+
   /** Same lifetime contract for broadcast variables referenced from LAZY
     * returned plans (e.g. the encode faces' piece-table broadcast): the
     * operator cannot destroy them before the caller's action, so the

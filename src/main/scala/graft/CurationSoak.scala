@@ -533,18 +533,21 @@ object CurationSoak {
       // nCents centroid ids), DELETED rows (ids ≥ 200000, no re-add),
       // appended rows (ids ≥ n)
       val third = dDelta / 3
+      val adds = vecs(third, dim)
+        .select((col("vec_id") + 100000L).as("vec_id"),
+          expr(s"transform(sequence(0, ${dim - 1}), " +
+            "j -> cast(abs(xxhash64(vec_id + 7, j)) % 2000 as double) " +
+            "/ 1000.0 - 1.0)").as("embedding"))
+        .unionByName(vecs(dDelta - 2 * third, dim)
+          .select((col("vec_id") + n).as("vec_id"), col("embedding")))
+      val removes = spark.range(200000L, 200000L + third)
+        .select(col("id").as("vec_id"))
       val newEmb = base
         .where(!(col("vec_id") >= 100000L &&
           col("vec_id") < lit(100000L + third)))
         .where(!(col("vec_id") >= 200000L &&
           col("vec_id") < lit(200000L + third)))
-        .unionByName(vecs(third, dim)
-          .select((col("vec_id") + 100000L).as("vec_id"),
-            expr(s"transform(sequence(0, ${dim - 1}), " +
-              "j -> cast(abs(xxhash64(vec_id + 7, j)) % 2000 as double) " +
-              "/ 1000.0 - 1.0)").as("embedding")))
-        .unionByName(vecs(dDelta - 2 * third, dim)
-          .select((col("vec_id") + n).as("vec_id"), col("embedding")))
+        .unionByName(adds)
         .persist()
       newEmb.count()
       // 1. base build (warms JIT for every downstream measurement too)
@@ -570,7 +573,8 @@ object CurationSoak {
       st.ranked.persist().count(); stP.edges.count()
       val t1 = System.nanoTime()
       val refreshed0 = graft.operators.Ivf
-        .knnGraphRefresh(stP, newEmb, k, nCents, nProbe)
+        .knnGraphRefresh(stP, adds, removes, k, nCents, nProbe)
+        .getOrElse(sys.error("unexpected rebuild fallback in soak")).state
       // generations pin via localCheckpoint (plan truncation — the
       // serving-loop discipline; a bare persist left gen 2 re-analyzing
       // gen 1's nested plans)
@@ -581,21 +585,20 @@ object CurationSoak {
       val refreshSec = (System.nanoTime() - t1) / 1e9
       // 4. second generation in the same JVM: the steady-state number
       //    (gen 1 pays one-time JIT + union-cache materialization)
-      val newEmb2 = newEmb
-        .where(col("vec_id") < n + dDelta / 2)
-        .unionByName(vecs(dDelta / 2, dim)
-          .select((col("vec_id") + n + dDelta).as("vec_id"), col("embedding")))
-        .persist()
-      newEmb2.count()
+      val adds2 = vecs(dDelta / 2, dim)
+        .select((col("vec_id") + n + dDelta).as("vec_id"), col("embedding"))
+      val removes2 = newEmb.where(col("vec_id") >= n + dDelta / 2)
+        .select(col("vec_id"))
       val t1b = System.nanoTime()
       val refreshed2 = graft.operators.Ivf
-        .knnGraphRefresh(refreshed, newEmb2, k, nCents, nProbe)
+        .knnGraphRefresh(refreshed, adds2, removes2, k, nCents, nProbe)
+        .getOrElse(sys.error("unexpected rebuild fallback in soak")).state
       refreshed2.edges.count()
       val refresh2Sec = (System.nanoTime() - t1b) / 1e9
       require(refreshedCount == rebuiltCount,
         s"refresh/rebuild row-count mismatch: $refreshedCount vs $rebuiltCount")
       graft.CacheTracker.releaseAll()
-      base.unpersist(); newEmb.unpersist(); newEmb2.unpersist()
+      base.unpersist(); newEmb.unpersist()
       println(s"""{"mode":"graphrefresh","n":$n,"delta":$dDelta,""" +
         s""""dim":$dim,"k":$k,"n_cents":$nCents,"n_probe":$nProbe,""" +
         s""""build_sec":${f"$buildSec%.2f"},""" +
@@ -607,10 +610,10 @@ object CurationSoak {
     }
 
     if (mode == "graphtables") {
-      // r16: the DELTA-DRIVEN table-native refresh (KnnGraphTables —
-      // manifest-pruned reads, exact-diff rewrites, append-only
-      // inverted index) vs the r15 shape (in-memory tracked refresh +
-      // changed-bucket rewrite into src-bucketed state tables) on
+      // the one refresh algorithm over its two stores: the table store
+      // (KnnGraphTables — manifest-pruned reads, exact-diff rewrites,
+      // append-only inverted index) vs the frame store (in-memory state
+      // + changed-bucket rewrite into src-bucketed state tables) on
       // IDENTICAL mixed deltas, interleaved per generation so JIT/GC
       // drift hits both paths equally. The scale claims under test:
       // path B's per-gen table READS are ∝ delta (bytes_read), its
@@ -675,7 +678,6 @@ object CurationSoak {
       edgesA.init(st0.edges.withColumn(B, idB(col("src_id"))), nBuckets)
       var memA = Ivf.KnnGraphState(
         st0.ranked.localCheckpoint(true), st0.edges.localCheckpoint(true))
-      var corpusA = base.localCheckpoint(true)
       val aSec = scala.collection.mutable.ArrayBuffer.empty[Double]
       val aStagedMb = scala.collection.mutable.ArrayBuffer.empty[Long]
       val aCachedMb = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -692,35 +694,20 @@ object CurationSoak {
       var compactions = 0
       for (g <- 1 to gens) {
         val (adds, removes) = deltaFor(g)
-        // ---- path A: in-memory tracked refresh + bucket rewrite ----
+        // ---- path A: in-memory frame refresh + bucket rewrite ----
         val tA = System.nanoTime()
-        val prevCorpus = corpusA
-        corpusA = corpusA
-          .join(adds.select(col("vec_id")), Seq("vec_id"), "left_anti")
-          .join(removes, Seq("vec_id"), "left_anti")
-          .unionByName(adds)
-          .localCheckpoint(true)
-        prevCorpus.unpersist(false)
-        val rr = Ivf.knnGraphRefreshTracked(memA, corpusA, k, nCents, nProbe)
-        var aStaged = 0L
-        rr.changedSrcs match {
-          case Some(cs) =>
-            val affSb = cs.select(idB(col("src_id")).as("bk"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            val sr = rankedA.stage(rr.state.ranked
-              .withColumn(B, idB(col("src_id")))
-              .where(col(B).isin(affSb: _*)), math.max(1, affSb.size))
-            val se = edgesA.stage(rr.state.edges
-              .withColumn(B, idB(col("src_id")))
-              .where(col(B).isin(affSb: _*)), math.max(1, affSb.size))
-            aStaged = sr.bytes + se.bytes
-            rankedA.commit(sr, affSb); edgesA.commit(se, affSb)
-          case None =>
-            rankedA.init(rr.state.ranked
-              .withColumn(B, idB(col("src_id"))), nBuckets)
-            edgesA.init(rr.state.edges
-              .withColumn(B, idB(col("src_id"))), nBuckets)
-        }
+        val rr = Ivf.knnGraphRefresh(memA, adds, removes, k, nCents, nProbe)
+          .getOrElse(sys.error("unexpected rebuild fallback in soak"))
+        val affSb = rr.changedSrcs.map(StateTable.idBucketOf(_, nBuckets))
+          .distinct.sorted
+        val sr = rankedA.stage(rr.state.ranked
+          .withColumn(B, idB(col("src_id")))
+          .where(col(B).isin(affSb: _*)), math.max(1, affSb.size))
+        val se = edgesA.stage(rr.state.edges
+          .withColumn(B, idB(col("src_id")))
+          .where(col(B).isin(affSb: _*)), math.max(1, affSb.size))
+        val aStaged = sr.bytes + se.bytes
+        rankedA.commit(sr, affSb); edgesA.commit(se, affSb)
         val nextMem = Ivf.KnnGraphState(
           rr.state.ranked.localCheckpoint(true),
           rr.state.edges.localCheckpoint(true))

@@ -26,8 +26,8 @@ import graft.sources.StateTable
   * touches), and rewritten via stage-then-commit partition replace.
   * Executor memory holds only the mutation-sized delta frames; cached
   * storage between generations is ZERO (the soak measures it). Within
-  * a generation the graph refresh still persists its working set (the
-  * normalized corpus scan) — a spillable cache, not state.
+  * a generation the in-memory graph refresh still persists its working
+  * set (the base ranked/edges scans) — a spillable cache, not state.
   *
   * The parts are individually parity-gated (StreamingSpec, the
   * knn_graph_refreshed oracle); the COMPOSITION is where state leaks
@@ -217,7 +217,7 @@ object OnlineSoak {
     val edgesT = new StateTable(spark, s"$stateDir/edges")
     // graphTables=true routes the graph artifact through the r16
     // delta-driven KnnGraphTables (its own 7 sub-tables under /graph)
-    // instead of the in-memory tracked refresh + bucket rewrite
+    // instead of the in-memory frame refresh + changed-bucket rewrite
     def stateDiskBytes(): Long =
       Seq(visibleT, curatedT, docmapT, codesT).map(_.diskBytes()).sum +
         (if (graphTables)
@@ -346,10 +346,10 @@ object OnlineSoak {
         val sd = docmapT.stage(stageDoc, touchedDb.size)
         var genRewrites = 0
         var genStaged = sv.bytes + sc.bytes + sk.bytes + sd.bytes
+        // both graph paths take the delta DIRECTLY (the loop already
+        // knows the curated adds and the invalidated ids) — no
+        // corpus-sized frame is diffed for the graph
         if (graphTables) {
-          // the r16 path: delta expressed DIRECTLY (the loop already
-          // knows the curated adds and the invalidated ids) — no
-          // corpus-sized frame is built, read, or diffed for the graph
           graft.operators.KnnGraphTables.refresh(
             spark, s"$stateDir/graph",
             adds = curatedAdd
@@ -372,14 +372,14 @@ object OnlineSoak {
               genStaged += graphTabs.map(_.diskBytes()).sum
               genRewrites += graphTabs.map(_.liveFileCount().toInt).sum
           }
-        } else Ivf.knnGraphRefreshTracked(
+        } else Ivf.knnGraphRefresh(
           Ivf.KnnGraphState(rankedT.read().drop(B), edgesT.read().drop(B)),
-          newEmb, k, nCents, nProbe) match {
-          case rr => rr.changedSrcs match {
-          case Some(cs) =>
-            val csP = tracked(cs)
-            val affSb = csP.select(idB(col("src_id")).as("sbk"))
-              .distinct().collect().map(_.getInt(0)).toSeq
+          adds = curatedAdd.select(col("doc_id").as("vec_id"), col("embedding")),
+          removes = removedIds, k = k, nCentroids = nCents, nProbe = nProbe
+        ) match {
+          case Some(rr) =>
+            val affSb = rr.changedSrcs.map(StateTable.idBucketOf(_, sb))
+              .distinct.sorted
             val sr = rankedT.stage(rr.state.ranked
               .withColumn(B, idB(col("src_id")))
               .where(col(B).isin(affSb: _*)), affSb.size)
@@ -392,12 +392,11 @@ object OnlineSoak {
             // rebuild fallback: the rebuilt plan reads only the curated
             // table (not ranked/edges), so a full rewrite here — before
             // the curated commit below — is consistent
-            rankedT.init(rr.state.ranked
-              .withColumn(B, idB(col("src_id"))), sb)
-            edgesT.init(rr.state.edges
-              .withColumn(B, idB(col("src_id"))), sb)
+            val g = Ivf.knnGraphBuild(newEmb, k, nCents, nProbe)
+            rankedT.init(g.ranked.withColumn(B, idB(col("src_id"))), sb)
+            edgesT.init(g.edges.withColumn(B, idB(col("src_id"))), sb)
             genRewrites += 2 * sb
-        } }
+        }
         genRewrites += visibleT.commit(sv, affFpB) +
           curatedT.commit(sc, affFpB) + codesT.commit(sk, affVb) +
           docmapT.commit(sd, touchedDb)

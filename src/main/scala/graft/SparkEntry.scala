@@ -1096,16 +1096,20 @@ object SparkEntry {
       knnGraphFor(s, d).orderBy(col("src_id"), col("rank"))),
     // incremental-refresh proof in the contract (r12, the
     // hnsw_knn_refreshed pattern): build on the corpus MINUS a held-out
-    // slice (never the 16 centroid ids), refresh with the full corpus —
-    // the refreshed edges must hash-match the SAME from-scratch oracle
-    // SQL as knn_graph, so the merge/full-recompute split is gated by
-    // the driver, not just the parity spec
+    // slice (never the 16 centroid ids), refresh with the slice as the
+    // adds — the refreshed edges must hash-match the SAME from-scratch
+    // oracle SQL as knn_graph, so the merge/full-recompute split is
+    // gated by the oracle hash check, not just the parity spec
     "knn_graph_refreshed" -> ((s, d) => {
       val full = Tables.embeddings(s, d)
       val st = Ivf.knnGraphBuild(full.where(!heldSlice),
         k = 5, nCentroids = 16, nProbe = 4)
-      Ivf.knnGraphRefresh(st, full, k = 5, nCentroids = 16, nProbe = 4)
-        .edges.orderBy(col("src_id"), col("rank"))
+      Ivf.knnGraphRefresh(st,
+        adds = full.where(heldSlice).select(col("vec_id"), col("embedding")),
+        removes = full.select(col("vec_id")).limit(0),
+        k = 5, nCentroids = 16, nProbe = 4)
+        .getOrElse(sys.error("held-slice delta must refresh, not rebuild"))
+        .state.edges.orderBy(col("src_id"), col("rank"))
     }),
     // the SAME refresh driven through the bucketed state tables (r16):
     // init on the corpus minus the held slice, one delta-driven

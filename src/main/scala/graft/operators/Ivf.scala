@@ -183,16 +183,15 @@ object Ivf {
     */
   case class KnnGraphState(ranked: DataFrame, edges: DataFrame)
 
-  /** [[knnGraphRefreshTracked]]'s result: the refreshed state plus the
-    * srcs whose ranked/edge rows MAY differ from the base state (a
-    * superset — every actually-changed src is in it; a listed src may
-    * be unchanged). `None` means the refresh fell back to a full
-    * rebuild, so every src may have changed. A storage-backed caller
-    * (the composed online loop's keeper tables) uses it to rewrite
-    * only the state buckets the generation touched.
+  /** [[knnGraphRefresh]]'s result: the refreshed state plus the srcs
+    * whose ranked or edge rows MAY differ from the base state (a
+    * delta-sized superset — every actually-changed src is in it, and a
+    * listed src is a delta id, a src whose rows were recomputed, or a
+    * merge src an add entered). A storage-backed caller uses it to
+    * rewrite only the state buckets the generation touched.
     */
   final case class KnnGraphRefreshResult(
-      state: KnnGraphState, changedSrcs: Option[DataFrame])
+      state: KnnGraphState, changedSrcs: Seq[Long])
 
   private[operators] def knnNormed(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(
@@ -255,24 +254,13 @@ object Ivf {
         (col("pos") + 1).cast("long").as("rank"))
   }
 
-  // the same candidate join with the PROBE side broadcast — the refresh
-  // path's shape, where the srcs being recomputed are ~k·|delta| while
-  // the assign side is the whole (persisted) corpus: broadcasting the
-  // small side makes the join map-side over the assign scan instead of
-  // re-shuffling n·saltFactor assignment rows, and no salt is needed
-  // because there is no shuffle to skew
-  private def knnEdgesBroadcastProbes(
-      probeRanked: DataFrame, assignRanked: DataFrame, k: Int): DataFrame =
-    knnEdgesFromAssigned(probeRanked, assignRanked.select(
-      element_at(col("cells.vec_id"), 1).as("cent_id"),
-      col("src_id").as("nbr_id"), col("src_v").as("nbr_v")), k)
-
-  // the broadcast-probes candidate join with the ASSIGNED side passed
-  // explicitly — the table-backed refresh hands a bucket-pruned
-  // candidate frame (only the probed cells' members) instead of the
-  // whole corpus; the result is identical because candidates outside
-  // the probed cells cannot join. broadcastProbes=false takes a plain
-  // equi-join for probe sets past the broadcast cap (AQE handles skew)
+  // the refresh's candidate join: the srcs being recomputed (~k·|delta|)
+  // are the broadcast PROBE side, and the ASSIGNED side is the cell
+  // members the store hands over (only the probed cells' members — the
+  // result is identical because candidates outside the probed cells
+  // cannot join), so the join is map-side over the members scan and
+  // needs no salt. broadcastProbes=false takes a plain equi-join for
+  // probe sets past the broadcast cap (AQE handles skew)
   private[operators] def knnEdgesFromAssigned(
       probeRanked: DataFrame, assigned: DataFrame, k: Int,
       broadcastProbes: Boolean = true): DataFrame = {
@@ -309,6 +297,8 @@ object Ivf {
       vecCol: String = "embedding",
       saltFactor: Int = 8): KnnGraphState = {
     require(saltFactor >= 1, "saltFactor must be >= 1")
+    require(k >= 1 && nCentroids >= 1 && nProbe >= 1,
+      "k, nCentroids and nProbe must be >= 1")
     val normed = knnNormed(emb, idCol, vecCol)
     val ranked = knnRanked(normed, knnCents(normed, idCol, nCentroids),
       nProbe, idCol).persist()
@@ -320,236 +310,41 @@ object Ivf {
     KnnGraphState(ranked, knnEdges(ranked, ranked, k, saltFactor))
   }
 
-  /** INCREMENTAL kNN-graph refresh — the `refreshResident` discipline
-    * applied to the graph artifact (the last full-rebuild artifact in
-    * the incremental family: dedup, decontamination, and the serving
-    * index already refresh). Given the prior build's [[KnnGraphState]]
-    * and the NEW corpus, the refresh splits srcs three ways:
+  /** INCREMENTAL kNN-graph refresh of an in-memory [[KnnGraphState]]
+    * — the `refreshResident` discipline applied to the graph artifact.
+    * Runs [[KnnGraphRefresh]] (the one refresh algorithm, shared with
+    * the bucketed [[KnnGraphTables]]) over a frame store: `adds` are
+    * (idCol, vecCol) rows entering the corpus, changed vectors included
+    * (an add of an existing id replaces it); `removes` are the idCol
+    * values leaving. Result ≡ `knnGraph` on the new corpus, row for
+    * row. None means the delta demands a rebuild — it touches centroid
+    * membership or exceeds 10% of the corpus — which the caller runs
+    * with [[knnGraphBuild]] on the new corpus. An empty delta returns
+    * the base state itself.
     *
-    *  - FULL recompute (the cell candidate join, as in the build) only
-    *    for (a) the delta's own added/changed rows — their vector
-    *    changed, every distance with it — and (b) srcs whose BASE
-    *    top-k contains a removed/changed neighbor: their k-th slot
-    *    must be refilled from the full candidate set (the base list
-    *    no longer bounds it). That set is ≈ Σ in-degree of the delta
-    *    (~k·|delta|), not n.
-    *  - MERGE for everyone else: the base top-k remains a valid bound
-    *    for every surviving old candidate (anything it beat is still
-    *    beaten), so only the delta's ADDED candidates can enter —
-    *    union base edge rows with distances to add-candidates in the
-    *    src's probed cells (a broadcast of the |delta|-row assignment
-    *    frame) and re-cut the bounded top-k.
-    *  - DROP for removed srcs.
-    *
-    * Result ≡ `knnGraph(newEmb, …)` row for row (parity spec-gated) —
-    * refresh is a cost optimization, never a semantics change. The
-    * delta itself is found with the [[Versioning.snapshotDiff]] shape:
-    * a full-outer id join carrying (id, md5-of-NORMALIZED-vector —
-    * rescaling a vector never moves its cosine edges and is correctly
-    * ignored), never the vectors.
-    *
-    * Fallbacks to a full rebuild (still parity-exact): the delta
-    * perturbs centroid MEMBERSHIP (first nCentroids ids, a bounded
-    * driver check — every cell boundary would move), or the delta
-    * exceeds 10% of the corpus (the merge machinery would outweigh the
-    * build it saves, and the add-assignment broadcast its size bound).
-    *
-    * Scale shape: the diff join shuffles (id, 16-byte hash); the
-    * ranked pass runs over |delta| rows; the merge pass touches
-    * n·k base edge rows + n·nProbe·|delta|/nCentroids add pairs
-    * (vs the build's n·nProbe·(n/nCentroids) candidate pairs); the
-    * full-recompute join's probe side is ~k·|delta| srcs. Cost is
-    * ∝ |delta|·(n/nCentroids) work overall — sublinear in n for a
-    * bounded delta, and the 500k/5k soak measures the ratio.
+    * Scale shape: the delta's ranked pass runs over |delta| rows; the
+    * full recompute probes ~k·|delta| srcs against only their probed
+    * cells' members; the merge pass joins the srcs probing the adds'
+    * cells with the |delta|-row add assignments and re-cuts only the
+    * srcs an add enters. Over frames the reverse-neighbour and rank-k
+    * lookups still scan the n·k base edge rows once each — the read
+    * floor the table store removes.
     */
   def knnGraphRefresh(
       base: KnnGraphState,
-      newEmb: DataFrame,
+      adds: DataFrame,
+      removes: DataFrame,
       k: Int,
       nCentroids: Int,
       nProbe: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      saltFactor: Int = 8,
-      broadcastProbeBytesCap: Long = 64L << 20): KnnGraphState =
-    knnGraphRefreshTracked(base, newEmb, k, nCentroids, nProbe, idCol,
-      vecCol, saltFactor, broadcastProbeBytesCap).state
-
-  /** [[knnGraphRefresh]] that also REPORTS which srcs it may have
-    * touched (see [[KnnGraphRefreshResult]]). The superset is exact by
-    * construction of the refresh's three-way split: ranked rows change
-    * only for the delta's ids; edge rows change only for (a) the
-    * FULL-recompute srcs, (b) a merge src that actually saw an
-    * add-candidate pair (everyone else's top-k re-cut of its own base
-    * rows is the identity), and (c) removed srcs, whose rows vanish.
-    * The state frames themselves are identical to [[knnGraphRefresh]]'s.
-    */
-  def knnGraphRefreshTracked(
-      base: KnnGraphState,
-      newEmb: DataFrame,
-      k: Int,
-      nCentroids: Int,
-      nProbe: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      saltFactor: Int = 8,
-      broadcastProbeBytesCap: Long = 64L << 20): KnnGraphRefreshResult = {
-    require(saltFactor >= 1, "saltFactor must be >= 1")
-    val normed = knnNormed(newEmb, idCol, vecCol).persist()
-    graft.CacheTracker.register(normed)
-    // centroid stability: both frames' first-nCentroids (id, vector)
-    // lists, driver-compared — bounded at nCentroids rows by definition
-    val oldC = base.ranked.orderBy(col("src_id")).limit(nCentroids)
-      .select(col("src_id"), col("src_v")).collect()
-    val newC = normed.orderBy(col(idCol)).limit(nCentroids)
-      .select(col(idCol), col("nv")).collect()
-    val centsStable = oldC.length == newC.length &&
-      oldC.zip(newC).forall { case (a, b) =>
-        a.getLong(0) == b.getLong(0) &&
-          a.getSeq[Double](1) == b.getSeq[Double](1)
-      }
-    if (!centsStable)
-      return KnnGraphRefreshResult(
-        knnGraphBuild(newEmb, k, nCentroids, nProbe, idCol, vecCol,
-          saltFactor), None)
-    // the struct field is ALIASED to a fixed name: to_json embeds field
-    // names, so md5(to_json(struct(src_v))) vs …(struct(nv)) would
-    // mismatch on EVERY row and silently route refresh to the >10%
-    // rebuild fallback (the empty-delta identity spec pins this)
-    val fp = (c: Column) => md5(to_json(struct(c.as("v"))))
-    val delta = base.ranked
-      .select(col("src_id"), fp(col("src_v")).as("fp_old"))
-      .join(normed.select(col(idCol).as("src_id"), fp(col("nv")).as("fp_new")),
-        Seq("src_id"), "full_outer")
-      .where(col("fp_old").isNull || col("fp_new").isNull ||
-        col("fp_old") =!= col("fp_new"))
-      .select(col("src_id"),
-        col("fp_old").isNull.as("is_added"),
-        col("fp_new").isNull.as("is_removed"))
-      .persist()
-    graft.CacheTracker.register(delta)
-    val deltaCount = delta.count()
-    if (deltaCount == 0)
-      return KnnGraphRefreshResult(base, Some(delta.select(col("src_id"))))
-    if (deltaCount * 10L > base.ranked.count())
-      return KnnGraphRefreshResult(
-        knnGraphBuild(newEmb, k, nCentroids, nProbe, idCol, vecCol,
-          saltFactor), None)
-    // the delta-derived id frames are all ≤ ~k·|delta| rows of longs —
-    // every join against them is explicitly broadcast so no corpus-
-    // sized frame ever shuffles in the refresh
-    val removedOrChanged = delta.where(!col("is_added")).select(col("src_id"))
-    val addedOrChanged = delta.where(!col("is_removed")).select(col("src_id"))
-    // ranked entries recomputed for |delta| rows only, against the
-    // SAME (stability-checked) centroids
-    val cents = knnCents(normed, idCol, nCentroids)
-    val deltaRanked = knnRanked(
-      normed.join(broadcast(addedOrChanged.withColumnRenamed("src_id", idCol)),
-        Seq(idCol), "left_semi"),
-      cents, nProbe, idCol).persist()
-    graft.CacheTracker.register(deltaRanked)
-    // populate: the ranked union and the merge pass's addAssigned both
-    // scan this delta-sized cache concurrently
-    deltaRanked.count()
-    val ranked = base.ranked
-      .join(broadcast(removedOrChanged), Seq("src_id"), "left_anti")
-      .unionByName(deltaRanked)
-      .persist()
-    graft.CacheTracker.register(ranked)
-    // base.edges is consumed by THREE refresh subtrees (this lossy
-    // scan, the merge base pairs, the k-th-row bound) and the build
-    // hands it over lazily — persist a refresh-local alias so the
-    // candidate join + top-k behind it runs once, not per consumer
-    // (populated by the bounded fullSrcs count below, before the
-    // remaining consumers execute)
-    val baseEdges = base.edges.persist()
-    graft.CacheTracker.register(baseEdges)
-    // FULL-recompute srcs: delta-new rows + every src whose base top-k
-    // held a removed/changed neighbor (the in-degree of the delta)
-    val lossySrcs = baseEdges
-      .join(broadcast(removedOrChanged.withColumnRenamed("src_id", "nbr_id")),
-        Seq("nbr_id"), "left_semi")
-      .select(col("src_id"))
-    val fullSrcs = lossySrcs.union(addedOrChanged).distinct().persist()
-    graft.CacheTracker.register(fullSrcs)
-    // the broadcast-probes join ships |fullSrcs|·nProbe rows EACH
-    // carrying a dim-length src vector; near the 10%-delta ceiling that
-    // is ~0.1·n·nProbe vector rows (hundreds of MB at the 500k/64-dim
-    // soak shape) — above the cap, take the salted shuffle join instead
-    // of risking autoBroadcastJoinThreshold / driver-OOM failures
-    // (results identical either way; the cap=0 parity spec pins it)
-    val probeRanked =
-      ranked.join(broadcast(fullSrcs), Seq("src_id"), "left_semi")
-    val dim = newC.headOption.map(_.getSeq[Double](1).length).getOrElse(0)
-    val estProbeBytes =
-      fullSrcs.count() * nProbe.toLong * (dim.toLong * 8L + 48L)
-    val fullEdges =
-      if (estProbeBytes <= broadcastProbeBytesCap)
-        knnEdgesBroadcastProbes(probeRanked, ranked, k)
-      else knnEdges(probeRanked, ranked, k, saltFactor)
-    // MERGE srcs: base rows all survive (no removed/changed neighbor,
-    // unchanged own vector) — only add-candidates can displace them
-    val keepRanked = ranked.join(broadcast(fullSrcs), Seq("src_id"), "left_anti")
-    val addAssigned = deltaRanked.select(
-      element_at(col("cells.vec_id"), 1).as("cent_id"),
-      col("src_id").as("nbr_id"), col("src_v").as("nbr_v"))
-    val addPairs = keepRanked
-      .select(col("src_id"), col("src_v"),
-        explode(col("cells.vec_id")).as("cent_id"))
-      .join(broadcast(addAssigned), Seq("cent_id"))
-      .where(col("nbr_id") =!= col("src_id"))
-      .select(col("src_id"), col("nbr_id"),
-        VectorFunctions.roundDist(
-          lit(1.0) - VectorFunctions.dot(col("src_v"), col("nbr_v")))
-          .as("distance"))
-    val basePairs = baseEdges
-      .join(broadcast(fullSrcs.union(removedOrChanged).distinct()),
-        Seq("src_id"), "left_anti")
-      .select(col("src_id"), col("nbr_id"), col("distance"))
-    val merged = basePairs.unionByName(addPairs)
-      .groupBy(col("src_id"))
-      .agg(VectorFunctions.topK(col("distance"), col("nbr_id"), k).as("topk"))
-      .select(col("src_id"), posexplode(col("topk")).as(Seq("pos", "r")))
-      .select(
-        col("src_id"),
-        col("r.vec_id").as("nbr_id"),
-        col("r.distance").as("distance"),
-        (col("pos") + 1).cast("long").as("rank"))
-    // the may-have-changed set: full-recompute srcs, removed srcs
-    // (their rows vanish), and merge srcs whose top-k an add-candidate
-    // ACTUALLY enters. The merge test is exact, not the
-    // probe-neighborhood superset (r15): for a merge src, base rows
-    // and add-candidates have DISJOINT neighbors (added nbrs did not
-    // exist at base build; changed/removed nbrs route the src to
-    // fullSrcs), so an add-candidate enters the re-cut iff the pool is
-    // short or its (distance, nbr_id) beats the src's worst base pair
-    // under the cut's lexicographic order — one aggregate over the
-    // base edge rows + a join against the mutation-sized addPairs,
-    // keeping the changed-src frame (and the graph buckets a
-    // storage-backed caller rewrites) delta-proportional
-    // the worst base pair needs NO aggregate: edge rows carry rank in
-    // (distance, nbr_id) order, so the k-th pair IS the rank-k row and
-    // a src with no rank-k row has a short pool (any add enters). The
-    // filter is map-side over base edges — r15 aggregated the same
-    // n·k rows into a per-src max, a shuffle this replaces. Srcs in
-    // fullSrcs/removed can't match addPairs (addPairs srcs come from
-    // keepRanked), so their rank-k rows join to nothing — no anti-join
-    // needed.
-    val baseKth = baseEdges
-      .where(col("rank") === k)
-      .select(col("src_id"),
-        struct(col("distance"), col("nbr_id")).as("kth"))
-    val changedMerge = addPairs
-      .join(baseKth, Seq("src_id"), "left")
-      .where(col("kth").isNull ||
-        struct(col("distance"), col("nbr_id")) < col("kth"))
-      .select(col("src_id")).distinct()
-    val changed = fullSrcs
-      .unionByName(removedOrChanged)
-      .unionByName(changedMerge)
-      .distinct()
-    KnnGraphRefreshResult(
-      KnnGraphState(ranked, merged.unionByName(fullEdges)), Some(changed))
+      broadcastProbeBytesCap: Long = 64L << 20): Option[KnnGraphRefreshResult] = {
+    require(k >= 1 && nCentroids >= 1 && nProbe >= 1,
+      "k, nCentroids and nProbe must be >= 1")
+    KnnGraphRefresh.run(
+      new KnnGraphRefresh.FrameStore(base, k, nCentroids, nProbe),
+      adds, removes, idCol, vecCol, broadcastProbeBytesCap)
   }
 
   /** ANN-graph diagnostics over [[knnGraph]] — the standard health checks

@@ -159,9 +159,19 @@ final class StateTable(
     Manifest(gen, schema, live.result(), removed.result())
   }
 
-  /** The current manifest, or None for an uninitialized table. */
-  private def latest(): Option[Manifest] =
-    listManifests().lastOption.map { case (_, p) => readManifest(p) }
+  /** The current manifest, or None for an uninitialized table. The
+    * listed latest can vanish before it is read — concurrent commits
+    * published past it and GC dropped it — so then list again.
+    */
+  private def latest(): Option[Manifest] = {
+    def attempt(tries: Int): Option[Manifest] =
+      try listManifests().lastOption.map { case (_, p) => readManifest(p) }
+      catch {
+        case _: java.io.FileNotFoundException if tries < MaxCommitRetries =>
+          attempt(tries + 1)
+      }
+    attempt(1)
+  }
 
   private def requireLatest(): Manifest = latest().getOrElse(
     sys.error(s"state table at $path has no manifest — init() it first"))
@@ -233,9 +243,12 @@ final class StateTable(
     // g > P, so removed-lists past the pin are never processed and
     // the pinned snapshot stays physically intact.
     prior.foreach { case (g, p) =>
+      // a concurrent committer's GC may have dropped p already — only
+      // after deleting its removed files, in this same loop
       if (g <= m.gen - (retention - 1) && (protectGen < 0 || g <= protectGen))
-        readManifest(p).removed.foreach(rel =>
+        try readManifest(p).removed.foreach(rel =>
           fs.delete(new Path(root, rel), false))
+        catch { case _: java.io.FileNotFoundException => () }
       if (g <= m.gen - retention && g != protectGen)
         fs.delete(p, false)
     }
@@ -730,4 +743,8 @@ object StateTable {
   /** Bucket of a long id column. */
   def idBucket(id: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(id.cast("long"), lit(nBuckets.toLong)).cast("int")
+
+  /** [[idBucket]] of one id, on the driver. */
+  def idBucketOf(id: Long, nBuckets: Int): Int =
+    (((id % nBuckets) + nBuckets) % nBuckets).toInt
 }

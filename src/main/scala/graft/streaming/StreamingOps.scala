@@ -145,15 +145,16 @@ object StreamingOps {
   /** The GRAPH-artifact twin of [[streamingIndexRefresh]] — ingest
     * without rebuild for the kNN graph that five analytics keys share:
     * a stream of corpus mutations (op ∈ add|delete, vec_id, vec; an
-    * `add` for an existing id replaces it) folds into the current
-    * corpus once per micro-batch, and
-    * [[graft.operators.Ivf.knnGraphRefresh]] advances the graph state
-    * — merge-path for untouched srcs, full recompute only where the
-    * delta's in-degree lands (rebuild-parity is spec- AND
-    * oracle-gated). Each generation's corpus is localCheckpoint-ed
-    * (the micro-batch source is only valid inside its batch — lineage
-    * must not reach back into it) and the previous generation's frames
-    * unpersist AFTER the swap, the refreshResident discipline.
+    * `add` for an existing id replaces it) is handed to
+    * [[graft.operators.Ivf.knnGraphRefresh]] once per micro-batch as
+    * its (adds, deletes) — merge-path for untouched srcs, full
+    * recompute only where the delta's in-degree lands (rebuild-parity
+    * is spec- AND oracle-gated). The folded corpus is kept only for the
+    * refresh's rebuild fallback (a delta on a centroid id or over 10%
+    * of the corpus); it is localCheckpoint-ed (the micro-batch source
+    * is only valid inside its batch — lineage must not reach back into
+    * it) and the previous generation's frames unpersist AFTER the swap,
+    * the refreshResident discipline.
     *
     * Each generation's artifacts are localCheckpoint-ed, not merely
     * persisted: the refresh's output plans NEST the previous
@@ -193,15 +194,20 @@ object StreamingOps {
         val adds = batch.where(col("op") === "add")
           .select(col("vec_id").cast("long").as("vec_id"),
             col("vec").cast("array<double>").as("embedding"))
+        val deletes = batch.where(col("op") === "delete")
+          .select(col("vec_id").cast("long").as("vec_id"))
         // deletes-then-adds: one anti-join on every touched id, then
         // the adds land — a same-batch (delete, add) or a bare re-add
-        // both resolve to replacement
+        // both resolve to replacement, as in the refresh's delta
         val next = prevCorpus
           .join(broadcast(touched), Seq("vec_id"), "left_anti")
           .unionByName(adds)
           .localCheckpoint(true)
         val nextState = graft.operators.Ivf
-          .knnGraphRefresh(prevState, next, k, nCentroids, nProbe)
+          .knnGraphRefresh(prevState, adds, deletes, k, nCentroids, nProbe)
+          .map(_.state)
+          .getOrElse(graft.operators.Ivf
+            .knnGraphBuild(next, k, nCentroids, nProbe))
         // releases the BLOCKS of a checkpointed generation, not just the
         // (absent) query cache: Dataset.unpersist leaves local-checkpoint
         // blocks to the ContextCleaner, which accumulated one dead
@@ -222,9 +228,10 @@ object StreamingOps {
             nextState.ranked.localCheckpoint(true),
             nextState.edges.localCheckpoint(true))
           current.set((next, pinned))
-          // the refresh's internal caches (delta, deltaRanked, the
-          // union ranked, fullSrcs) are transient per generation — the
-          // served state is checkpoint-backed outside the tracker
+          // the refresh's internal caches (the adds' ranked rows, the
+          // recomputed and merged edge rows) are transient per
+          // generation — the served state is checkpoint-backed outside
+          // the tracker
           graft.CacheTracker.releaseAll()
           // previous generation's checkpoint blocks (non-blocking — an
           // in-flight probe holding the old handle finishes first)

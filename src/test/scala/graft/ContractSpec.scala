@@ -10,6 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ContractSpec extends AnyFunSuite {
 
+  /** Every (file, text) under src/main/scala, sorted by path. */
+  private def mainSources(): Seq[(java.io.File, String)] = {
+    val root = new java.io.File("src/main/scala")
+    assume(root.isDirectory, "source tree not visible from the test JVM")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    files(root).map { f =>
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      f -> (try s.mkString finally s.close())
+    }
+  }
+
   test("no contract key is declared twice (a duplicate silently shadows)") {
     // a Map literal keeps the LAST duplicate — nothing at compile or
     // run time flags the earlier entry being shadowed (nearly shipped
@@ -45,20 +58,28 @@ class ContractSpec extends AnyFunSuite {
     // session keeps alive: a second builder drifts from the first (the
     // Explain/Verify/soak copies did), and a second session-keyed map
     // needs its own eviction hook
-    val root = new java.io.File("src/main/scala")
-    assume(root.isDirectory, "source tree not visible from the test JVM")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val sessionMap = """TrieMap\s*(?:\.\s*empty\s*)?\[\s*\(?\s*SparkSession\b""".r
-    val offenders = files(root).filter(_.getName != "GraftSession.scala").flatMap { f =>
-      val s = scala.io.Source.fromFile(f, "UTF-8")
-      val src = try s.mkString finally s.close()
-      (if (src.contains("SparkSession.builder")) Seq(s"${f.getPath}: SparkSession.builder")
-       else Nil) ++
-        sessionMap.findFirstIn(src).map(m => s"${f.getPath}: $m")
+    val offenders = mainSources().filter(_._1.getName != "GraftSession.scala").flatMap {
+      case (f, src) =>
+        (if (src.contains("SparkSession.builder")) Seq(s"${f.getPath}: SparkSession.builder")
+         else Nil) ++
+          sessionMap.findFirstIn(src).map(m => s"${f.getPath}: $m")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the kNN-graph refresh's merge test and re-cut live in one file") {
+    // one refresh algorithm over two state stores: a second copy of the
+    // exact merge test or of the refresh's edge-list top-k re-cut is a
+    // second refresh that drifts from the first
+    val mergeTest = """struct\(\s*col\("distance"\)\s*,\s*col\("nbr_id"\)\s*\)\s*<""".r
+    val reCut = """topK\(\s*col\("distance"\)\s*,\s*col\("nbr_id"\)""".r
+    for (pat <- Seq(mergeTest, reCut)) {
+      val holders = mainSources().collect {
+        case (f, src) if pat.findFirstIn(src).nonEmpty => f.getPath
+      }
+      assert(holders.size <= 1, s"$pat appears in ${holders.mkString(", ")}")
+    }
   }
 
   test("every oracle key has a matching query") {

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ivf, KnnGraphTables}
 
-/** The delta-driven, bucket-pruned graph refresh must be ROW-IDENTICAL
-  * to the in-memory tracked refresh on the same delta chain — cell
-  * pruning, the inverted-index lossy set (stale-tolerant), the exact
-  * merge test, and the bucketed rewrites are cost moves, never
-  * semantics moves. Fallback triggers mirror the in-memory path.
+/** The one refresh algorithm over its table store must stay
+  * ROW-IDENTICAL to the same algorithm over its frame store and to a
+  * from-scratch build on the same delta chain — cell pruning, the
+  * inverted-index lossy set (stale-tolerant), and the bucketed rewrites
+  * are cost moves, never semantics moves. Fallback triggers are the
+  * frame store's.
   */
 class KnnGraphTablesSpec extends SparkSpec {
 
@@ -46,6 +47,8 @@ class KnnGraphTablesSpec extends SparkSpec {
       .toSet
 
   test("init ≡ knnGraphBuild; three mixed generations stay row-identical to the in-memory chain") {
+    // three chains over one delta sequence: the table store, the frame
+    // store, and a from-scratch knnGraphBuild of each new corpus
     val dir = Files.createTempDirectory("graph-tables").toString
     val base = vecs(0L until 400L)
     KnnGraphTables.init(spark, dir, base, k, nCents, nProbe, nBuckets)
@@ -58,7 +61,7 @@ class KnnGraphTablesSpec extends SparkSpec {
     assert(edgeRows(st0.edges) == edgeRows(mem.edges))
     assert(rankedRows(st0.ranked) == rankedRows(mem.ranked))
 
-    // the corpus the in-memory twin sees, evolved alongside
+    // the new corpus, evolved alongside for the from-scratch build
     var corpus = base
     def gen(adds: DataFrame, removeIds: Seq[Long]): Unit = {
       import spark.implicits._
@@ -66,21 +69,24 @@ class KnnGraphTablesSpec extends SparkSpec {
       val rep = KnnGraphTables.refresh(spark, dir, adds, removes)
       assert(rep.nonEmpty, "delta within bounds must not demand a rebuild")
       // localCheckpoint truncates the per-generation plan nesting and
-      // keeps the twin's state alive through releaseAll (the serving-
+      // keeps the frame state alive through releaseAll (the serving-
       // loop discipline the graphrefresh soak uses)
+      val rr = Ivf.knnGraphRefresh(mem, adds, removes, k, nCents, nProbe)
+      assert(rr.nonEmpty, "frame store unexpectedly demanded a rebuild")
+      mem = Ivf.KnnGraphState(
+        rr.get.state.ranked.localCheckpoint(true),
+        rr.get.state.edges.localCheckpoint(true))
       corpus = (if (removeIds.isEmpty) corpus
         else corpus.where(!col("vec_id").isin(removeIds: _*)))
         .join(adds.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .unionByName(adds)
         .localCheckpoint(true)
-      val rr = Ivf.knnGraphRefreshTracked(mem, corpus, k, nCents, nProbe)
-      assert(rr.changedSrcs.nonEmpty, "in-memory twin unexpectedly rebuilt")
-      mem = Ivf.KnnGraphState(
-        rr.state.ranked.localCheckpoint(true),
-        rr.state.edges.localCheckpoint(true))
+      val fresh = Ivf.knnGraphBuild(corpus, k, nCents, nProbe)
       val st = KnnGraphTables.readState(spark, dir)
       assert(edgeRows(st.edges) == edgeRows(mem.edges))
       assert(rankedRows(st.ranked) == rankedRows(mem.ranked))
+      assert(edgeRows(mem.edges) == edgeRows(fresh.edges))
+      assert(rankedRows(mem.ranked) == rankedRows(fresh.ranked))
       graft.CacheTracker.releaseAll()
     }
 
@@ -117,20 +123,21 @@ class KnnGraphTablesSpec extends SparkSpec {
     // {0..9, 30..39} with max 39. A brand-new id 15 is NOT a stored
     // centroid id, but a from-scratch build on the new corpus would
     // seat it in the lowest-nCents set (displacing 39) — centroid
-    // membership changes, so refresh must fall back exactly like the
-    // in-memory twin (r16 advice: the id-only guard proceeded with
-    // stale centroids and silently diverged)
+    // membership changes, so refresh must fall back (r16 advice: the
+    // id-only guard proceeded with stale centroids and silently
+    // diverged)
     val dir = Files.createTempDirectory("graph-tables-gap").toString
     val corpus = vecs((0L until 10L) ++ (30L until 330L))
     KnnGraphTables.init(spark, dir, corpus, k, nCents, nProbe, nBuckets)
     assert(KnnGraphTables.refresh(spark, dir,
       vecs(Seq(15L)), Seq.empty[Long].toDF("vec_id")).isEmpty,
       "new id below max(centIds) must demand a rebuild")
-    // the in-memory twin agrees: its tracked refresh rebuilds too
+    // the frame store agrees: it demands the rebuild too
     val mem = Ivf.knnGraphBuild(corpus, k, nCents, nProbe)
     val newCorpus = corpus.unionByName(vecs(Seq(15L)))
-    assert(Ivf.knnGraphRefreshTracked(mem, newCorpus, k, nCents, nProbe)
-      .changedSrcs.isEmpty, "in-memory twin should rebuild on the same delta")
+    assert(Ivf.knnGraphRefresh(mem, vecs(Seq(15L)),
+      Seq.empty[Long].toDF("vec_id"), k, nCents, nProbe).isEmpty,
+      "frame store should rebuild on the same delta")
     // re-init on the new corpus (the fallback path) matches from-scratch
     KnnGraphTables.init(spark, dir, newCorpus, k, nCents, nProbe, nBuckets)
     val fresh = Ivf.knnGraphBuild(newCorpus, k, nCents, nProbe)
@@ -191,7 +198,7 @@ class KnnGraphTablesSpec extends SparkSpec {
     crashAfter("probeidx")
     // a third torn layer, then the refresh finally completes: the
     // SAME delta recomputed from the pins must land exactly once and
-    // match the in-memory twin on the same delta chain
+    // match the frame store and a from-scratch build
     crashAfter("meta")
     val rep = KnnGraphTables.refresh(spark, dir, adds, removes)
     assert(rep.nonEmpty, "recovery refresh must not demand a rebuild")
@@ -204,11 +211,13 @@ class KnnGraphTablesSpec extends SparkSpec {
       Ivf.KnnGraphState(
         b.ranked.localCheckpoint(true), b.edges.localCheckpoint(true))
     }
-    val rr = Ivf.knnGraphRefreshTracked(mem0, corpus, k, nCents, nProbe)
-    assert(rr.changedSrcs.nonEmpty)
+    val rr = Ivf.knnGraphRefresh(mem0, adds, removes, k, nCents, nProbe)
+    assert(rr.nonEmpty)
     val st = KnnGraphTables.readState(spark, dir)
-    assert(edgeRows(st.edges) == edgeRows(rr.state.edges))
-    assert(rankedRows(st.ranked) == rankedRows(rr.state.ranked))
+    assert(edgeRows(st.edges) == edgeRows(rr.get.state.edges))
+    assert(rankedRows(st.ranked) == rankedRows(rr.get.state.ranked))
+    assert(edgeRows(st.edges) ==
+      edgeRows(Ivf.knnGraphBuild(corpus, k, nCents, nProbe).edges))
     // and the graph directory keeps working: one more clean generation
     val rep2 = KnnGraphTables.refresh(spark, dir,
       changedVecs(Seq(401L)), Seq(100L).toDF("vec_id"))
@@ -226,21 +235,16 @@ class KnnGraphTablesSpec extends SparkSpec {
       Ivf.KnnGraphState(
         b.ranked.localCheckpoint(true), b.edges.localCheckpoint(true))
     }
-    var corpus = base
     def gen(adds: DataFrame, removeIds: Seq[Long],
         trigger: Double): KnnGraphTables.Report = {
+      val removes = removeIds.toDF("vec_id")
       val rep = KnnGraphTables.refresh(spark, dir, adds,
-        removeIds.toDF("vec_id"), probeCompactTrigger = trigger).get
-      corpus = (if (removeIds.isEmpty) corpus
-        else corpus.where(!col("vec_id").isin(removeIds: _*)))
-        .join(adds.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .unionByName(adds)
-        .localCheckpoint(true)
-      val rr = Ivf.knnGraphRefreshTracked(mem, corpus, k, nCents, nProbe)
-      assert(rr.changedSrcs.nonEmpty)
+        removes, probeCompactTrigger = trigger).get
+      val rr = Ivf.knnGraphRefresh(mem, adds, removes, k, nCents, nProbe)
+      assert(rr.nonEmpty)
       mem = Ivf.KnnGraphState(
-        rr.state.ranked.localCheckpoint(true),
-        rr.state.edges.localCheckpoint(true))
+        rr.get.state.ranked.localCheckpoint(true),
+        rr.get.state.edges.localCheckpoint(true))
       val st = KnnGraphTables.readState(spark, dir)
       assert(edgeRows(st.edges) == edgeRows(mem.edges))
       assert(rankedRows(st.ranked) == rankedRows(mem.ranked))
@@ -293,5 +297,12 @@ class KnnGraphTablesSpec extends SparkSpec {
     val rep = KnnGraphTables.refresh(spark, dir + "2",
       vecs(500L until 505L), Seq.empty[Long].toDF("vec_id"))
     assert(rep.nonEmpty && rep.get.corpusSize == 265L)
+    // a corpus smaller than nCents holds every id as a centroid, so ANY
+    // new id joins the centroid set of a from-scratch build
+    KnnGraphTables.init(spark, dir + "3", vecs(0L until 15L), k, nCents,
+      nProbe, nBuckets)
+    assert(KnnGraphTables.refresh(spark, dir + "3", vecs(Seq(100L)),
+      Seq.empty[Long].toDF("vec_id")).isEmpty)
+    graft.CacheTracker.releaseAll()
   }
 }

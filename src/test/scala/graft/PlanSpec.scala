@@ -314,44 +314,53 @@ class PlanSpec extends SparkSpec {
   }
 
   test("knnGraphRefresh: no corpus-sized shuffle join, bounded merge re-cut") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins._
     val base = emb.select(col("vec_id"), col("embedding"))
     val st0 = graft.operators.Ivf.knnGraphBuild(base, 5, 16, 4)
     // persist the base edges as real callers do (soak / streaming loop
-    // pin each generation): unpersisted, the BUILD's salted candidate
-    // join inlines into the refresh plan and legitimately shuffles —
-    // and whether it plans BHJ or SMJ depends on what other suites left
-    // cached, which made this gate order-flaky in the full run
+    // pin each generation): unpersisted, the refresh pins the BUILD's
+    // salted candidate join itself, which legitimately shuffles
     val st = st0.copy(edges = st0.edges.persist())
     st.edges.count()
-    val newEmb = base.unionByName(base.where(col("vec_id") < 2)
-      .select((col("vec_id") + 500000).as("vec_id"), col("embedding")))
-    val refreshed = graft.operators.Ivf.knnGraphRefresh(st, newEmb, 5, 16, 4)
-    // every join VISIBLE in the edges plan must be a broadcast: the one
-    // shuffle join the refresh owns — the full-outer (id, md5) diff,
-    // which cannot broadcast — sits behind `delta`'s own persist
-    // boundary and is priced once, so the served-edges plan proper
-    // carries ZERO shuffle joins. Walk the TREE, not the string:
-    // InMemoryTableScan renders its cached inner plan into the string
-    // (the build's salted shuffle join showed through and made a
-    // string scan order-flaky), but collect() stops at cache
+    val adds = base.where(col("vec_id") < 2)
+      .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
+    val before = graft.CacheTracker.registered()
+    val refreshed = graft.operators.Ivf.knnGraphRefresh(st, adds,
+      base.select(col("vec_id")).limit(0), 5, 16, 4).get.state
+    // the refresh runs as eager jobs over frames it pins (cached, their
+    // lineage cut), so the plans to check are every pinned frame's
+    // cached plan plus the served edges plan. Walk each TREE, not the
+    // string: InMemoryTableScan renders its cached inner plan into the
+    // string (the build's salted shuffle join showed through and made
+    // a string scan order-flaky), but collect() stops at cache
     // boundaries (innerChildren are rendering-only); the AQE wrapper
     // holds the tree outside children and must be unwrapped first.
-    val planTree = refreshed.edges.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.inputPlan
+    def tree(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => tree(a.inputPlan)
       case other => other
     }
-    val shuffleJoins = planTree.collect {
-      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
-        j.joinType.toString
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec =>
-        j.joinType.toString
+    // a pinned frame's own plan is a scan of its cache: walk the plan
+    // the cache was built from
+    def cachedTree(p: SparkPlan): SparkPlan = tree(p) match {
+      case s: InMemoryTableScanExec => cachedTree(s.relation.cacheBuilder.cachedPlan)
+      case other => other
     }
-    val broadcastJoins = planTree.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
-    }
-    val p = physical(refreshed.edges)
+    val pinned = graft.CacheTracker.registered().filterNot(f => before.exists(_ eq f))
+    val plans = pinned.map(f => cachedTree(f.queryExecution.executedPlan)) :+
+      tree(refreshed.edges.queryExecution.executedPlan)
+    val shuffleJoins = plans.flatMap(_.collect {
+      case j: SortMergeJoinExec => j.joinType.toString
+      case j: ShuffledHashJoinExec => j.joinType.toString
+    })
+    val broadcastJoins = plans.flatMap(_.collect {
+      case j: BroadcastHashJoinExec => j
+    })
+    val p = plans.mkString("\n----\n")
     st.edges.unpersist()
+    assert(pinned.nonEmpty, "the refresh pinned no frames")
     assert(shuffleJoins.isEmpty,
       s"a refresh join shuffled ($shuffleJoins):\n$p")
     // positive control: the walk genuinely descends (semi/anti/inner

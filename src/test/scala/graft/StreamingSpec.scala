@@ -627,8 +627,6 @@ class StreamingSpec extends SparkSpec {
     val base = Tables.embeddings(spark, sfDir).limit(500)
       .select(col("vec_id"), col("embedding")).persist()
     base.count()
-    val row60 = base.where(col("vec_id") === 60L)
-      .select(col("embedding")).head().getSeq[Double](0)
     def vecFor(seed: Long): Seq[Double] =
       (0 until 64).map(j => ((seed * 31 + j * 7) % 100) / 50.0 - 1.0)
     val stream = MemoryStream[(String, Long, Seq[Double])]
@@ -638,11 +636,11 @@ class StreamingSpec extends SparkSpec {
       stream.addData(Seq(("add", 900001L, vecFor(1)))) // one real generation
       q.processAllAvailable()
       val after1 = spark.sparkContext.getPersistentRDDs.size
-      // three no-op generations: a re-add of an IDENTICAL vector folds
-      // into the corpus but produces an EMPTY fingerprint delta — the
-      // r12 leak checkpointed that corpus copy and never released it
+      // three no-op generations: a delete of an id the corpus does not
+      // hold folds into the corpus but is an EMPTY delta — the r12 leak
+      // checkpointed that corpus copy and never released it
       (1 to 3).foreach { _ =>
-        stream.addData(Seq(("add", 60L, row60)))
+        stream.addData(Seq(("delete", 990000L, Seq.empty[Double])))
         q.processAllAvailable()
       }
       val afterNoops = spark.sparkContext.getPersistentRDDs.size
