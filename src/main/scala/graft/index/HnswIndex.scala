@@ -27,6 +27,16 @@ import scala.collection.mutable
   *
   * Deterministic: the level RNG is seeded, and all orderings tie-break on id.
   * Serializable so per-partition sub-indexes can be collected + broadcast.
+  *
+  * Search path: each node's Euclidean norm is cached beside its vector
+  * (computed once at insert/import with the kernel's own loop, so the
+  * cached value is the one the kernel would recompute) and the query's
+  * norm is taken once per search, so a cosine hop runs one dot product;
+  * a beam step scores its unvisited neighbors four at a time (four
+  * independent dot chains, each still summed in index order). A search
+  * or insert allocates one [[BeamScratch]] (visited set, heaps, neighbor
+  * batch) and resets it per layer; nothing search-local lives on the
+  * index, so concurrent searches of one shared index are safe.
   */
 final class HnswIndex(
     val dim: Int,
@@ -49,12 +59,14 @@ final class HnswIndex(
   // PackedHnsw can snapshot the graph into its immutable varint form)
   private[index] val ids = mutable.ArrayBuffer.empty[Long]
   private[index] val vecs = mutable.ArrayBuffer.empty[Array[Double]]
+  // norms(i) = HnswIndex.norm(vecs(i)): the cosine kernel's node norm
+  private var norms = new Array[Double](16)
   private[index] val levels = mutable.ArrayBuffer.empty[Int]
   // conns(i)(layer) = neighbor internal indexes, unboxed (IntVec): adjacency
   // iteration dominates search time and ArrayBuffer[Int] boxes every element
   private[index] val conns = mutable.ArrayBuffer.empty[Array[IntVec]]
   private val idToIdx = mutable.HashMap.empty[Long, Int]
-  private[index] val dead = mutable.BitSet.empty
+  private[index] val dead = new java.util.BitSet
   private[index] var entry: Int = -1
   // next auto-assigned external id — the reference's `current_id` counter:
   // auto inserts take it, and an externally-supplied id bumps it past
@@ -62,7 +74,8 @@ final class HnswIndex(
   private var nextId: Long = 0L
   // lifetime counters (reference graph.py:72-73, surfaced by get_stats
   // :209-234): searches/insertions ever served, independent of deletes
-  private var searches: Long = 0L
+  // atomic: a shared resident shard serves concurrent searches
+  private val searches = new java.util.concurrent.atomic.AtomicLong(0L)
   private var insertions: Long = 0L
 
   def size: Int = idToIdx.size
@@ -107,6 +120,57 @@ final class HnswIndex(
     math.floor(-math.log(rng.nextDouble() + 1e-300) * ml).toInt
   }
 
+  /** `distance(q, vecs(idx))`, with cosine's norms read from the cache
+    * (`qNorm` is the query's): one accumulator per hop instead of three.
+    */
+  private def distTo(q: Array[Double], qNorm: Double, idx: Int): Double =
+    if (metricCode == 3) {
+      val b = vecs(idx)
+      var dot = 0.0; var i = 0
+      while (i < q.length) { dot += q(i) * b(i); i += 1 }
+      cosine(dot, qNorm, idx)
+    } else distance(q, vecs(idx))
+
+  /** `dists(j) = distTo(q, qNorm, nodes(j))` for j < cnt. Cosine scores
+    * four nodes per pass over the query: four independent dot chains,
+    * each summed in index order, so every value is bit-identical to the
+    * one-node loop's.
+    */
+  private def distBatch(
+      q: Array[Double], qNorm: Double, nodes: Array[Int], cnt: Int,
+      dists: Array[Double]): Unit = {
+    var j = 0
+    if (metricCode == 3) {
+      while (j + 4 <= cnt) {
+        val b0 = vecs(nodes(j)); val b1 = vecs(nodes(j + 1))
+        val b2 = vecs(nodes(j + 2)); val b3 = vecs(nodes(j + 3))
+        var d0 = 0.0; var d1 = 0.0; var d2 = 0.0; var d3 = 0.0
+        var i = 0
+        while (i < q.length) {
+          val qi = q(i)
+          d0 += qi * b0(i); d1 += qi * b1(i); d2 += qi * b2(i); d3 += qi * b3(i)
+          i += 1
+        }
+        dists(j) = cosine(d0, qNorm, nodes(j))
+        dists(j + 1) = cosine(d1, qNorm, nodes(j + 1))
+        dists(j + 2) = cosine(d2, qNorm, nodes(j + 2))
+        dists(j + 3) = cosine(d3, qNorm, nodes(j + 3))
+        j += 4
+      }
+    }
+    while (j < cnt) { dists(j) = distTo(q, qNorm, nodes(j)); j += 1 }
+  }
+
+  private def cosine(dot: Double, qNorm: Double, idx: Int): Double = {
+    val prod = qNorm * norms(idx)
+    if (prod == 0.0) 1.0 else 1.0 - dot / prod
+  }
+
+  private def appendNorm(idx: Int, v: Array[Double]): Unit = {
+    if (idx >= norms.length) norms = java.util.Arrays.copyOf(norms, 2 * idx)
+    norms(idx) = HnswIndex.norm(v)
+  }
+
   /** Beam search within one layer (reference graph.py:88-125), with
     * result-pool filtering: candidates (traversal) admit every live node,
     * results admit only `allow`-passing ones. The frontier closes once the
@@ -115,24 +179,27 @@ final class HnswIndex(
     * oversampling). Under [[HnswIndex.AllowAll]] this is exactly the
     * reference's unfiltered stop rule: until the pool first overflows no
     * result was ever popped, so every candidate sits in the pool and
-    * `cd <= topDist`. Returns up to `ef` (distance, nodeIdx) pairs,
-    * unsorted.
+    * `cd <= topDist`. Leaves up to `ef` nodes in `s.results`.
     */
   private def searchLayer(
-      q: Array[Double], entryPoints: Seq[Int], ef: Int, layer: Int,
-      allow: Long => Boolean): mutable.ArrayBuffer[(Double, Int)] = {
+      q: Array[Double], qNorm: Double, entryPoints: Array[Int], ef: Int,
+      layer: Int, allow: Long => Boolean, s: BeamScratch): Unit = {
     val allowAll = allow eq HnswIndex.AllowAll
-    val visited = new java.util.BitSet(ids.length)
+    s.reset()
+    val visited = s.visited
     // candidates: min-heap by (dist, idx); results: max-heap, bounded to ef
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
-    entryPoints.foreach { ep =>
+    val candidates = s.candidates
+    val results = s.results
+    var e = 0
+    while (e < entryPoints.length) {
+      val ep = entryPoints(e)
       if (!visited.get(ep)) {
         visited.set(ep)
-        val d = distance(q, vecs(ep))
+        val d = distTo(q, qNorm, ep)
         candidates.add(d, ep)
-        if (!dead(ep) && (allowAll || allow(ids(ep)))) results.add(d, ep)
+        if (!dead.get(ep) && (allowAll || allow(ids(ep)))) results.add(d, ep)
       }
+      e += 1
     }
     var open = true
     while (open && candidates.nonEmpty) {
@@ -144,19 +211,34 @@ final class HnswIndex(
       } else {
         val layerConns = conns(c)
         if (layer < layerConns.length) {
+          // gather the unvisited live neighbors, score them together
+          // (independent accumulators overlap), then admit them in
+          // adjacency order — the same visits and heap updates as
+          // scoring each on its own
           val adj = layerConns(layer)
+          val fresh = s.batch(adj.length)
+          var cnt = 0
           var i = 0
           while (i < adj.length) {
             val nb = adj(i)
-            if (!visited.get(nb) && !dead(nb)) {
+            if (!visited.get(nb) && !dead.get(nb)) {
               visited.set(nb)
-              val d = distance(q, vecs(nb))
-              if (results.size < ef || d < results.topDist) {
-                candidates.add(d, nb)
-                if (allowAll || allow(ids(nb))) {
-                  results.add(d, nb)
-                  if (results.size > ef) results.pop()
-                }
+              fresh(cnt) = nb
+              cnt += 1
+            }
+            i += 1
+          }
+          val dists = s.dists
+          distBatch(q, qNorm, fresh, cnt, dists)
+          i = 0
+          while (i < cnt) {
+            val nb = fresh(i)
+            val d = dists(i)
+            if (results.size < ef || d < results.topDist) {
+              candidates.add(d, nb)
+              if (allowAll || allow(ids(nb))) {
+                results.add(d, nb)
+                if (results.size > ef) results.pop()
               }
             }
             i += 1
@@ -164,7 +246,22 @@ final class HnswIndex(
         }
       }
     }
-    results.toBuffer
+  }
+
+  /** Greedy ef=1 descent from the entry point down to layer `stop + 1`,
+    * leaving the layer-`stop` entry in `ep(0)`. Each layer keeps at most
+    * one result, so the single survivor is the nearest.
+    */
+  private def descend(
+      q: Array[Double], qNorm: Double, stop: Int, s: BeamScratch): Array[Int] = {
+    val ep = Array(entry)
+    var lc = levels(entry)
+    while (lc > stop) {
+      searchLayer(q, qNorm, ep, 1, lc, HnswIndex.AllowAll, s)
+      if (s.results.nonEmpty) ep(0) = s.results.topIdx
+      lc -= 1
+    }
+    ep
   }
 
   /** Insert; duplicate id overwrites (old node tombstoned, edges dangle —
@@ -180,37 +277,34 @@ final class HnswIndex(
     val level = randomLevel()
     ids += id
     vecs += vector
+    appendNorm(idx, vector)
     levels += level
     conns += Array.fill(level + 1)(new IntVec)
     idToIdx(id) = idx
 
     if (entry < 0) { entry = idx; return }
 
+    val qNorm = norms(idx)
+    val s = new BeamScratch(ids.length, efConstruction)
     // greedy descent above the node's level; the beam (like the
     // reference's current_nearest, graph.py:145-148) is a node LIST —
     // ef=1 keeps it a singleton here, but the connect loop below widens it
-    var beam: Seq[Int] = Seq(entry)
-    var lc = levels(entry)
-    while (lc > level) {
-      val best = searchLayer(vector, beam, 1, lc, HnswIndex.AllowAll)
-      if (best.nonEmpty) beam = Seq(best.minBy(t => (t._1, ids(t._2)))._2)
-      lc -= 1
-    }
+    var beam = descend(vector, qNorm, level, s)
     // connect at each layer from min(level, maxLevel) down to 0
     var layer = math.min(level, levels(entry))
     while (layer >= 0) {
-      val cands = searchLayer(vector, beam, efConstruction, layer, HnswIndex.AllowAll)
-      val sorted = cands.sortBy(t => (t._1, ids(t._2)))
+      searchLayer(vector, qNorm, beam, efConstruction, layer, HnswIndex.AllowAll, s)
+      val found = s.results.drainSorted(i => ids(i))
       // simple M-nearest selection (reference graph.py:78-86), selecting up
       // to M_max0 at the base layer (graph.py:153-154 passes M_max0)
       val cap = if (layer == 0) mMax0 else mMax
-      val neighbors = sorted.take(cap).map(_._2)
+      val neighbors = Array.tabulate(math.min(found, cap))(s.results.node)
       neighbors.foreach { nb =>
         conns(idx)(layer) += nb
         conns(nb)(layer) += idx
         if (conns(nb)(layer).length > cap) {
           val pruned = conns(nb)(layer).toArray
-            .map(x => (distance(vecs(nb), vecs(x)), x))
+            .map(x => (distTo(vecs(nb), norms(nb), x), x))
             .sortBy(t => (t._1, ids(t._2)))
             .take(cap)
             .map(_._2)
@@ -219,14 +313,14 @@ final class HnswIndex(
       }
       // seed the next layer with ALL selected neighbors, not just the
       // closest — the reference's current_nearest = neighbors (graph.py:169)
-      if (neighbors.nonEmpty) beam = neighbors.toSeq
+      if (neighbors.nonEmpty) beam = neighbors
       layer -= 1
     }
     if (level > levels(entry)) entry = idx
   }
 
   private def tombstone(idx: Int): Unit = {
-    dead += idx
+    dead.set(idx)
     idToIdx.remove(ids(idx))
     // Remove incoming edges by walking only the dead node's own adjacency —
     // the reference's delete does exactly this (graph.py:195-198: discard
@@ -241,7 +335,7 @@ final class HnswIndex(
       var i = 0
       while (i < adj.length) {
         val nb = adj(i)
-        if (!dead(nb) && l < conns(nb).length) conns(nb)(l).removeValue(idx)
+        if (!dead.get(nb) && l < conns(nb).length) conns(nb)(l).removeValue(idx)
         i += 1
       }
       l += 1
@@ -250,7 +344,7 @@ final class HnswIndex(
       entry = -1
       var best = -1
       conns.indices.foreach { i =>
-        if (!dead(i) && (best < 0 || levels(i) > levels(best))) best = i
+        if (!dead.get(i) && (best < 0 || levels(i) > levels(best))) best = i
       }
       entry = best
     }
@@ -297,22 +391,14 @@ final class HnswIndex(
     // counted before validation/empty-check — the reference increments
     // total_searches first thing under its lock (graph.py:177), so even
     // empty-index and failing searches count there; exact parity here
-    searches += 1
+    searches.incrementAndGet()
     if (entry < 0) return Seq.empty
     require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
     val efUsed = math.max(ef.getOrElse(efSearch), k)
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      val best = searchLayer(q, Seq(cur), 1, lc, HnswIndex.AllowAll)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
-      lc -= 1
-    }
-    searchLayer(q, Seq(cur), efUsed, 0, allow)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
+    val qNorm = HnswIndex.norm(q)
+    val s = new BeamScratch(ids.length, efUsed)
+    searchLayer(q, qNorm, descend(q, qNorm, 0, s), efUsed, 0, allow, s)
+    s.results.topK(k, i => ids(i))
   }
 
   /** Current entry-point external id, if any (persisted so a reloaded
@@ -325,13 +411,13 @@ final class HnswIndex(
     * vector matrix (reference core/storage/engine.py:23-68).
     */
   def exportNodes: Iterator[(Long, Array[Double], Int)] =
-    ids.indices.iterator.filterNot(dead).map(i => (ids(i), vecs(i), levels(i)))
+    ids.indices.iterator.filterNot(dead.get).map(i => (ids(i), vecs(i), levels(i)))
 
   /** Export live edges: (id, layer, neighborId). */
   def exportEdges: Iterator[(Long, Int, Long)] =
-    ids.indices.iterator.filterNot(dead).flatMap { i =>
+    ids.indices.iterator.filterNot(dead.get).flatMap { i =>
       conns(i).indices.iterator.flatMap { l =>
-        conns(i)(l).toArray.iterator.filterNot(dead).map(nb => (ids(i), l, ids(nb)))
+        conns(i)(l).toArray.iterator.filterNot(dead.get).map(nb => (ids(i), l, ids(nb)))
       }
     }
 
@@ -346,6 +432,7 @@ final class HnswIndex(
     nodes.foreach { case (id, vec, level) =>
       val idx = ids.length
       ids += id; vecs += vec; levels += level
+      appendNorm(idx, vec)
       conns += Array.fill(level + 1)(new IntVec)
       idToIdx(id) = idx
       if (id >= nextId) nextId = id + 1
@@ -357,7 +444,7 @@ final class HnswIndex(
   }
 
   /** Number of tombstoned slots still occupying memory. */
-  def deadCount: Int = dead.size
+  def deadCount: Int = dead.cardinality
 
   /** Level draws consumed so far (persisted alongside `seed` so a reloaded
     * index resumes the RNG stream instead of replaying it).
@@ -368,11 +455,11 @@ final class HnswIndex(
     * reference's engine metrics (graph.py:72-73, get_stats :209-234).
     * Persisted in the meta table; a reloaded index keeps counting.
     */
-  def totalSearches: Long = searches
+  def totalSearches: Long = searches.get
   def totalInsertions: Long = insertions
 
   private[index] def restoreCounters(s: Long, i: Long): Unit = {
-    searches = s
+    searches.set(s)
     insertions = i
   }
 
@@ -404,12 +491,13 @@ final class HnswIndex(
       dim, m, efConstruction, efSearch, metric,
       exportNodes.toSeq, exportEdges.toSeq, entryPointId,
       seed = seed, rngDraws = draws,
-      totalSearches = searches, totalInsertions = insertions,
+      totalSearches = searches.get, totalInsertions = insertions,
       nextAutoId = nextId)
 
   /** Approximate resident bytes of the FULL-PRECISION vector payload +
     * adjacency — the baseline the SQ8 serving index's memory line is
-    * compared against (vectors: n·dim·8; adjacency: 4 B per edge slot).
+    * compared against (vectors: n·dim·8; id 8 B, level 4 B and cached
+    * norm 8 B per node; adjacency: 4 B per edge slot).
     */
   def memoryBytes: Long = {
     var adj = 0L
@@ -419,14 +507,14 @@ final class HnswIndex(
       while (l < conns(i).length) { adj += 4L * conns(i)(l).length; l += 1 }
       i += 1
     }
-    ids.length.toLong * (8L + 8L * dim + 4L) + adj
+    ids.length.toLong * (8L + 8L * dim + 4L + 8L) + adj
   }
 
   /** Per-level stats, the analog of the reference's get_stats
     * (graph.py:209-234): (level, nodeCount, avgConnections at that layer).
     */
   def levelStats: Seq[(Int, Int, Double)] = {
-    val alive = conns.indices.filterNot(dead)
+    val alive = conns.indices.filterNot(dead.get)
     (0 to maxLevel).map { l =>
       val at = alive.filter(i => levels(i) >= l)
       val avgConn =
@@ -445,6 +533,15 @@ object HnswIndex {
     */
   object AllowAll extends (Long => Boolean) with Serializable {
     def apply(id: Long): Boolean = true
+  }
+
+  /** Euclidean norm with the cosine kernel's own accumulation order
+    * (`s += v(i) * v(i)`), so a cached norm equals the recomputed one.
+    */
+  private[index] def norm(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
   }
 
   /** Rehydrate an index from exported nodes/edges without rebuilding —

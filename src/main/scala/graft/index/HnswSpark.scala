@@ -446,10 +446,7 @@ object HnswSpark {
   def searchAll(
       indexes: Seq[HnswIndex], q: Array[Double], k: Int, ef: Option[Int] = None)
     : Seq[(Long, Double)] =
-    indexes
-      .flatMap(_.search(q, k, ef))
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
+    mergeTopK(indexes.iterator.map(_.search(q, k, ef)).toArray, k)
 
   /** Single-query serving variant: probe the shards concurrently. Use for
     * latency-sensitive point lookups; in batched searchDf the parallelism
@@ -459,12 +456,39 @@ object HnswSpark {
   def searchAllPar(
       indexes: IndexedSeq[HnswIndex], q: Array[Double], k: Int,
       ef: Option[Int] = None): Seq[(Long, Double)] = {
-    val per = java.util.stream.IntStream.range(0, indexes.length).parallel()
-      .mapToObj(i => indexes(i).search(q, k, ef))
-      .collect(java.util.stream.Collectors.toList[Seq[(Long, Double)]])
-    var merged = Seq.empty[(Long, Double)]
-    per.forEach(s => merged = merged ++ s)
-    merged.sortBy { case (id, d) => (d, id) }.take(k)
+    val per = new Array[Seq[(Long, Double)]](indexes.length)
+    java.util.stream.IntStream.range(0, indexes.length).parallel()
+      .forEach(i => per(i) = indexes(i).search(q, k, ef))
+    mergeTopK(per, k)
+  }
+
+  /** The global top-k of per-shard answers, each ascending by
+    * (distance, id), in one k-way pass: the first k of their
+    * concatenation sorted by `(d, id)` (java.lang.Double.compare, then
+    * id; equal keys keep shard order).
+    */
+  private def mergeTopK(per: Array[Seq[(Long, Double)]], k: Int): Seq[(Long, Double)] = {
+    val lists = per.map(_.toIndexedSeq)
+    val pos = new Array[Int](lists.length)
+    val out = new Array[(Long, Double)](math.max(0, math.min(k, lists.map(_.length).sum)))
+    var n = 0
+    while (n < out.length) {
+      var best = -1; var bd = 0.0; var bid = 0L
+      var s = 0
+      while (s < lists.length) {
+        if (pos(s) < lists(s).length) {
+          val hit = lists(s)(pos(s))
+          val id = hit._1; val d = hit._2
+          val c = if (best < 0) -1 else java.lang.Double.compare(d, bd)
+          if (c < 0 || (c == 0 && id < bid)) { best = s; bd = d; bid = id }
+        }
+        s += 1
+      }
+      out(n) = lists(best)(pos(best))
+      pos(best) += 1
+      n += 1
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 
   /** DataFrame-shaped batched search: broadcast the sub-indexes, probe per

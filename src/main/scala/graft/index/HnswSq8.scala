@@ -13,32 +13,38 @@ package graft.index
   * (HnswSpark.searchResidentRerank), exactly the ADC → exact-rerank
   * composition the PQ family uses.
   *
-  * Memory: n·(dim + 16 + 8) bytes of vector payload vs the float
-  * index's n·dim·8 — ~7.3× smaller at dim 64 (and the ratio grows with
-  * dim) — plus the packed graph's delta-varint adjacency. This class is
-  * only the codec: the graph snapshot, its adjacency format and the one
-  * beam search that serves both SQ8 and PQ live in [[PackedHnsw]]; the
-  * float [[HnswIndex]] keeps its own beam because its adjacency is
-  * mutable (`IntVec` lists that inserts and deletes rewrite in place).
+  * Memory: n·(dim + 24 + 8) bytes of vector payload (codes, (min, max),
+  * the cached decoded norm, id) vs the float index's n·dim·8 — ~5.3×
+  * smaller at dim 64 (and the ratio grows with dim) — plus the packed
+  * graph's delta-varint adjacency. This class is only the codec: the
+  * graph snapshot, its adjacency format and the one beam search that
+  * serves both SQ8 and PQ live in [[PackedHnsw]]; the float
+  * [[HnswIndex]] keeps its own beam because its adjacency is mutable
+  * (`IntVec` lists that inserts and deletes rewrite in place).
   */
 final class HnswSq8Index private (
     src: HnswIndex,
     codes: Array[Array[Byte]],
     vmins: Array[Double],
-    vmaxs: Array[Double])
+    vmaxs: Array[Double],
+    norms: Array[Double]) // Euclidean norm of each DECODED vector
   extends PackedHnsw(src) {
 
-  protected type Query = Array[Double]
-  protected def prepare(q: Array[Double]): Array[Double] = q
+  /** The query and, under cosine, its norm — taken once per search. */
+  protected type Query = HnswSq8Index.Probe
+  protected def prepare(q: Array[Double]): HnswSq8Index.Probe =
+    new HnswSq8Index.Probe(q, if (metricCode == 3) HnswIndex.norm(q) else 0.0)
 
-  // code bytes + (min, max) per node
-  protected def payloadBytes: Long = codes.length.toLong * (dim.toLong + 16L)
+  // code bytes + (min, max) + decoded norm per node
+  protected def payloadBytes: Long = codes.length.toLong * (dim.toLong + 24L)
 
   /** Asymmetric distance: full-precision query vs the decoded node. The
     * decode is folded into the metric loop — no scratch allocation per
-    * hop (this runs once per visited edge).
+    * hop (this runs once per visited edge). Cosine reads both norms from
+    * the probe and the per-node cache, so its loop keeps only the dot.
     */
-  protected def dist(q: Array[Double], idx: Int): Double = {
+  protected def dist(p: HnswSq8Index.Probe, idx: Int): Double = {
+    val q = p.q
     val c = codes(idx)
     val lo = vmins(idx)
     val span = (vmaxs(idx) - lo) / 255.0
@@ -60,18 +66,17 @@ final class HnswSq8Index private (
         while (i < q.length) { s += q(i) * (lo + (c(i) & 0xff) * span); i += 1 }
         -s
       case _ => // cosine (zero-norm → 1.0, the module-wide convention)
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < q.length) {
-          val x = lo + (c(i) & 0xff) * span
-          dot += q(i) * x; na += q(i) * q(i); nb += x * x; i += 1
-        }
-        val prod = math.sqrt(na) * math.sqrt(nb)
+        var dot = 0.0; var i = 0
+        while (i < q.length) { dot += q(i) * (lo + (c(i) & 0xff) * span); i += 1 }
+        val prod = p.norm * norms(idx)
         if (prod == 0.0) 1.0 else 1.0 - dot / prod
     }
   }
 }
 
 object HnswSq8Index {
+
+  private[index] final class Probe(val q: Array[Double], val norm: Double)
 
   /** Quantize a built index into its serving copy (one pass over the
     * snapshot; the source index is untouched and independent).
@@ -82,6 +87,7 @@ object HnswSq8Index {
     val codes = new Array[Array[Byte]](n)
     val vmins = new Array[Double](n)
     val vmaxs = new Array[Double](n)
+    val norms = new Array[Double](n)
     var i = 0
     while (i < n) {
       val v = vecs(i)
@@ -102,8 +108,14 @@ object HnswSq8Index {
         }
       }
       codes(i) = c; vmins(i) = lo; vmaxs(i) = if (hi > lo) hi else lo
+      // the decoded norm, with `dist`'s own decode expression
+      val step = (vmaxs(i) - lo) / 255.0
+      var nb = 0.0
+      j = 0
+      while (j < c.length) { val x = lo + (c(j) & 0xff) * step; nb += x * x; j += 1 }
+      norms(i) = math.sqrt(nb)
       i += 1
     }
-    new HnswSq8Index(ix, codes, vmins, vmaxs)
+    new HnswSq8Index(ix, codes, vmins, vmaxs, norms)
   }
 }

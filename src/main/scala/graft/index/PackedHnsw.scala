@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.mutable
-
 /** The immutable graph half of a compressed resident HNSW serving index,
   * shared by both codecs ([[HnswSq8Index]], [[HnswPqIndex]]): a snapshot
   * of a built [[HnswIndex]]'s topology with delta-varint adjacency, and
@@ -24,6 +22,12 @@ import scala.collection.mutable
   * tie-breaks). The float index keeps its own beam over its mutable
   * `IntVec` adjacency: decoding that into varints (or this format into
   * int arrays) per hop would allocate on the serving hot path.
+  *
+  * A search allocates one [[BeamScratch]] and resets it per layer, and
+  * `prepare` runs once per search, so per-query work a codec hoists
+  * there (SQ8's query norm, PQ's table) is never redone per hop. Nothing
+  * search-local lives on the instance: one cached shard serves
+  * concurrent searches.
   */
 abstract class PackedHnsw private[index] (src: HnswIndex) extends Serializable {
 
@@ -37,7 +41,7 @@ abstract class PackedHnsw private[index] (src: HnswIndex) extends Serializable {
     src.conns.iterator.map(_.map(v => PackedHnsw.packAdj(v.toArray))).toArray
   private[this] val dead: java.util.BitSet = {
     val b = new java.util.BitSet(ids.length)
-    src.dead.foreach(b.set)
+    b.or(src.dead)
     b
   }
   private[this] val entry: Int = src.entry
@@ -89,32 +93,33 @@ abstract class PackedHnsw private[index] (src: HnswIndex) extends Serializable {
     require(q.length == dim, s"dimension mismatch: ${q.length} != $dim")
     val pq = prepare(q)
     val efUsed = math.max(ef.getOrElse(efSearch), k)
+    val s = new BeamScratch(ids.length, efUsed)
+    // greedy ef=1 descent: each layer keeps at most one result
     var cur = entry
     var lc = levels(entry)
     while (lc > 0) {
-      val best = searchLayer(pq, cur, 1, lc, HnswIndex.AllowAll)
-      if (best.nonEmpty) cur = best.minBy(t => (t._1, ids(t._2)))._2
+      searchLayer(pq, cur, 1, lc, HnswIndex.AllowAll, s)
+      if (s.results.nonEmpty) cur = s.results.topIdx
       lc -= 1
     }
-    searchLayer(pq, cur, efUsed, 0, allow)
-      .map { case (d, idx) => (ids(idx), d) }
-      .sortBy { case (id, d) => (d, id) }
-      .take(k)
-      .toSeq
+    searchLayer(pq, cur, efUsed, 0, allow, s)
+    s.results.topK(k, i => ids(i))
   }
 
   /** HnswIndex's filtered beam (and stop rule) over the varint adjacency
     * and the codec distance: candidates admit every live node, results
     * only `allow`-passing ones; the frontier closes once the pool holds
     * ef nodes AND the nearest open candidate can no longer improve it.
+    * Leaves up to `ef` nodes in `s.results`.
     */
   private def searchLayer(
       q: Query, ep: Int, ef: Int, layer: Int,
-      allow: Long => Boolean): mutable.ArrayBuffer[(Double, Int)] = {
+      allow: Long => Boolean, s: BeamScratch): Unit = {
     val allowAll = allow eq HnswIndex.AllowAll
-    val visited = new java.util.BitSet(ids.length)
-    val candidates = new DistHeap(max = false)
-    val results = new DistHeap(max = true, initialCapacity = ef + 2)
+    s.reset()
+    val visited = s.visited
+    val candidates = s.candidates
+    val results = s.results
     visited.set(ep)
     val d0 = dist(q, ep)
     candidates.add(d0, ep)
@@ -161,7 +166,6 @@ abstract class PackedHnsw private[index] (src: HnswIndex) extends Serializable {
         }
       }
     }
-    results.toBuffer
   }
 }
 

@@ -88,11 +88,76 @@ private[index] final class DistHeap(max: Boolean, initialCapacity: Int = 16) {
     }
   }
 
-  /** Drain into (dist, idx) pairs — unsorted heap order. */
-  def toBuffer: scala.collection.mutable.ArrayBuffer[(Double, Int)] = {
-    val out = new scala.collection.mutable.ArrayBuffer[(Double, Int)](n)
-    var i = 0
-    while (i < n) { out += ((ds(i), xs(i))); i += 1 }
-    out
+  def clear(): Unit = n = 0
+
+  /** The i-th entry left by [[drainSorted]]. */
+  def dist(i: Int): Double = ds(i)
+  def node(i: Int): Int = xs(i)
+
+  /** Sort the entries in place ascending by (distance, external id) —
+    * `java.lang.Double.compare` on the distance (-0.0 before 0.0, NaN
+    * last), then `extId(node)` — the order `sortBy { case (d, id) =>
+    * (d, id) }` gives; read them with dist(i)/node(i), i < the returned
+    * count. The heap is empty afterwards. Max-heap only: popping fills
+    * the array from the back (in-place heapsort) in the heap's own
+    * (dist, node) order, and one insertion pass applies the exact order,
+    * which differs from it only at -0.0, NaN and equal distances.
+    */
+  def drainSorted(extId: Int => Long): Int = {
+    val cnt = n
+    while (n > 1) {
+      val d = ds(0); val x = xs(0)
+      pop()
+      ds(n) = d; xs(n) = x
+    }
+    n = 0
+    var i = 1
+    while (i < cnt) {
+      val d = ds(i); val x = xs(i); val id = extId(x)
+      var j = i - 1
+      var shift = true
+      while (shift && j >= 0) {
+        val c = java.lang.Double.compare(ds(j), d)
+        if (c > 0 || (c == 0 && extId(xs(j)) > id)) {
+          ds(j + 1) = ds(j); xs(j + 1) = xs(j); j -= 1
+        } else shift = false
+      }
+      ds(j + 1) = d; xs(j + 1) = x
+      i += 1
+    }
+    cnt
   }
+
+  /** The k nearest as (external id, distance), ascending by
+    * (distance, id) — a search's answer, drained from its result heap.
+    */
+  def topK(k: Int, extId: Int => Long): Seq[(Long, Double)] = {
+    val out = new Array[(Long, Double)](math.max(0, math.min(drainSorted(extId), k)))
+    var i = 0
+    while (i < out.length) { out(i) = (extId(xs(i)), ds(i)); i += 1 }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+  }
+}
+
+/** One beam search's working set: the visited set, the candidate
+  * min-heap and the bounded result max-heap, reset between layers. A
+  * search allocates one per call and never keeps it on the index: a
+  * cached resident shard is one object that concurrent tasks and
+  * threads search at the same time.
+  */
+private[index] final class BeamScratch(graphSize: Int, ef: Int) {
+  val visited = new java.util.BitSet(graphSize)
+  val candidates = new DistHeap(max = false)
+  val results = new DistHeap(max = true, initialCapacity = ef + 2)
+  // one expansion's unvisited neighbors and their distances
+  private var fresh = new Array[Int](64)
+  var dists = new Array[Double](64)
+
+  /** The neighbor buffer, grown to hold `n`; `dists` grows with it. */
+  def batch(n: Int): Array[Int] = {
+    if (n > fresh.length) { fresh = new Array[Int](n); dists = new Array[Double](n) }
+    fresh
+  }
+
+  def reset(): Unit = { visited.clear(); candidates.clear(); results.clear() }
 }

@@ -110,4 +110,34 @@ class HnswIndexSpec extends AnyFunSuite {
     assert(stats.map(_._2).sum == 200) // every node counted at its own level
     assert(stats.head._3 > 0.0)        // layer 0 has connections
   }
+
+  test("concurrent searches of one index match a sequential run and count every search") {
+    val idx = new HnswIndex(dim = 16, m = 8, efConstruction = 64, seed = 3L)
+    val vecs = randomVectors(1500, 16, seed = 9L)
+    vecs.zipWithIndex.foreach { case (v, i) => idx.insert(i.toLong, v) }
+    (0 until 1500 by 9).foreach(i => idx.delete(i.toLong))
+    val queries = randomVectors(500, 16, seed = 10L)
+    val allow: Long => Boolean = _ % 2 == 0
+    // alternate plain and filtered searches so the scratch of both shapes races
+    def run(t: Int, i: Int): Seq[(Long, Double)] =
+      if ((t + i) % 2 == 0) idx.search(queries(i), 10)
+      else idx.searchFiltered(queries(i), 10, allow)
+    val expected = (0 until 4).map(t => queries.indices.map(i => run(t, i)))
+    val before = idx.totalSearches
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val futures = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[IndexedSeq[Seq[(Long, Double)]]] {
+          def call(): IndexedSeq[Seq[(Long, Double)]] = {
+            start.await()
+            queries.indices.map(i => run(t, i))
+          }
+        })
+      }
+      start.countDown()
+      futures.zip(expected).foreach { case (f, exp) => assert(f.get() == exp) }
+    } finally pool.shutdown()
+    assert(idx.totalSearches - before == 2000L)
+  }
 }

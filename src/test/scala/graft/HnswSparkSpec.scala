@@ -78,4 +78,37 @@ class HnswSparkSpec extends SparkSpec {
     val self = out.where(col("query_id") === col("vec_id")).collect()
     assert(self.length == 3 && self.forall(_.getDouble(2) < 1e-5))
   }
+
+  test("searchAllPar equals searchAll and the sorted concatenation of shard answers") {
+    val rnd = new java.util.Random(17)
+    def vec(): Array[Double] = Array.fill(8)(rnd.nextGaussian())
+    def shards(n: Int): IndexedSeq[HnswIndex] = (0 until n).map { s =>
+      val ix = new HnswIndex(dim = 8, m = 6, efConstruction = 40, seed = s.toLong)
+      (0 until 150).foreach(i => ix.insert(s * 1000L + i, vec()))
+      ix
+    }
+    val one = shards(1)
+    val four = shards(4)
+    // equal distances across shards: one vector under a different id in each
+    val twin = vec()
+    four.zipWithIndex.foreach { case (ix, s) => ix.insert(9000L + s, twin) }
+    val emptied = shards(4)
+    (0 until 150).foreach(i => emptied(2).delete(2000L + i))
+    assert(emptied(2).size == 0)
+    val small = shards(3)
+    small.zipWithIndex.foreach { case (ix, s) =>
+      (5 until 150).foreach(i => ix.delete(s * 1000L + i))
+    }
+    val queries = Seq.fill(20)(vec()) :+ twin
+    for ((ixs, k) <- Seq((one, 10), (four, 10), (four, 1), (emptied, 10), (small, 40));
+         q <- queries) {
+      val par = HnswSpark.searchAllPar(ixs, q, k)
+      val concat = ixs.flatMap(_.search(q, k)).sortBy { case (id, d) => (d, id) }.take(k)
+      assert(par == HnswSpark.searchAll(ixs, q, k))
+      assert(par == concat)
+    }
+    // k above the 15 live ids: every id the unrelinked graphs still reach
+    val all = HnswSpark.searchAllPar(small, queries.head, 40)
+    assert(all.nonEmpty && all.length <= 15 && all.map(_._1).distinct == all.map(_._1))
+  }
 }
