@@ -154,7 +154,7 @@ object AbBench {
         .select(col("doc_id"), col("fps").as("ss"))
       med("fps_noop") { sets0.write.format("noop").mode("overwrite").save() }
       med("cand") {
-        val cached = CacheTracker.register(sets0.persist())
+        val cached = CacheTracker.pin(sets0)
         operators.Dedup.setCandidatePairs(cached,
           sa => greatest(sa - lit(29), lit(1)), (_, _) => lit(30), q = 8)
           .count()

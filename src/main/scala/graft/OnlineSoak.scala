@@ -275,16 +275,13 @@ object OnlineSoak {
     val query = stream.toDF().toDF("seq", "op", "doc_id", "ver")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        def tracked(df: DataFrame): DataFrame = {
-          val p = df.persist(); graft.CacheTracker.register(p); p
-        }
         // in-batch resolution: the latest op per doc wins
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id")).orderBy(col("seq").desc)
         val resolved = batch
           .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        val touched = tracked(resolved.select(col("doc_id")).distinct())
-        val adds = tracked(enrich(resolved.where(col("op") === "add")
+        val touched = graft.CacheTracker.pin(resolved.select(col("doc_id")).distinct())
+        val adds = graft.CacheTracker.pin(enrich(resolved.where(col("op") === "add")
           .select(col("doc_id"), col("ver"))))
         // every frame persisted in this loop is MUTATION-sized; the
         // corpus lives in the tables and is only ever streamed over
@@ -293,7 +290,7 @@ object OnlineSoak {
         // affected fingerprints: the touched docs' OLD fps — from the
         // doc-bucketed secondary index, pruned to the touched doc
         // buckets — plus the adds' new fps
-        val affectedFps = tracked(
+        val affectedFps = graft.CacheTracker.pin(
           docmapT.readBuckets(touchedDb)
             .join(broadcast(touched), Seq("doc_id")).select(col("fp"))
             .unionByName(adds.select(col("fp"))).distinct())
@@ -307,10 +304,10 @@ object OnlineSoak {
           .join(broadcast(touched), Seq("doc_id"), "left_anti")
           .unionByName(adds.withColumn(B, fpB(col("fp"))))
         // keeper re-resolution over ONLY the affected fingerprints
-        val curatedAdd = tracked(gateRows(keepers(
+        val curatedAdd = graft.CacheTracker.pin(gateRows(keepers(
           stageVis.join(broadcast(affectedFps), Seq("fp")))))
         val curAff = curatedT.readBuckets(affFpB)
-        val removedIds = tracked(
+        val removedIds = graft.CacheTracker.pin(
           curAff.join(broadcast(affectedFps), Seq("fp"))
             .select(col("doc_id").as("vec_id")))
         val stageCur = curAff
@@ -318,7 +315,7 @@ object OnlineSoak {
           .unionByName(curatedAdd)
         // code table: the affected vec buckets lose the removed ids'
         // codes and gain the re-encoded curated adds
-        val affIds = tracked(removedIds.unionByName(
+        val affIds = graft.CacheTracker.pin(removedIds.unionByName(
           curatedAdd.select(col("doc_id").as("vec_id"))).distinct())
         val affVb = affIds.select(idB(col("vec_id")).as("vb"))
           .distinct().collect().map(_.getInt(0)).toSeq

@@ -58,9 +58,9 @@ object PipelineSoak {
       i => (pmod(xxhash64(k * 67 + i), lit(2001)) - 1000).cast("double") / 1000.0)
 
   def opsSoak(spark: SparkSession, n: Long): Unit = {
-    val docs = CacheTracker.register(
-      synthDocs(spark, n, tokensPerDoc = 100, vocab = 2000000).persist())
-    docs.count() // materialize generation outside the timed windows
+    // generated outside the timed windows
+    val docs = CacheTracker.fill(
+      synthDocs(spark, n, tokensPerDoc = 100, vocab = 2000000))
 
     // --- vocabulary construction at ~2M distinct tokens ---------------
     val (vstats, vocabSec) = timed {
@@ -88,7 +88,7 @@ object PipelineSoak {
     // week 0..15 — so FIRST events (cohorts) genuinely spread across
     // ~16 weeks instead of min-of-50-uniforms collapsing them into week 0
     val week = 7L * 24 * 3600
-    val events = CacheTracker.register(spark.range(nEvents).select(
+    val events = CacheTracker.fill(spark.range(nEvents).select(
       (col("id") % 200000).as("user_id"),
       timestamp_seconds(lit(1704067200L) + // 2024-01-01
         pmod(xxhash64(col("id") % 200000), lit(16)) * week +
@@ -96,8 +96,7 @@ object PipelineSoak {
       when(pmod(xxhash64(col("id") * 7 + 2), lit(10)) < 5, "view")
         .when(pmod(xxhash64(col("id") * 7 + 2), lit(10)) < 8, "click")
         .otherwise("purchase").as("event_type"),
-      lit(1.0).as("value")).persist())
-    events.count()
+      lit(1.0).as("value")))
     val (funnelRows, funnelSec) = timed {
       Behavior.funnel(events, Seq("view", "click", "purchase")).collect()
     }
@@ -117,12 +116,11 @@ object PipelineSoak {
     // --- semantic decontamination scan with planted leaks -------------
     val bench = spark.range(100).select(
       col("id").as("vec_id"), hashVec(col("id") + 10000000L).as("embedding"))
-    val train = CacheTracker.register(spark.range(n).select(
+    val train = CacheTracker.fill(spark.range(n).select(
       col("id").as("vec_id"),
       when(col("id") % 5000 === 0,
         hashVec((col("id") / 5000).cast("long") % 100 + 10000000L))
-        .otherwise(hashVec(col("id"))).as("embedding")).persist())
-    train.count()
+        .otherwise(hashVec(col("id"))).as("embedding")))
     val (flagged, scanSec) = timed {
       Decontamination.semanticScan(train, bench, eps = 0.001).collect()
     }
@@ -171,8 +169,7 @@ object PipelineSoak {
       col("doc_id"),
       concat_ws(" ", transform(sequence(lit(0), lit(7)),
         j => concat(lit("b"), (col("doc_id") - 10000000L) * 100 + j))).as("text"))
-    val docs = CacheTracker.register(pipelineCorpus(spark, n).persist())
-    docs.count()
+    val docs = CacheTracker.fill(pipelineCorpus(spark, n))
     // embeddings over train ∪ bench ids; id % 2500 == 13 copies a bench vector
     val emb = docs.select(col("doc_id").as("vec_id")).select(
       col("vec_id"),
@@ -203,7 +200,7 @@ object PipelineSoak {
     // run 2: per-stage attrition (counts force each boundary once)
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val packed = assemble((name, df) => stages(name) = df.count())
-    val packedDocs = CacheTracker.register(packed.persist())
+    val packedDocs = CacheTracker.pin(packed)
     val nPacked = packedDocs.count()
     // planted populations must be absent from the admitted set
     val admittedIds = packedDocs.select(col("doc_id"))
@@ -237,14 +234,12 @@ object PipelineSoak {
     val jitter = transform(sequence(lit(0), lit(63)),
       i => (pmod(xxhash64(col("id") * 101 + i), lit(2001)) - 1000)
         .cast("double") / 10000.0) // 10% of center scale
-    val vecs = CacheTracker.register(spark.range(n).select(
+    val vecs = CacheTracker.fill(spark.range(n).select(
       col("id").as("vec_id"),
-      zip_with(center, jitter, (a, b) => a + b).as("embedding")).persist())
-    vecs.count()
-    val queries = CacheTracker.register(
+      zip_with(center, jitter, (a, b) => a + b).as("embedding")))
+    val queries = CacheTracker.fill(
       vecs.where(col("vec_id") < 100)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv")).persist())
-    queries.count()
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
 
     val (am, buildSec) = timed {
       val m = IvfTrained.train(vecs, nCentroids = nClusters, spherical = true)
@@ -281,11 +276,11 @@ object PipelineSoak {
   def mediaSoak(spark: SparkSession, n: Long): Unit = {
     import spark.implicits._
     import graft.operators.Multimodal
-    val media = CacheTracker.register(spark.range(n).as[Long].map { id =>
+    val media = CacheTracker.pin(spark.range(n).as[Long].map { id =>
       val w = (16 + id % 48).toInt
       val h = (16 + (id * 7) % 48).toInt
       (id, "image/png", Multimodal.buildPngPixels(id, w, h))
-    }.toDF("media_id", "media_type", "content").persist())
+    }.toDF("media_id", "media_type", "content"))
     val nBytes = media.agg(sum(length(col("content")))).first().getLong(0)
     val (dstats, decodeSec) = timed {
       Multimodal.extractPixelStats(spark, media)
@@ -297,9 +292,8 @@ object PipelineSoak {
       s""""fixture_mb":${nBytes / 1000000},"megapixels":${f"$mpx%.0f"},""" +
       s""""sec":${f"$decodeSec%.1f"},"mpx_per_sec":${f"${mpx / decodeSec}%.0f"}}""")
     CacheTracker.releaseAll()
-    val mixed = CacheTracker.register(Multimodal.synthesizeMixedImageTable(
-      spark, spark.range(n).select(col("id").as("doc_id"))).persist())
-    mixed.count()
+    val mixed = CacheTracker.fill(Multimodal.synthesizeMixedImageTable(
+      spark, spark.range(n).select(col("id").as("doc_id"))))
     val (prof, profSec) = timed {
       Multimodal.mediaProfile(spark, mixed).collect()
     }

@@ -291,21 +291,16 @@ object SparkEntry {
   private def knnGraphFor(s: SparkSession, d: String): DataFrame = {
     val g = GraftSession.memo(s, s"knn_graph $d")(
       Ivf.knnGraph(Tables.embeddings(s, d), k = 5, nCentroids = 16, nProbe = 4))
-    // (Re-)pin and materialize whenever the frame is not currently
-    // cached: the session owner's releaseAll() between queries unpersists
-    // the memoized frame, and an unpersisted graph would (a) recompute
+    // (Re-)fill whenever the frame is not currently cached: the session
+    // owner's releaseAll() between queries unpersists the memoized
+    // frame, and an unpersisted graph would (a) recompute
     // the candidate join once PER REFERENCE in multi-pass consumers
     // (triangle census, label prop) and (b) feed the label-prop gate the
     // cross-join-inflated pre-materialization stats instead of the real
     // cached size — misrouting fixture-scale graphs onto the 30-stage
     // distributed path (measured: label_propagation 9.4 s → 2.1 s at
     // sf0.1 once the gate sees the cached size again).
-    if (g.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      g.persist()
-      graft.CacheTracker.register(g)
-      g.count()
-    }
-    g
+    graft.CacheTracker.fill(g)
   }
 
   /** The ids knn_graph_refreshed and knn_graph_tables_refreshed hold out

@@ -31,10 +31,10 @@ object Behavior {
     val e = events.select(
       col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"))
     // reached(i): (user_id, t) = earliest time the user completed stage i.
-    // Each frame is PERSISTED (CacheTracker-registered): stage i+1's join
-    // and stage i's count both consume reached(i), and without the cache
-    // the chain re-executes its whole prefix per consumer — O(stages²)
-    // event-table scans for a k-stage funnel
+    // Each frame is pinned: stage i+1's join and stage i's count both
+    // consume reached(i), and without the cache the chain re-executes
+    // its whole prefix per consumer — O(stages²) event-table scans for
+    // a k-stage funnel
     val reached = stages.zipWithIndex.scanLeft(Option.empty[DataFrame]) {
       case (prev, (stage, _)) =>
         val evs = e.where(col("event_type") === stage)
@@ -46,7 +46,7 @@ object Behavior {
               .where(col("t") > col("tp"))
               .groupBy(col("user_id")).agg(min(col("t")).as("t"))
         }
-        Some(graft.CacheTracker.register(r.persist()))
+        Some(graft.CacheTracker.pin(r))
     }.flatten
     val counts = stages.zip(reached).zipWithIndex.map {
       case ((stage, r), i) =>

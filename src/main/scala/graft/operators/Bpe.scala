@@ -80,21 +80,16 @@ object Bpe {
       .as[(String, Long)]
     val localMax = spark.conf
       .getOption("spark.graft.bpe.localVocabMax").map(_.toLong).getOrElse(200000L)
-    val wordsCached = words.persist()
-    // same cached plan: releasing the registered DF frees the Dataset too
-    graft.CacheTracker.register(wordsCached.toDF())
+    val wordsCached = graft.CacheTracker.pin(words)
     if (wordsCached.count() <= localMax)
       return localBpeMerges(spark, wordsCached.collect().toSeq, k)
-    // symbolize: word -> its character symbols + the end marker. Every
-    // per-iteration persist is ALSO CacheTracker-registered: the manual
-    // step-by-step unpersists below keep storage flat on the happy path,
-    // and a mid-loop job failure still gets cleaned by releaseAll()
-    // instead of leaking the in-flight iteration's cache
+    // symbolize: word -> its character symbols + the end marker. The
+    // step-by-step unpersists below keep storage flat on the happy path;
+    // a mid-loop job failure leaves the in-flight iteration's cache to
+    // releaseAll()
     var vocab: Dataset[(Seq[String], Long)] = wordsCached
       .map { case (w, n) => (symbols(w) :+ EndOfWord: Seq[String], n) }
-      .persist()
-    graft.CacheTracker.register(vocab.toDF())
-    vocab.count()
+    graft.CacheTracker.fill(vocab)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
     var exhausted = false
@@ -124,9 +119,8 @@ object Bpe {
             } else { out += syms(i); i += 1 }
           }
           (out.result(), n)
-        }.persist()
-        graft.CacheTracker.register(next.toDF())
-        next.count() // materialize before releasing the predecessor
+        }
+        graft.CacheTracker.fill(next) // before releasing the predecessor
         vocab.unpersist()
         vocab = next
         rank += 1
@@ -214,12 +208,10 @@ object Bpe {
       .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
       .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("wn"))
-    val encoded = words.as[(String, Long)]
+    // read twice: subword-vocabulary build + corpus join
+    graft.CacheTracker.pin(words.as[(String, Long)]
       .map { case (w, n) => (w, n, encodeWord(w, bc.value)) }
-      .toDF("word", "wn", "subwords")
-      .persist() // read twice: subword-vocabulary build + corpus join
-    graft.CacheTracker.register(encoded)
-    encoded
+      .toDF("word", "wn", "subwords"))
   }
 
   // subword corpus frequency = Σ containing-word counts — identical to

@@ -62,8 +62,8 @@ object Coreset {
     var center = first.getSeq[Double](1).toArray
     // state: min distance to the chosen set so far, updated by one
     // narrow map per round (md already rounded; least() preserves it)
-    var state = base.select(col("vec_id"), col("v"), d(center).as("md"))
-      .persist()
+    var state = graft.CacheTracker.pin(
+      base.select(col("vec_id"), col("v"), d(center).as("md")))
     var rank = 2L
     while (rank <= k) {
       // argmax of (md, smaller-id tiebreak); v rides along so the round
@@ -75,11 +75,10 @@ object Coreset {
         .head()
       picks += ((rank, top.getLong(1), top.getDouble(0)))
       center = top.getSeq[Double](2).toArray
-      val next = state
+      // filled before dropping the parent
+      val next = graft.CacheTracker.fill(state
         .select(col("vec_id"), col("v"),
-          least(col("md"), d(center)).as("md"))
-        .persist()
-      next.count() // materialize before dropping the parent
+          least(col("md"), d(center)).as("md")))
       state.unpersist(blocking = false)
       state = next
       rank += 1

@@ -63,12 +63,11 @@ object CorpusStats {
         explode(VectorFunctions.wordShingles(col("text"), n)).as("shingle"))
       .groupBy(col("shingle"))
       .agg(sort_array(collect_set(col("source"))).as("srcs"))
-      .persist() // read twice: per-source sizes + pair counts
-    graft.CacheTracker.register(bySh)
+    // read twice: per-source sizes + pair counts
     // populate before the two consumers' concurrent first-scans (the
     // self-join wave lesson): an unpopulated cache would run the
     // corpus-sized shingle shuffle + collect_set twice
-    bySh.count()
+    graft.CacheTracker.fill(bySh)
     val sizes = bySh
       .select(explode(col("srcs")).as("source"))
       .groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
@@ -110,10 +109,9 @@ object CorpusStats {
     // cached because both the postings explode and the per-doc sizes
     // read it — without the cache the tokenize+shingle pass (the
     // dominant per-row cost) runs twice over the corpus.
-    val sets = graft.CacheTracker.register(docs
+    val sets = graft.CacheTracker.pin(docs
       .select(col("doc_id"),
-        VectorFunctions.wordShingles(col("text"), n).as("ss"))
-      .persist())
+        VectorFunctions.wordShingles(col("text"), n).as("ss")))
     val novel = sets
       .select(col("doc_id"), explode(col("ss")).as("shingle"))
       .groupBy(col("shingle")).agg(min(col("doc_id")).as("first_seen"))

@@ -192,8 +192,8 @@ object Dedup {
             lit(s"(doc_id in [0, ${Long.MaxValue / MaxPassages}), pidx < $MaxPassages): "),
             col("doc_id"), lit(", "), col("pidx"))))
           .otherwise(col("doc_id") * MaxPassages + col("pidx")))
-      .persist() // read by the argmin, the keeper join, and the per-doc sizes
-    graft.CacheTracker.register(passages)
+    // read by the argmin, the keeper join, and the per-doc sizes
+    graft.CacheTracker.pin(passages)
     val firstSeen = passages
       .groupBy(col("passage"))
       .agg(min(col("__okey")).as("__keeper"))
@@ -342,19 +342,17 @@ object Dedup {
         }
       }
     }
-    val edges = pairs
+    val edges = graft.CacheTracker.pin(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
+      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     // labels carries a per-row __changed marker computed IN the round's
     // own plan (old and new label are both in scope there), so the
     // convergence probe is a filter-count on the round's cache instead of
     // a separate join against the previous table — one action, no
     // shuffle, per round
-    var labels = vertices
+    var labels = graft.CacheTracker.pin(vertices
       .select(col("doc_id"), col("doc_id").as("cluster_id"),
-        lit(false).as("__changed"))
-      .persist()
+        lit(false).as("__changed")))
     var converged = false
     var iter = 0
     val changedCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -410,7 +408,8 @@ object Dedup {
       })
         .select(col("doc_id"), col("new_cluster_id").as("cluster_id"),
           (col("new_cluster_id") =!= col("old_cluster_id")).as("__changed"))
-      val next = spark.createDataFrame(nextPlan.rdd, nextPlan.schema).persist()
+      val next = graft.CacheTracker.pin(
+        spark.createDataFrame(nextPlan.rdd, nextPlan.schema))
       // FULL-count convergence probe (not limit(1)): the count scans every
       // partition, fully materializing `next`'s cache BEFORE the previous
       // round's cache is released below — a partial probe would leave
@@ -428,13 +427,11 @@ object Dedup {
     // maxIter hops keeps stale minima) and downstream dedup would admit
     // duplicates — fail loudly; callers with genuinely deep graphs raise
     // maxIter (rounds needed = component diameter)
-    if (!converged) {
-      labels.unpersist(blocking = false) // don't leak the cache on throw
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           "a component needs more than 2^maxIter hops of reach; raise maxIter")
-    }
-    (graft.CacheTracker.register(labels).drop("__changed"),
+    (labels.drop("__changed"),
       CcStats(iter, changedCounts.toSeq))
   }
 
@@ -498,7 +495,7 @@ object Dedup {
     // cache the sets like setPairCounts' scale path does: the inverted
     // index reads them twice (df pass + prefix rank) and without the
     // cache the tokenize+shingle pass runs once per read
-    val sets = graft.CacheTracker.register(shingleSets(docs, n).persist())
+    val sets = graft.CacheTracker.pin(shingleSets(docs, n))
     setCandidatePairs(sets, prefixLen, overlapFloor)
   }
 
@@ -568,12 +565,11 @@ object Dedup {
     // prefix-sized subset of the postings) but its lineage carries the
     // df aggregate + the per-doc rank window — re-running those on each
     // side of the self-join would double two shuffles
-    val prefix = graft.CacheTracker.register(sh
+    val prefix = graft.CacheTracker.pin(sh
       .join(dfreq, Seq("__key"))
       .withColumn("__pos", row_number().over(byRarity))
       .where(col("__pos") <= prefixLen(col("n_shingles")) + lit(q - 1))
-      .select(col("doc_id"), col("n_shingles"), col("__key"), col("__pos"))
-      .persist())
+      .select(col("doc_id"), col("n_shingles"), col("__key"), col("__pos")))
     val a = prefix.select(col("doc_id").as("doc_a"), col("n_shingles").as("sa"),
       col("__key"), col("__pos").as("pa"))
     val b = prefix.select(col("doc_id").as("doc_b"), col("n_shingles").as("sb"),
@@ -732,10 +728,10 @@ object Dedup {
       // index (df pass + prefix rank) AND both verify sides — without the
       // cache the set computation (tokenize+shingle or the winnow hash
       // pass) runs three times over the corpus
-      // persist only (NO populating count: pair-frame construction is
-      // action-free by contract, PlanSpec — the first consumer stage
-      // populates; concurrent-first-scan duplication is accepted here)
-      val cached = graft.CacheTracker.register(sets.persist())
+      // pin, not fill: pair-frame construction is action-free by
+      // contract (PlanSpec) — the first consumer stage populates;
+      // concurrent-first-scan duplication is accepted here
+      val cached = graft.CacheTracker.pin(sets)
       val cand = setCandidatePairs(cached, prefixLen, overlapFloor, q)
       val withA = cached
         .join(cand, cached("doc_id") === cand("doc_a"))
@@ -826,11 +822,10 @@ object Dedup {
     // cached: postings feed BOTH the df aggregate and the coverage join,
     // so the all-kgram hash pass materializes once — a single heavy
     // consumer, the Tables.fanOut contract
-    val postings = graft.CacheTracker.register(
+    val postings = graft.CacheTracker.pin(
       TextAnalysis.winnowFingerprints(graft.Tables.fanOut(docs), k, w = 1)
         .select(col("doc_id"), size(col("fps")).cast("long").as("n_kgrams"),
-          explode(col("fps")).as("fp"))
-        .persist())
+          explode(col("fps")).as("fp")))
     val shared = postings
       .groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .where(col("df") >= 2)
@@ -909,8 +904,8 @@ object Dedup {
       .where(abs(length(col("ta")) - length(col("tb"))) <= maxDist)
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("ta"), col("tb"), maxDist).cast("long").as("edit_distance"))
-      .persist() // pushdown barrier: the DP runs once, at materialization
-    graft.CacheTracker.register(withBoth)
+    // pushdown barrier: the DP runs once, at materialization
+    graft.CacheTracker.pin(withBoth)
     withBoth
       .where(col("edit_distance") >= 0) // banded DP marks > threshold as -1
       .orderBy(col("doc_a"), col("doc_b"))
@@ -959,9 +954,9 @@ object Dedup {
     val keyed = docs.select(col("doc_id"),
       lower(trim(col("text"))).as("__k"),
       VectorFunctions.wordShingles(col("text"), n).as("ss"))
-    val ranked = graft.CacheTracker.register(
+    val ranked = graft.CacheTracker.pin(
       PrefixSum.runningSum(keyed,
-        Seq(col("__k"), col("doc_id")), lit(1L), "rank").persist())
+        Seq(col("__k"), col("doc_id")), lit(1L), "rank"))
     val left = ranked
       .select(col("doc_id").as("id_a"), col("ss").as("ssa"),
         posexplode_outer(sequence(lit(1L), lit((window - 1).toLong)))
@@ -1046,12 +1041,9 @@ object Dedup {
       VectorFunctions.l2Normalize(col(vecCol)).as("nv"))
     val bucketed = normed.withColumn(
       "bucket", floor(projection(col("nv"), dim) / width).cast("long"))
-      .persist() // self-joined: normalize + projection run once per vector
-    graft.CacheTracker.register(bucketed)
-    // populate BEFORE the self-join fans out: two concurrent first-scans
-    // of an unpopulated cache each recompute the upstream pass (the
-    // triangleStats/KnnGraphTables wave lesson)
-    bucketed.count()
+    // self-joined: normalize + projection run once per vector, populated
+    // before the self-join fans out
+    graft.CacheTracker.fill(bucketed)
     val a = bucketed.select(
       col(idCol).as("id_a"), col("nv").as("va"),
       explode(array(col("bucket") - 1, col("bucket"), col("bucket") + 1)).as("probe"),
@@ -1114,9 +1106,7 @@ object Dedup {
       // both the band join and the expansion read this narrow frame;
       // without the cache the MinHash signature pass (the dominant
       // cost) runs once per concurrent first scan
-      .persist()
-    graft.CacheTracker.register(withGid)
-    withGid.count() // populate before the four concurrent consumers
+    graft.CacheTracker.fill(withGid) // before the four concurrent consumers
     val banded = withGid.where(col("doc_id") === col("gid"))
       .select(
         col("gid"),
@@ -1214,8 +1204,7 @@ object Dedup {
       // both the signature pass and the pair verification read the
       // shingle sets; cache the narrow frame so the split+slice pass
       // runs once
-      .persist()
-    graft.CacheTracker.register(sh)
+    graft.CacheTracker.pin(sh)
     // signature = 16 min-aggregates over the EXPLODED shingle hashes
     // instead of 1+numHashes higher-order `transform`s per doc: HOF
     // lambdas run interpreted with per-element boxing (no whole-stage
@@ -1251,9 +1240,9 @@ object Dedup {
       .partitionBy(col("sig"))
     val withGid = sig
       .withColumn("gid", min(col("doc_id")).over(w))
-      .persist() // the 16-md5-per-shingle pass runs once
-    graft.CacheTracker.register(withGid)
-    withGid.count() // populate before the self-join's concurrent scans
+    // the 16-md5-per-shingle pass runs once, before the self-join's
+    // concurrent scans
+    graft.CacheTracker.fill(withGid)
     val banded = withGid.where(col("doc_id") === col("gid"))
       .select(
         col("gid"),
@@ -1352,9 +1341,8 @@ object Dedup {
       .partitionBy(col("c0"), col("c1"), col("c2"), col("c3"))
     val withGid = simhashChunksPortable(docs)
       .withColumn("gid", min(col("doc_id")).over(w))
-      .persist() // feeds reps, the expansion joins and the intra pairs
-    graft.CacheTracker.register(withGid)
-    withGid.count() // populate before concurrent consumers
+    // feeds reps, the expansion joins and the intra pairs
+    graft.CacheTracker.fill(withGid)
     val banded = withGid.where(col("doc_id") === col("gid"))
       .select(col("gid"), col("c0"), col("c1"), col("c2"), col("c3"),
         posexplode(array(col("c0"), col("c1"), col("c2"), col("c3")))
@@ -1410,9 +1398,8 @@ object Dedup {
       .partitionBy(col("simhash"))
     val withGid = simhash(docs)
       .withColumn("gid", min(col("doc_id")).over(w))
-      .persist() // feeds reps, the expansion joins and the intra pairs
-    graft.CacheTracker.register(withGid)
-    withGid.count() // populate before concurrent consumers
+    // feeds reps, the expansion joins and the intra pairs
+    graft.CacheTracker.fill(withGid)
     val banded = withGid.where(col("doc_id") === col("gid"))
       .select(col("gid"), col("simhash"),
         posexplode(array((0 until 4).map(c =>

@@ -168,8 +168,7 @@ object Dsir {
     // scoring join — cache it or the tokenize + explode + count runs
     // twice (the bigramSurprisal lesson; ≤ min(tokens, buckets) rows
     // per doc, spillable at corpus scale)
-    val rawFeats = features(raw, buckets).persist()
-    graft.CacheTracker.register(rawFeats)
+    val rawFeats = graft.CacheTracker.pin(features(raw, buckets))
     val lr = bucketLogRatiosFrom(rawFeats, features(target, buckets), buckets)
       .select(col("bucket"), col("lr"))
     rawFeats

@@ -96,13 +96,11 @@ object GraphOps {
     val und = e
       .select(least(col("s"), col("d")).as("u"), greatest(col("s"), col("d")).as("v"))
       .distinct()
-      .persist()
-    graft.CacheTracker.register(und)
+    graft.CacheTracker.pin(und)
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .persist()
-    graft.CacheTracker.register(deg)
+    graft.CacheTracker.pin(deg)
     // orient from the (deg, id)-smaller endpoint to the larger — the
     // explicit compare (not a struct order) so the SQL twin is term-equal
     // db (the oriented head's degree) needs no third deg join: the head
@@ -118,8 +116,6 @@ object GraphOps {
         when(keepUV, col("u")).otherwise(col("v")).as("a"),
         when(keepUV, col("v")).otherwise(col("u")).as("b"),
         when(keepUV, col("dv")).otherwise(col("du")).as("db"))
-      .persist()
-    graft.CacheTracker.register(oriented)
     // materialize the three-consumer cache BEFORE the wedge join fans
     // out: AQE schedules the x/y/semi scans concurrently, and three
     // first-scans of an unpopulated cache each recompute the whole
@@ -127,7 +123,7 @@ object GraphOps {
     // measured ~31 CPU-s on a 2,500-edge fixture graph, ~3× the
     // necessary work). One bounded count populates und/deg/oriented in
     // a single pass; every downstream scan then reads the cache.
-    oriented.count()
+    graft.CacheTracker.fill(oriented)
     // wedges at the oriented source, legs ordered by the same total
     // order, closed by the (leg1 → leg2) oriented edge
     val triangles = oriented.as("x")
@@ -208,16 +204,14 @@ object GraphOps {
       case None => stats.sizeInBytes <= BigInt(byteGate)
     }
     if (small) return labelPropagationLocal(eRaw, s, iterations)
-    val e = eRaw.repartition(col("src")).persist()
-    graft.CacheTracker.register(e)
+    val e = graft.CacheTracker.pin(eRaw.repartition(col("src")))
     val nodes = e.select(col("src").as("node_id")).distinct()
     var labels = nodes
       .join(s, Seq("node_id"), "left")
       .select(col("node_id"),
         coalesce(col("slabel"), lit(-1L)).as("lab"),
         col("slabel").isNotNull.as("is_seed"))
-      .persist()
-    graft.CacheTracker.register(labels)
+    graft.CacheTracker.pin(labels)
     (1 to iterations).foreach { _ =>
       val best = e
         .join(labels.select(col("node_id").as("dst"), col("lab").as("nl")), "dst")
@@ -233,8 +227,7 @@ object GraphOps {
             .when(col("vote").isNotNull, col("vote"))
             .otherwise(col("lab")).as("lab"),
           col("is_seed"))
-        .persist()
-      graft.CacheTracker.register(labels)
+      graft.CacheTracker.pin(labels)
     }
     labels
       // neither side is ever null (node ids exist, −1 is the unlabeled
@@ -318,8 +311,7 @@ object GraphOps {
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .repartition(col("src"))
-      .persist()
-    graft.CacheTracker.register(e)
+    graft.CacheTracker.pin(e)
     val allNodes = e.select(col("src").as("node_id")).distinct()
     // is_seed marks where initial mass and teleport land; the global
     // walk seeds everywhere (is_seed = true for every node)
@@ -331,8 +323,8 @@ object GraphOps {
         allNodes.join(s, Seq("node_id"), "left")
           .select(col("node_id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
       case None => allNodes.withColumn("is_seed", lit(true))
-    }).persist()
-    graft.CacheTracker.register(nodes)
+    })
+    graft.CacheTracker.pin(nodes)
     // n = the TELEPORT population (seed count), not the node count.
     // It is a single bounded scalar and the sanity check below already
     // pulls it to the driver — inline it as a LITERAL instead of the

@@ -109,9 +109,7 @@ object Hybrid {
       .join(broadcast(qterms.select(col("token")).distinct()), Seq("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).cast("double").as("tf"))
-      .persist()
-    graft.CacheTracker.register(tf)
-    tf.count() // populate before the df aggregate + score join race
+    graft.CacheTracker.fill(tf) // before the df aggregate + score join race
     val df = tf.groupBy(col("token")).agg(count(lit(1)).cast("double").as("df"))
     val lexScored = tf.join(df, Seq("token"))
       .join(broadcast(qterms), Seq("token")) // fan out per querying query
@@ -199,9 +197,7 @@ object Hybrid {
       .join(broadcast(qterms), Seq("token")) // prune BEFORE the shuffle
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).cast("double").as("tf"))
-      .persist()
-    graft.CacheTracker.register(tf)
-    tf.count() // populate before the df aggregate + score join race
+    graft.CacheTracker.fill(tf) // before the df aggregate + score join race
     val df = tf.groupBy(col("token")).agg(count(lit(1)).cast("double").as("df"))
     tf.join(df, Seq("token"))
       .join(dl, Seq("doc_id"))

@@ -284,8 +284,8 @@ object Ivf {
         (col("pos") + 1).cast("long").as("rank"))
   }
 
-  /** [[knnGraph]] returning BOTH artifacts (the ranked frame is cached;
-    * CacheTracker-registered) so callers can hand them to
+  /** [[knnGraph]] returning BOTH artifacts (the ranked frame is
+    * filled) so callers can hand them to
     * [[knnGraphRefresh]] instead of rebuilding on every corpus delta.
     */
   def knnGraphBuild(
@@ -301,12 +301,11 @@ object Ivf {
       "k, nCentroids and nProbe must be >= 1")
     val normed = knnNormed(emb, idCol, vecCol)
     val ranked = knnRanked(normed, knnCents(normed, idCol, nCentroids),
-      nProbe, idCol).persist()
-    graft.CacheTracker.register(ranked)
+      nProbe, idCol)
     // populate before knnEdges scans ranked from BOTH join sides: two
     // concurrent first-scans of the unpopulated cache each recompute
     // the corpus x centroids ranking pass (the self-join wave lesson)
-    ranked.count()
+    graft.CacheTracker.fill(ranked)
     KnnGraphState(ranked, knnEdges(ranked, ranked, k, saltFactor))
   }
 
@@ -371,8 +370,7 @@ object Ivf {
       nProbe: Int): DataFrame = {
     val edges = knnGraph(emb, k, nCentroids, nProbe)
       .select(col("src_id"), col("nbr_id"))
-      .persist()
-    graft.CacheTracker.register(edges)
+    graft.CacheTracker.pin(edges)
     knnGraphStatsFromEdges(edges)
   }
 

@@ -231,8 +231,7 @@ object IvfTrained {
     val cosineSpace = resolveSpace(metricName, m)
     val metric: (Column, Column) => Column =
       if (cosineSpace) VectorFunctions.cosine else VectorFunctions.euclidean
-    val assigned = graft.CacheTracker.register(
-      assignWithDist(emb, m, idCol, vecCol).persist())
+    val assigned = graft.CacheTracker.pin(assignWithDist(emb, m, idCol, vecCol))
     val cells = exactCandidateCells(
       assigned, query, m, k, nProbeSeed, metric, cosineSpace, idCol, vecCol)
     assigned
@@ -281,14 +280,14 @@ object IvfTrained {
     // serving keeps the assignment as a long-lived artifact (the same
     // lifecycle as the resident HNSW shards) and passes it in; ad-hoc
     // calls build and cache it for the duration of this query
-    val assigned = preAssigned.getOrElse(graft.CacheTracker.register(
-      assignWithDist(emb, m, idCol, vecCol).persist()))
+    val assigned = preAssigned.getOrElse(graft.CacheTracker.pin(
+      assignWithDist(emb, m, idCol, vecCol)))
     val radii = assigned.groupBy(col("cent_id")).agg(max(col("cd")).as("radius"))
-    val qd = graft.CacheTracker.register(
+    // nQ × nCent — dimension-scale, read twice
+    val qd = graft.CacheTracker.pin(
       centDf(emb, m).crossJoin(broadcast(queries))
         .select(col("query_id"), col("cent_id"),
-          VectorFunctions.euclidean(col("cv"), cellVec(m, col("qv"))).as("qd"))
-        .persist()) // nQ × nCent — dimension-scale, read twice
+          VectorFunctions.euclidean(col("cv"), cellVec(m, col("qv"))).as("qd")))
     val seedW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("qd"), col("cent_id"))
     // seed only from cells that HAVE members (radii's key set): a badly

@@ -92,8 +92,7 @@ object Kmeans {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Model = {
     require(k >= 1 && iterations >= 0, "k >= 1, iterations >= 0")
-    val micro = microFrame(emb, idCol, vecCol).persist()
-    graft.CacheTracker.register(micro)
+    val micro = graft.CacheTracker.pin(microFrame(emb, idCol, vecCol))
     var model = Model(micro.orderBy(col("vec_id")).limit(k).collect()
       .zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Long](1).toArray) })

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions
 
@@ -134,25 +133,16 @@ object KnnGraphRefresh {
       element_at(col("cells.vec_id"), 1).as("cent_id"),
       col("src_id").as("nbr_id"), col("src_v").as("nbr_v"))
 
-  private def held(df: DataFrame): Boolean =
-    df.storageLevel != StorageLevel.NONE ||
-      org.apache.spark.sql.graftbridge.Bridge.checkpointRdd(df)
-        .exists(_.getStorageLevel != StorageLevel.NONE)
-
-  /** Persist + CacheTracker-register + CUT LINEAGE. The refresh
+  /** [[graft.CacheTracker.pin]] + CUT LINEAGE. The refresh
     * derives ~8 layers of frames from each other, and every downstream
     * plan would otherwise embed the full upstream tree — compact as a
     * DAG, multiplicative in every tree walk (the streaming wrapper
     * OOM'd an 8 GB driver printing one batch plan). The cut plans the
     * frame, so adaptive execution may already run its shuffle stages;
-    * its final stage runs on first use. A frame the caller already
-    * holds cached or checkpointed is only cut, not persisted a second
-    * time.
+    * its final stage runs on first use.
     */
-  private[operators] def pin(df: DataFrame): DataFrame = {
-    if (!held(df)) graft.CacheTracker.register(df.persist())
-    org.apache.spark.sql.graftbridge.Bridge.cutLineage(df)
-  }
+  private[operators] def pin(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.cutLineage(graft.CacheTracker.pin(df))
 
   /** One delta generation through `store`; None = rebuild (see the
     * object doc). `broadcastProbeBytesCap` bounds the full recompute's

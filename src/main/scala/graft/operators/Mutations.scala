@@ -138,10 +138,9 @@ object Mutations {
       // in-batch resolution: the latest op per id wins within the tier
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("seq").desc)
-      val resolved = batch
+      val resolved = graft.CacheTracker.pin(batch
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("vec_id"), col("op"), col("label"))
-        .persist()
+        .select(col("vec_id"), col("op"), col("label")))
       val inserts = resolved.where(col("op") === "insert")
         .select(col("vec_id"), col("label"))
         .withColumn(B, StateTable.idBucket(col("vec_id"), nBuckets))

@@ -42,8 +42,8 @@ object Pca {
     val triLen = dim * (dim + 1) / 2
     val ex = emb.agg(gramCol(col(vecCol), dim).as("g"))
       .select(posexplode(col("g")).as(Seq("pos", "v")))
-      .persist() // bounded: dim(dim+1)/2 + dim + 1 rows
-    graft.CacheTracker.register(ex)
+    // bounded: dim(dim+1)/2 + dim + 1 rows
+    graft.CacheTracker.pin(ex)
     val idx = (for (i <- 0 until dim; j <- i until dim)
       yield (i * dim - i * (i - 1) / 2 + (j - i), i.toLong, j.toLong))
       .toDF("pos", "i", "j")

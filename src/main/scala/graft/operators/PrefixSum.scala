@@ -42,10 +42,8 @@ object PrefixSum {
     * follows `order`; partitions are contiguous slices. Internal caches
     * must stay live for the lifetime of the returned (lazy) frame —
     * releasing earlier was tried and evicted a cache a later-executed
-    * query still needed (3s → 8.5s recompute) — so they register with
-    * graft.CacheTracker; the session owner (Bench/Verify after each query
-    * action, or the embedding application at its pipeline boundaries)
-    * releases.
+    * query still needed (3s → 8.5s recompute) — so they are
+    * graft.CacheTracker pins the session owner releases.
     */
   def runningSum(
       df: DataFrame,
@@ -103,8 +101,7 @@ object PrefixSum {
       val ranged = prepared
         .repartitionByRange(order: _*)
         .sortWithinPartitions(order: _*)
-        .persist()
-      graft.CacheTracker.register(ranged)
+      graft.CacheTracker.pin(ranged)
       val vIdx = ranged.schema.fieldIndex("__psv")
       // pass 1: per-partition totals (empty partitions emit 0 so the offset
       // array stays index-aligned with partition ids)

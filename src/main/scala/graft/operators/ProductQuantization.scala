@@ -200,8 +200,7 @@ object ProductQuantization {
     val micro = emb.select(col(idCol).cast("long").as("vec_id"),
       transform(col(vecCol).cast("array<double>"),
         x => round(x * 1e6, 0).cast("long")).as("mv"))
-      .persist()
-    graft.CacheTracker.register(micro)
+    graft.CacheTracker.pin(micro)
     // init = the first kSub ids' vectors sliced per subspace (the
     // Kmeans.fit first-k convention), ONE job for all m subspaces
     val initRows = micro.orderBy(col("vec_id")).limit(kSub).collect()
@@ -356,8 +355,8 @@ object ProductQuantization {
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && candFactor >= 1, "bad k/candFactor")
     val models = fitExact(emb, dim, m, kSub, iterations, idCol, vecCol)
-    val encoded = encodeExact(emb, models, dim, idCol, vecCol).persist()
-    graft.CacheTracker.register(encoded)
+    val encoded = graft.CacheTracker.pin(
+      encodeExact(emb, models, dim, idCol, vecCol))
     exactAdcKnnBatchFrom(emb, encoded, models, queries, k, candFactor,
       idCol, vecCol)
   }
@@ -467,9 +466,8 @@ object ProductQuantization {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): ResidualModel = {
     val coarse = Kmeans.fit(emb, kCoarse, coarseIters, idCol, vecCol)
-    val resid = emb.select(col(idCol).cast("long").as(idCol),
-      residualCol(coarse, col(vecCol)).as(vecCol)).persist()
-    graft.CacheTracker.register(resid)
+    val resid = graft.CacheTracker.pin(emb.select(col(idCol).cast("long").as(idCol),
+      residualCol(coarse, col(vecCol)).as(vecCol)))
     ResidualModel(coarse,
       fitExact(resid, dim, m, kSub, pqIters, idCol, vecCol), dim, m)
   }
@@ -593,8 +591,7 @@ object ProductQuantization {
       "bad k/candFactor/nProbe")
     val rm = fitResidual(emb, dim, kCoarse, coarseIters, m, kSub, pqIters,
       idCol, vecCol)
-    val encoded = encodeResidual(emb, rm, idCol, vecCol).persist()
-    graft.CacheTracker.register(encoded)
+    val encoded = graft.CacheTracker.pin(encodeResidual(emb, rm, idCol, vecCol))
     residualAdcKnnBatchFrom(emb, encoded, rm, queries, nProbe, k,
       candFactor, idCol, vecCol)
   }

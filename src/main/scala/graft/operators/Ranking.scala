@@ -71,10 +71,9 @@ object Ranking {
     val tf = exploded
       .groupBy(col("doc_id"), col("token"))
       .agg(first(col("dl")).as("dl"), count(lit(1)).cast("double").as("tf"))
-      .persist() // df aggregate + score join both read it; recomputing
+    // df aggregate + score join both read it (concurrently); recomputing
     // tf for df would re-run the corpus-sized (doc, token) shuffle
-    graft.CacheTracker.register(tf)
-    tf.count() // populate before the concurrent consumer scans
+    graft.CacheTracker.fill(tf)
     val df = tf.groupBy(col("token")).agg(count(lit(1)).cast("double").as("df"))
     // two corpus scalars from a MAP-ONLY projection of the docs — not
     // from tf, which would chain two more aggregates over the cache
@@ -115,11 +114,10 @@ object Ranking {
     require(k >= 1, s"k must be >= 1 (got $k)")
     val ln2 = math.log(2.0)
     // the truth frame is bounded (queries × k rows) but its LINEAGE may
-    // be a full corpus scan (an exact kNN); it feeds two branches below,
-    // so pin it — the CacheTracker session-owner lifetime contract
-    val t = graft.CacheTracker.register(
+    // be a full corpus scan (an exact kNN); it feeds two branches below
+    val t = graft.CacheTracker.pin(
       truth.select(col("query_id"), col("vec_id"),
-        col("rank").as("__trank")).persist())
+        col("rank").as("__trank")))
     val r = run.where(col("rank") <= k)
       .select(col("query_id"), col("vec_id"), col("rank"))
     val nTruth = t.groupBy(col("query_id"))

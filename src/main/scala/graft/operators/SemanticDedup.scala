@@ -97,8 +97,8 @@ object SemanticDedup {
     // per vector. The normalized vector rides along (first()) so the
     // pair join needs no join back.
     val assigned = assign(normed, cents, idCol)
-      .persist() // both sides of the pair join + the output read it
-    graft.CacheTracker.register(assigned)
+    // both sides of the pair join + the output read it
+    graft.CacheTracker.pin(assigned)
     // Within-cluster salted pair join: side a (the "is this a dup?" side)
     // carries one hash-derived salt, side b (the lower-id witness side)
     // replicates across all salts, so every same-cluster (a, b) pair

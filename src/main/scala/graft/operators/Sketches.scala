@@ -158,8 +158,8 @@ object Sketches {
     // the floor for this pattern
     val sketch = toks
       .agg(mg(col("token")).as("cands"), count(lit(1)).as("n_total"))
-      .persist() // one row; read by both the candidate and total sides
-    graft.CacheTracker.register(sketch)
+    // one row; read by both the candidate and total sides
+    graft.CacheTracker.pin(sketch)
     val cand = sketch.select(explode(col("cands")).as("token"))
     val total = sketch.select(col("n_total"))
     toks.join(broadcast(cand), Seq("token")) // ≤ k candidates: broadcast
@@ -243,8 +243,8 @@ object Sketches {
       .groupBy(col("source"))
       .agg(graft.functions.VectorFunctions
         .kMinValues(col("draw"), k).as("mins"))
-      .persist() // one row per source — read by both pair sides
-    graft.CacheTracker.register(sketches)
+    // one row per source — read by both pair sides
+    graft.CacheTracker.pin(sketches)
     val a = sketches.select(col("source").as("src_a"), col("mins").as("ma"))
     val b = sketches.select(col("source").as("src_b"), col("mins").as("mb"))
     val x = slice(array_sort(array_union(col("ma"), col("mb"))), 1, k)

@@ -354,11 +354,10 @@ object TextAnalysis {
     val bi = docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(ngramList(col("toks"), 2)).as("bg"))
-      .persist()
-    graft.CacheTracker.register(bi)
-    bi.count() // populate: the count aggregate and the scoring join are
-    // scheduled concurrently and would each first-scan the cold cache,
-    // re-running the tokenize+explode pass ("Block already exists" race)
+    // the count aggregate and the scoring join are scheduled concurrently
+    // and would each first-scan a cold cache, re-running the
+    // tokenize+explode pass
+    graft.CacheTracker.fill(bi)
     val cb = bi.groupBy(col("bg")).agg(count(lit(1)).as("cb"))
     val cf = cb
       .withColumn("w1", substring_index(col("bg"), " ", 1))

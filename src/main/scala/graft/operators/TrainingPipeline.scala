@@ -183,7 +183,7 @@ object TrainingPipeline {
     // same rule the stage-3 cache below applies)
     val ngramClean =
       if (semanticDecontam.isDefined)
-        graft.CacheTracker.register(ngramClean0.persist())
+        graft.CacheTracker.pin(ngramClean0)
       else ngramClean0
     // 2b. optional embedding-space leak quarantine
     val semClean0 = semanticDecontam match {
@@ -206,7 +206,7 @@ object TrainingPipeline {
     }
     val semClean =
       if (passageScrubTokens.isDefined)
-        graft.CacheTracker.register(semClean0.persist())
+        graft.CacheTracker.pin(semClean0)
       else semClean0
     stageObserver("ngram_clean", ngramClean)
     stageObserver("semantic_clean", semClean)
@@ -224,7 +224,7 @@ object TrainingPipeline {
     // (the quality projection and repetitionStats), so it is cached —
     // otherwise the dedup + decontamination lineage above re-runs per
     // branch, and again for both sides of the budget semi-join below.
-    val cleanCached = graft.CacheTracker.register(clean.persist())
+    val cleanCached = graft.CacheTracker.pin(clean)
     stageObserver("passage_scrubbed", cleanCached)
     val toks = TextAnalysis.tokens(col("text"))
     val qualityOk = cleanCached
@@ -238,10 +238,9 @@ object TrainingPipeline {
         Seq("doc_id"), "left_semi")
     // 4. domain mixture — also referenced twice (budget scan + text
     // re-attach), so cached too
-    val mixed = graft.CacheTracker.register(
+    val mixed = graft.CacheTracker.pin(
       Sampling.mixtureSample(
-        qualityOk, "doc_id", "source", mixtureWeights, defaultFraction)
-        .persist())
+        qualityOk, "doc_id", "source", mixtureWeights, defaultFraction))
     stageObserver("quality_ok", qualityOk)
     stageObserver("mixture_sampled", mixed)
     // 5. token budget (best quality first, deterministic tie-break) —
@@ -430,8 +429,8 @@ object TrainingPipeline {
       docs: DataFrame,
       weights: Map[String, Double],
       tokenBudget: Long): DataFrame = {
-    val plan = graft.CacheTracker.register(
-      mixturePlan(docs, weights, tokenBudget).persist()) // bounded: sources
+    val plan = graft.CacheTracker.pin(
+      mixturePlan(docs, weights, tokenBudget)) // bounded: sources
     val realized = mixtureExecute(docs, plan)
       .groupBy(col("source"))
       .agg(sum(size(TextAnalysis.tokens(col("text"))).cast("long"))

@@ -326,8 +326,7 @@ object UnigramLm {
       .getOption("spark.graft.unigram.localVocabMax").map(_.toLong)
       .getOrElse(200000L)
     val words = wordVocab(docs).as[(String, Long)]
-    val wordsCached = words.persist()
-    graft.CacheTracker.register(wordsCached.toDF())
+    val wordsCached = graft.CacheTracker.pin(words)
     val nWords = wordsCached.count()
 
     // geometric prune schedule ending at vocabSize: seed inventory is

@@ -87,15 +87,12 @@ object WordPiece {
     val localMax = spark.conf
       .getOption("spark.graft.wordpiece.localVocabMax")
       .map(_.toLong).getOrElse(200000L)
-    val wordsCached = words.persist()
-    graft.CacheTracker.register(wordsCached.toDF())
+    val wordsCached = graft.CacheTracker.pin(words)
     if (wordsCached.count() <= localMax)
       return localWordpieceMerges(spark, wordsCached.collect().toSeq, k)
     var vocab: Dataset[(Seq[String], Long)] = wordsCached
       .map { case (w, n) => (symbols(w): Seq[String], n) }
-      .persist()
-    graft.CacheTracker.register(vocab.toDF())
-    vocab.count()
+    graft.CacheTracker.fill(vocab)
     val merges = Seq.newBuilder[(Int, String, String, Long, Double)]
     var rank = 1
     var exhausted = false
@@ -126,9 +123,7 @@ object WordPiece {
         merges += ((rank, l, r, top(0).getAs[Long]("cnt"),
           top(0).getAs[Double]("score")))
         val next = vocab.map { case (syms, n) => (applyMerge(syms, l, r): Seq[String], n) }
-          .persist()
-        graft.CacheTracker.register(next.toDF())
-        next.count()
+        graft.CacheTracker.fill(next)
         vocab.unpersist()
         vocab = next
         rank += 1
@@ -226,12 +221,10 @@ object WordPiece {
       .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
       .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("wn"))
-    val encoded = words.as[(String, Long)]
+    // read twice: id build + corpus join
+    graft.CacheTracker.pin(words.as[(String, Long)]
       .map { case (w, n) => (w, n, encodeWordGreedy(w, bc.value)) }
-      .toDF("word", "wn", "subwords")
-      .persist() // read twice: id build + corpus join
-    graft.CacheTracker.register(encoded)
-    encoded
+      .toDF("word", "wn", "subwords"))
   }
 
   private def subwordVocabOf(encoded: DataFrame): DataFrame =

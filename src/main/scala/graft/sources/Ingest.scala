@@ -31,14 +31,13 @@ object Ingest {
     * command contract (unknown op, missing seq/vec_id).
     */
   def readMutationLog(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val raw = spark.read
+    // corrupt-record access requires materialization in Spark — cache,
+    // then both branches split the same parsed frame
+    val raw = graft.CacheTracker.pin(spark.read
       .schema(mutationSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      // corrupt-record access requires materialization in Spark — cache,
-      // then both branches split the same parsed frame
-      .persist()
+      .json(path))
     // coalesce to false: a parseable line with a NULL op would make the
     // predicate NULL, and a NULL filter drops the row from BOTH branches —
     // silently losing it instead of quarantining it

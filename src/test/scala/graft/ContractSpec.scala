@@ -68,6 +68,27 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("frames are cached only through CacheTracker.pin/fill") {
+    // one cache primitive: a raw persist skips the held check (a second
+    // owner of one cached plan, "Asked to cache already cached data") and
+    // the session owner's release. Named exceptions: the resident HNSW
+    // shard RDDs, whose lifetime their caller manages, and the soak and
+    // A/B harness mains
+    val raw = """\.persist\(|\.cache\(\)""".r
+    val exempt = Set("CacheTracker.scala", "HnswSpark.scala",
+      "HnswPersistence.scala", "AbBench.scala")
+    val offenders = mainSources().filterNot { case (f, _) =>
+      exempt(f.getName) || f.getName.endsWith("Soak.scala")
+    }.flatMap { case (f, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (line, i) if !line.trim.startsWith("*") &&
+            raw.findFirstIn(line.split("//", 2)(0)).nonEmpty =>
+          s"${f.getPath}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("the kNN-graph refresh's merge test and re-cut live in one file") {
     // one refresh algorithm over two state stores: a second copy of the
     // exact merge test or of the refresh's edge-list top-k re-cut is a

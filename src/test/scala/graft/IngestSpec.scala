@@ -34,5 +34,14 @@ class IngestSpec extends SparkSpec {
     val visible = graft.operators.Mutations.apply(
       valid.select(col("seq"), col("op"), col("vec_id"), col("label")))
     assert(visible.collect().map(_.getLong(0)).toSeq == Seq(11L))
+    // the parsed log's cache belongs to the session owner: released, no
+    // plan over it reads a cache any more
+    def readsCache(df: org.apache.spark.sql.DataFrame): Boolean =
+      org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, df.queryExecution.logical)
+        .queryExecution.withCachedData.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+    assert(readsCache(valid) && readsCache(quarantined))
+    CacheTracker.releaseAll()
+    assert(!readsCache(valid) && !readsCache(quarantined))
   }
 }
