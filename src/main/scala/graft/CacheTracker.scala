@@ -8,11 +8,11 @@ import org.apache.spark.storage.StorageLevel
   * [[fill]] (eager: one job populates every partition before the caller
   * fans out concurrent scans over it). Nothing else under
   * `src/main/scala` calls `persist()`/`cache()`; `ContractSpec` enforces
-  * it. The exceptions are the resident HNSW shard RDDs (`HnswSpark`,
+  * it. The one exception is the resident HNSW shard RDDs (`HnswSpark`,
   * `HnswPersistence`): long-lived serving artifacts whose lifetime the
   * caller manages, since evicting one would force a nondeterministic
-  * rebuild; and, until they fold into one soak harness, the `*Soak` and
-  * `AbBench` mains.
+  * rebuild. The `graft.Soak` suites cache their generated corpora here
+  * like any library site.
   *
   * Lifetime: operators pin; the SESSION OWNER releases. Lazy consumers
   * may execute a returned plan much later (a harness builds several

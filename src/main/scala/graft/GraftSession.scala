@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session setup and the one session-scoped memo.
   *
-  * Every main (Bench, Verify, Explain, HeadToHead, AbBench, the soaks) and
+  * Every main (Bench, Verify, Explain, HeadToHead, Soak) and
   * the test suite build their session through [[local]], so the plans a
   * spec sees are the plans the bench runs. Artifacts a session keeps alive
   * across queries (fixture loaders, resident shard sets, trained models,

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SoakKit._
 import graft.operators.GraphOps
 
-/** Graph-operator scale soak — the measured point under the PageRank /
-  * label-propagation 100 TB claims: run both fixed-iteration walks on a
+/** Graph-operator scale soak (suite `graph`) — the measured point under
+  * the PageRank / label-propagation 100 TB claims: run both fixed-iteration walks on a
   * deterministic synthetic graph at quarter and full scale and print
   * one JSON line. The graph is generated DISTRIBUTED (range → explode;
   * no driver-side array): each of n nodes emits k out-edges, edge 0
@@ -14,19 +15,17 @@ import graft.operators.GraphOps
   * graph has), the rest xxhash-uniform. All destinations land in
   * [0, n) so the closed-graph contract holds by construction.
   *
-  * Usage: graft.GraphSoak [nNodes] [kOut] [iterations]
+  * Usage: graft.Soak graph [nNodes] [kOut] [iterations]
   *
   * Reported: per-size wall seconds for each walk, the full/quarter
   * scaling ratio (≈4 ⇒ linear in edges), conserved PageRank mass, and
   * the label-propagation spread count (seeds = every 100th node).
   */
 object GraphSoak {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val k = if (args.length > 1) args(1).toInt else 8
     val iters = if (args.length > 2) args(2).toInt else 5
-    val cpus = GraftSession.cpus(32)
-    val spark = GraftSession.local(cpus)
 
     def edges(nn: Long): DataFrame =
       spark.range(nn).toDF("src_id")
@@ -37,12 +36,6 @@ object GraphSoak {
             .otherwise(pmod(xxhash64(col("src_id"), col("j")), lit(nn)))
             .as("nbr_id"))
         .where(col("nbr_id") =!= col("src_id"))
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
 
     def prMass(nn: Long): (Long, Double) = timed {
       GraphOps.pageRank(edges(nn), iterations = iters)
@@ -64,14 +57,12 @@ object GraphSoak {
     val (spread, lpSec) = lpSpread(n)
     CacheTracker.releaseAll()
 
-    println(
-      s"""{"n":$n,"k":$k,"iterations":$iters,""" +
-        s""""pr_quarter_sec":${f"$prQSec%.1f"},"pr_sec":${f"$prSec%.1f"},""" +
-        s""""pr_scaling":${f"${prSec / prQSec}%.2f"},""" +
-        s""""pr_mass_quarter":$massQ,"pr_mass":$mass,""" +
-        s""""lp_quarter_sec":${f"$lpQSec%.1f"},"lp_sec":${f"$lpSec%.1f"},""" +
-        s""""lp_scaling":${f"${lpSec / lpQSec}%.2f"},""" +
-        s""""lp_spread_quarter":$spreadQ,"lp_spread":$spread}""")
-    spark.stop()
+    emit("n" -> n, "k" -> k, "iterations" -> iters,
+      "pr_quarter_sec" -> fixed(prQSec, 1), "pr_sec" -> fixed(prSec, 1),
+      "pr_scaling" -> fixed(prSec / prQSec, 2),
+      "pr_mass_quarter" -> massQ, "pr_mass" -> mass,
+      "lp_quarter_sec" -> fixed(lpQSec, 1), "lp_sec" -> fixed(lpSec, 1),
+      "lp_scaling" -> fixed(lpSec / lpQSec, 2),
+      "lp_spread_quarter" -> spreadQ, "lp_spread" -> spread)
   }
 }

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SoakKit._
 import graft.operators.Multimodal
 
-/** Media decode throughput soak (r8): the multimodal faces' scale
-  * measurement. Per format, a distributed fixture table of REAL encoded
+/** Media decode throughput soak (suite `media`, r8): the multimodal
+  * faces' scale measurement. Per format, a distributed fixture table of REAL encoded
   * payloads (deflated+filtered PNGs, LZW GIFs, Huffman-coded baseline
   * JPEGs, PCM WAV tones — the same builders the oracle queries use, at
   * 100× their fixture count) is materialized first, then the
@@ -21,16 +22,13 @@ import graft.operators.Multimodal
   * a quarantine regression at scale fails loudly here.
   *
   * Prints one JSON line with per-format decode seconds, MB and
-  * payloads/sec.
+  * payloads/sec. Usage: graft.Soak media [nPerFormat]
   */
 object MediaSoak {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val nPerFormat = if (args.length > 0) args(0).toInt else 50000
-    val cpus = GraftSession.cpus(32)
-    val spark = GraftSession.local(cpus)
-    import spark.implicits._
 
-    def ids: DataFrame = spark.range(0, nPerFormat, 1, cpus)
+    def ids: DataFrame = spark.range(0, nPerFormat, 1, cpus(spark))
       .select(col("id").as("doc_id"))
 
     def soakFormat(
@@ -38,12 +36,10 @@ object MediaSoak {
         table: DataFrame => DataFrame,
         face: (SparkSession, DataFrame) => DataFrame,
         expectRows: Long): (String, Double, Double, Long) = {
-      val media = table(ids).persist()
+      val media = CacheTracker.pin(table(ids))
       val bytes = media.agg(sum(length(col("content")))).head().getLong(0)
-      val t0 = System.nanoTime()
-      val decoded = face(spark, media).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      media.unpersist()
+      val (decoded, sec) = timed(face(spark, media).count())
+      CacheTracker.releaseAll()
       require(decoded == expectRows,
         s"$name: decoded $decoded of expected $expectRows — quarantine regression")
       (name, sec, bytes / 1e6, decoded)
@@ -94,10 +90,10 @@ object MediaSoak {
         (0L until nPerFormat).filter(_ % 13 != 0)
           .map(id => 3L + id % 5).sum))
 
-    val fields = results.map { case (name, sec, mb, rows) =>
-      f""""${name}_sec":$sec%.1f,"${name}_mb":$mb%.1f,"${name}_per_sec":${(rows / sec).toLong}"""
-    }.mkString(",")
-    println(s"""{"soak":"media_decode","n_per_format":$nPerFormat,$fields}""")
-    spark.stop()
+    emit(Seq("soak" -> "media_decode", "n_per_format" -> nPerFormat) ++
+      results.flatMap { case (name, sec, mb, rows) =>
+        Seq(s"${name}_sec" -> fixed(sec, 1), s"${name}_mb" -> fixed(mb, 1),
+          s"${name}_per_sec" -> (rows / sec).toLong)
+      }: _*)
   }
 }

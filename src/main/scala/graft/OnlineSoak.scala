@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SoakKit._
 import graft.operators.{Ivf, ProductQuantization}
 import graft.sources.StateTable
 
-/** The COMPOSED online-ingest soak — every streaming curation face the
+/** The COMPOSED online-ingest soak (suite `online`) — every streaming curation face the
   * engine ships, chained in ONE foreachBatch loop the way a live
   * training-data service would run them:
   *
@@ -52,7 +53,7 @@ import graft.sources.StateTable
   * deployment turns (at 100 TB, ~1M buckets keep buckets-touched ≈
   * affected-fingerprint count, making rewrite IO mutation-
   * proportional). Run with a small perGen and more buckets to SEE the
-  * pruning: `graft.OnlineSoak 500000 5 200 1024` rewrites only the
+  * pruning: `graft.Soak online 500000 5 200 1024` rewrites only the
   * buckets the ~400 affected fingerprints land in.
   *
   * Reference anchor: the Raft apply loop's durable state
@@ -60,8 +61,8 @@ import graft.sources.StateTable
   * every applied mutation lands in persistent storage; memory holds
   * the in-flight operation only.
   *
-  * Usage: graft.OnlineSoak [n] [gens] [perGen] [stateBuckets]
-  *        (500000, 25, 5000, 64)
+  * Usage: graft.Soak online [n] [gens] [perGen] [stateBuckets]
+  *        [tables] [occ]   (500000, 25, 5000, 64)
   */
 object OnlineSoak {
 
@@ -141,14 +142,6 @@ object OnlineSoak {
   /** The whole batch pipeline: visible → keepers → gates. */
   private def curate(visible: DataFrame): DataFrame = gateRows(keepers(visible))
 
-  private def blockFileCount(): Long = {
-    def cnt(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles).map(_.map(cnt).sum).getOrElse(0L)
-      else 1L
-    org.apache.spark.sql.graftbridge.Bridge.localBlockDirs().map(cnt).sum
-  }
-
   final case class LoopSummary(
       n: Long, gens: Int, perGen: Int, stateBuckets: Int,
       buildSec: Double, genSec: Seq[Double], storageBytes: Seq[Long],
@@ -181,6 +174,9 @@ object OnlineSoak {
     * lands; one that rewrote it gets the CommitConflictException abort
     * (the orphan swept by the in-loop vacuum). Content is identical
     * either way, so the end-of-run parity replay gates BOTH outcomes.
+    *
+    * The loop runs under one [[SoakKit.census]] scope: its failed tasks
+    * are the summary's `taskRetries`, and no listener outlives the call.
     */
   def runLoop(
       spark: SparkSession,
@@ -192,6 +188,14 @@ object OnlineSoak {
       graphTables: Boolean = false,
       injectAbortAtGen: Int = -1,
       occWriter: Boolean = false): LoopSummary = {
+    val (s, c) = census(spark)(loop(spark, n, gens, perGen, stateBuckets,
+      stateDir, graphTables, injectAbortAtGen, occWriter))
+    s.copy(taskRetries = c.failedTasks.get)
+  }
+
+  private def loop(spark: SparkSession, n: Long, gens: Int, perGen: Int,
+      stateBuckets: Int, stateDir: String, graphTables: Boolean,
+      injectAbortAtGen: Int, occWriter: Boolean): LoopSummary = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val sb = stateBuckets
@@ -201,13 +205,6 @@ object OnlineSoak {
     // deletes of existing ids, 20% re-adds (content changes)
     val addCut = perGen * 3 / 5
     val delCut = perGen * 4 / 5
-    val taskRetries = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.reason != org.apache.spark.Success) taskRetries.incrementAndGet()
-      })
 
     val visibleT = new StateTable(spark, s"$stateDir/visible")
     val curatedT = new StateTable(spark, s"$stateDir/curated")
@@ -230,37 +227,38 @@ object OnlineSoak {
     def idB(c: Column) = StateTable.idBucket(c, sb)
 
     // ---- initial state: one-time fits and table loads ------------------
-    val t0 = System.nanoTime()
-    visibleT.init(
-      enrich(spark.range(0, n, 1, nPart)
-        .select(col("id").as("doc_id"), lit(0L).as("ver")))
-        .withColumn(B, fpB(col("fp"))), sb)
-    docmapT.init(
-      visibleT.read().select(col("doc_id"), col("fp"))
-        .withColumn(B, idB(col("doc_id"))), sb)
-    curatedT.init(
-      curate(visibleT.read().drop(B)).withColumn(B, fpB(col("fp"))), sb)
-    val curEmb = curatedT.read()
-      .select(col("doc_id").as("vec_id"), col("embedding"))
-    val nCents = math.max(16,
-      math.sqrt(curatedT.read().count().toDouble).toInt)
-    // codebooks are fit ONCE on the initial curated corpus and stay
-    // fixed — the serving pattern that makes the encode a pure row map
-    val rm = ProductQuantization.fitResidual(curEmb, Dim,
-      kCoarse = 64, coarseIters = 2, m = 4, kSub = 16, pqIters = 2)
-    codesT.init(
-      ProductQuantization.encodeResidual(curEmb, rm)
-        .withColumn(B, idB(col("vec_id"))), sb)
-    if (graphTables)
-      graft.operators.KnnGraphTables.init(
-        spark, s"$stateDir/graph", curEmb, k, nCents, nProbe, sb)
-    else {
-      val g0 = Ivf.knnGraphBuild(curEmb, k, nCents, nProbe)
-      rankedT.init(g0.ranked.withColumn(B, idB(col("src_id"))), sb)
-      edgesT.init(g0.edges.withColumn(B, idB(col("src_id"))), sb)
+    val ((rm, nCents), buildSec) = timed {
+      visibleT.init(
+        enrich(spark.range(0, n, 1, nPart)
+          .select(col("id").as("doc_id"), lit(0L).as("ver")))
+          .withColumn(B, fpB(col("fp"))), sb)
+      docmapT.init(
+        visibleT.read().select(col("doc_id"), col("fp"))
+          .withColumn(B, idB(col("doc_id"))), sb)
+      curatedT.init(
+        curate(visibleT.read().drop(B)).withColumn(B, fpB(col("fp"))), sb)
+      val curEmb = curatedT.read()
+        .select(col("doc_id").as("vec_id"), col("embedding"))
+      val nCents = math.max(16,
+        math.sqrt(curatedT.read().count().toDouble).toInt)
+      // codebooks are fit ONCE on the initial curated corpus and stay
+      // fixed — the serving pattern that makes the encode a pure row map
+      val rm = ProductQuantization.fitResidual(curEmb, Dim,
+        kCoarse = 64, coarseIters = 2, m = 4, kSub = 16, pqIters = 2)
+      codesT.init(
+        ProductQuantization.encodeResidual(curEmb, rm)
+          .withColumn(B, idB(col("vec_id"))), sb)
+      if (graphTables)
+        graft.operators.KnnGraphTables.init(
+          spark, s"$stateDir/graph", curEmb, k, nCents, nProbe, sb)
+      else {
+        val g0 = Ivf.knnGraphBuild(curEmb, k, nCents, nProbe)
+        rankedT.init(g0.ranked.withColumn(B, idB(col("src_id"))), sb)
+        edgesT.init(g0.edges.withColumn(B, idB(col("src_id"))), sb)
+      }
+      graft.CacheTracker.releaseAll()
+      (rm, nCents)
     }
-    graft.CacheTracker.releaseAll()
-    val buildSec = (System.nanoTime() - t0) / 1e9
 
     // ---- the one foreachBatch loop -------------------------------------
     implicit val sqlCtx = spark.sqlContext
@@ -434,10 +432,10 @@ object OnlineSoak {
             val base = curatedT.generation()
             Some((curatedT.stage(curatedT.readBuckets(Seq(b)), 1), b, base))
           } else None
-        val t = System.nanoTime()
-        stream.addData(rows)
-        query.processAllAvailable()
-        genSec += (System.nanoTime() - t) / 1e9
+        genSec += timed {
+          stream.addData(rows)
+          query.processAllAvailable()
+        }._2
         occ.foreach { case (staged, b, base) =>
           occAttempts += 1
           try {
@@ -447,7 +445,7 @@ object OnlineSoak {
             case _: StateTable.CommitConflictException => occAborted += 1
           }
         }
-        storage += spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+        storage += cachedBytes(spark)
         liveRdds += spark.sparkContext.getPersistentRDDs.size
         System.gc() // outside the timed window: leaked vs cleaner-lag
         Thread.sleep(200)
@@ -477,59 +475,62 @@ object OnlineSoak {
 
     // ---- end-of-run parity: replay the WHOLE log through the batch
     // pipeline (initial corpus = seq 0 adds) and compare state sets ----
-    val t1 = System.nanoTime()
-    val logRows = spark.range(0, gens.toLong * perGen, 1, nPart).select(
-      (col("id") / perGen + 1).cast("long").as("g"),
-      (col("id") % perGen).cast("long").as("j"))
-      .select(
-        (col("g") * 1000000 + col("j")).as("seq"),
-        when(col("j") < addCut, lit("add"))
-          .when(col("j") < delCut, lit("delete"))
-          .otherwise(lit("add")).as("op"),
-        when(col("j") < addCut, lit(n) + (col("g") - 1) * perGen + col("j"))
-          .when(col("j") < delCut, (col("g") * 7919 + col("j") * 13) % n)
-          .otherwise((col("g") * 104729 + col("j") * 31) % n).as("doc_id"),
-        when(col("j") >= addCut && col("j") < delCut, lit(0L))
-          .otherwise(col("g")).as("ver"))
-    val fullLog = spark.range(0, n, 1, nPart)
-      .select(lit(0L).as("seq"), lit("add").as("op"),
-        col("id").as("doc_id"), lit(0L).as("ver"))
-      .unionByName(logRows)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("seq").desc)
-    val visibleB = enrich(fullLog
-      .withColumn("rn", row_number().over(wAll)).where(col("rn") === 1)
-      .where(col("op") === "add").select(col("doc_id"), col("ver")))
-      .persist()
-    val curatedB = curate(visibleB).persist()
-    val visible = visibleT.read().drop(B)
-    val curated = curatedT.read().drop(B)
-    val codes = codesT.read().drop(B)
-    val edges =
-      if (graphTables)
-        graft.operators.KnnGraphTables.readState(spark, s"$stateDir/graph")
-          .edges
-      else edgesT.read().drop(B)
-    val visCols = Seq("doc_id", "ver", "source", "fp").map(col)
-    val visMissing = visibleB.select(visCols: _*)
-      .except(visible.select(visCols: _*)).count()
-    val visExtra = visible.select(visCols: _*)
-      .except(visibleB.select(visCols: _*)).count()
-    val curCols = Seq("doc_id", "ver", "source", "fp").map(col)
-    val curMissing = curatedB.select(curCols: _*)
-      .except(curated.select(curCols: _*)).count()
-    val curExtra = curated.select(curCols: _*)
-      .except(curatedB.select(curCols: _*)).count()
-    val codesB = ProductQuantization.encodeResidual(
-      curatedB.select(col("doc_id").as("vec_id"), col("embedding")), rm)
-    val codeMissing = codesB.except(codes).count()
-    val codeExtra = codes.except(codesB).count()
-    val gB = Ivf.knnGraphBuild(
-      curatedB.select(col("doc_id").as("vec_id"), col("embedding")),
-      k, nCents, nProbe)
-    val edgeMissing = gB.edges.except(edges).count()
-    val edgeExtra = edges.except(gB.edges).count()
-    val paritySec = (System.nanoTime() - t1) / 1e9
+    val (parity, paritySec) = timed {
+      val logRows = spark.range(0, gens.toLong * perGen, 1, nPart).select(
+        (col("id") / perGen + 1).cast("long").as("g"),
+        (col("id") % perGen).cast("long").as("j"))
+        .select(
+          (col("g") * 1000000 + col("j")).as("seq"),
+          when(col("j") < addCut, lit("add"))
+            .when(col("j") < delCut, lit("delete"))
+            .otherwise(lit("add")).as("op"),
+          when(col("j") < addCut, lit(n) + (col("g") - 1) * perGen + col("j"))
+            .when(col("j") < delCut, (col("g") * 7919 + col("j") * 13) % n)
+            .otherwise((col("g") * 104729 + col("j") * 31) % n).as("doc_id"),
+          when(col("j") >= addCut && col("j") < delCut, lit(0L))
+            .otherwise(col("g")).as("ver"))
+      val fullLog = spark.range(0, n, 1, nPart)
+        .select(lit(0L).as("seq"), lit("add").as("op"),
+          col("id").as("doc_id"), lit(0L).as("ver"))
+        .unionByName(logRows)
+      val wAll = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id")).orderBy(col("seq").desc)
+      val visibleB = graft.CacheTracker.pin(enrich(fullLog
+        .withColumn("rn", row_number().over(wAll)).where(col("rn") === 1)
+        .where(col("op") === "add").select(col("doc_id"), col("ver"))))
+      val curatedB = graft.CacheTracker.pin(curate(visibleB))
+      val visible = visibleT.read().drop(B)
+      val curated = curatedT.read().drop(B)
+      val codes = codesT.read().drop(B)
+      val edges =
+        if (graphTables)
+          graft.operators.KnnGraphTables.readState(spark, s"$stateDir/graph")
+            .edges
+        else edgesT.read().drop(B)
+      val visCols = Seq("doc_id", "ver", "source", "fp").map(col)
+      val visMissing = visibleB.select(visCols: _*)
+        .except(visible.select(visCols: _*)).count()
+      val visExtra = visible.select(visCols: _*)
+        .except(visibleB.select(visCols: _*)).count()
+      val curCols = Seq("doc_id", "ver", "source", "fp").map(col)
+      val curMissing = curatedB.select(curCols: _*)
+        .except(curated.select(curCols: _*)).count()
+      val curExtra = curated.select(curCols: _*)
+        .except(curatedB.select(curCols: _*)).count()
+      val codesB = ProductQuantization.encodeResidual(
+        curatedB.select(col("doc_id").as("vec_id"), col("embedding")), rm)
+      val codeMissing = codesB.except(codes).count()
+      val codeExtra = codes.except(codesB).count()
+      val gB = Ivf.knnGraphBuild(
+        curatedB.select(col("doc_id").as("vec_id"), col("embedding")),
+        k, nCents, nProbe)
+      val edgeMissing = gB.edges.except(edges).count()
+      val edgeExtra = edges.except(gB.edges).count()
+      (curated, Seq(visMissing, visExtra, curMissing, curExtra,
+        codeMissing, codeExtra, edgeMissing, edgeExtra))
+    }
+    val (curated, Seq(visMissing, visExtra, curMissing, curExtra,
+      codeMissing, codeExtra, edgeMissing, edgeExtra)) = parity
     val curatedCount = curated.count()
     val parityOk = visMissing == 0 && visExtra == 0 &&
       curMissing == 0 && curExtra == 0 &&
@@ -539,53 +540,44 @@ object OnlineSoak {
       s"composed parity broke: visible -$visMissing/+$visExtra, " +
         s"curated -$curMissing/+$curExtra, " +
         s"codes -$codeMissing/+$codeExtra, edges -$edgeMissing/+$edgeExtra")
-    visibleB.unpersist(blocking = false)
-    curatedB.unpersist(blocking = false)
     graft.CacheTracker.releaseAll()
     LoopSummary(n, gens, perGen, sb, buildSec, genSec.toSeq, storage.toSeq,
       liveRdds.toSeq, diskFiles.toSeq, rewritten.toSeq, stagedMb.toSeq,
-      stateDiskMb.toSeq, curatedCount, paritySec, taskRetries.get(), parityOk,
+      stateDiskMb.toSeq, curatedCount, paritySec, 0L, parityOk,
       vacFiles.toSeq, vacBytes.toSeq, occAttempts, occLanded, occAborted)
   }
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 500000L
     val gens = if (args.length > 1) args(1).toInt else 25
     val perGen = if (args.length > 2) args(2).toInt else 5000
     val stateBuckets = if (args.length > 3) args(3).toInt else 64
     val graphTables = args.length > 4 && args(4) == "tables"
     val occWriter = args.contains("occ")
-    val cpus = GraftSession.cpus(32)
-    val spark = GraftSession.local(cpus)
     val stateDir = java.nio.file.Files
       .createTempDirectory("online-soak-state").toString
     val s = runLoop(spark, n, gens, perGen, stateBuckets, stateDir,
       graphTables, occWriter = occWriter)
-    val sorted = s.genSec.sorted
-    def pct(p: Double) =
-      sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
-    println(
-      s"""{"mode":"onlineloop","n":$n,"gens":$gens,"per_gen":$perGen,""" +
-      s""""graph":"${if (graphTables) "tables" else "inmem"}",""" +
-      s""""state":"table","state_buckets":$stateBuckets,""" +
-      s""""build_sec":${f"${s.buildSec}%.1f"},""" +
-      s""""gen_sec":[${s.genSec.map(x => f"$x%.1f").mkString(",")}],""" +
-      s""""gen_p50_sec":${f"${pct(0.5)}%.1f"},""" +
-      s""""gen_p99_sec":${f"${pct(0.99)}%.1f"},""" +
-      s""""storage_mb":[${s.storageBytes.map(_ / 1000000).mkString(",")}],""" +
-      s""""live_rdds":[${s.liveRdds.mkString(",")}],""" +
-      s""""disk_block_files":[${s.diskFiles.mkString(",")}],""" +
-      s""""buckets_rewritten":[${s.bucketsRewritten.mkString(",")}],""" +
-      s""""staged_mb":[${s.stagedMb.mkString(",")}],""" +
-      s""""state_disk_mb":[${s.stateDiskMb.mkString(",")}],""" +
-      s""""vacuum_files":[${s.vacuumFiles.mkString(",")}],""" +
-      s""""vacuum_mb":[${s.vacuumBytes.map(_ / 1000000).mkString(",")}],""" +
-      s""""occ_attempts":${s.occAttempts},"occ_landed":${s.occLanded},""" +
-      s""""occ_aborted":${s.occAborted},""" +
-      s""""curated_count":${s.curatedCount},""" +
-      s""""parity_sec":${f"${s.paritySec}%.1f"},""" +
-      s""""task_retries":${s.taskRetries},""" +
-      s""""composed_parity":${s.composedParity}}""")
-    spark.stop()
+    emit("mode" -> "onlineloop", "n" -> n, "gens" -> gens, "per_gen" -> perGen,
+      "graph" -> (if (graphTables) "tables" else "inmem"),
+      "state" -> "table", "state_buckets" -> stateBuckets,
+      "build_sec" -> fixed(s.buildSec, 1),
+      "gen_sec" -> s.genSec.map(fixed(_, 1)),
+      "gen_p50_sec" -> fixed(pct(s.genSec, 0.5), 1),
+      "gen_p99_sec" -> fixed(pct(s.genSec, 0.99), 1),
+      "storage_mb" -> s.storageBytes.map(_ / 1000000),
+      "live_rdds" -> s.liveRdds,
+      "disk_block_files" -> s.diskFiles,
+      "buckets_rewritten" -> s.bucketsRewritten,
+      "staged_mb" -> s.stagedMb,
+      "state_disk_mb" -> s.stateDiskMb,
+      "vacuum_files" -> s.vacuumFiles,
+      "vacuum_mb" -> s.vacuumBytes.map(_ / 1000000),
+      "occ_attempts" -> s.occAttempts, "occ_landed" -> s.occLanded,
+      "occ_aborted" -> s.occAborted,
+      "curated_count" -> s.curatedCount,
+      "parity_sec" -> fixed(s.paritySec, 1),
+      "task_retries" -> s.taskRetries,
+      "composed_parity" -> s.composedParity)
   }
 }

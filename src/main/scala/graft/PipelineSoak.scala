@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SoakKit._
 import graft.operators.{Behavior, Decontamination, TextAnalysis, TrainingPipeline}
 
-/** Scale soak for the round-6 operator families that until now had only
-  * sf0.1 numbers, plus the COMPOSED corpus-assembly flow:
+/** Scale soak (suite `pipeline`) for the round-6 operator families that
+  * until now had only sf0.1 numbers, plus the COMPOSED corpus-assembly
+  * flow:
   *
   *   `ops` mode —
   *     - vocab_table over a ~2M-distinct-token, 50M-posting corpus (the
@@ -30,15 +32,9 @@ import graft.operators.{Behavior, Decontamination, TextAnalysis, TrainingPipelin
   * driver arrays) and deterministically (xxhash64 of the id), so runs are
   * reproducible and the planted populations are closed-form.
   *
-  * Usage: graft.PipelineSoak [ops|pipeline|all] [nDocs]
+  * Usage: graft.Soak pipeline [ops|pipeline|exactann|media|all] [nDocs]
   */
 object PipelineSoak {
-
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
 
   /** n docs of `tokensPerDoc` hash-derived tokens over ~`vocab` distinct. */
   private def synthDocs(
@@ -69,8 +65,8 @@ object PipelineSoak {
     }
     val nVocab = vstats.getLong(0)
     assert(vstats.getLong(1) == nVocab, "token_id must be a dense 1..V bijection")
-    println(s"""{"soak":"vocab_table","n_docs":$n,"distinct_tokens":$nVocab,""" +
-      s""""total_postings":${vstats.getLong(2)},"sec":${f"$vocabSec%.1f"}}""")
+    emit("soak" -> "vocab_table", "n_docs" -> n, "distinct_tokens" -> nVocab,
+      "total_postings" -> vstats.getLong(2), "sec" -> fixed(vocabSec, 1))
 
     // --- RAG chunking over the 50M-token corpus -----------------------
     val (cstats, chunkSec) = timed {
@@ -78,8 +74,8 @@ object PipelineSoak {
         .agg(count(lit(1)), countDistinct(col("doc_id"))).first()
     }
     assert(cstats.getLong(1) == n, "every doc must chunk")
-    println(s"""{"soak":"chunk_documents","n_docs":$n,"n_chunks":${cstats.getLong(0)},""" +
-      s""""sec":${f"$chunkSec%.1f"}}""")
+    emit("soak" -> "chunk_documents", "n_docs" -> n, "n_chunks" -> cstats.getLong(0),
+      "sec" -> fixed(chunkSec, 1))
     CacheTracker.releaseAll()
 
     // --- funnel + cohort retention over 10M events --------------------
@@ -107,10 +103,10 @@ object PipelineSoak {
       Behavior.cohortRetention(events)
         .agg(count(lit(1)), countDistinct(col("cohort_week"))).first()
     }
-    println(s"""{"soak":"funnel_cohort","n_events":$nEvents,"n_users":200000,""" +
-      s""""funnel_users":[${funnelCounts.mkString(",")}],"funnel_sec":${f"$funnelSec%.1f"},""" +
-      s""""retention_cells":${cohortStats.getLong(0)},"cohorts":${cohortStats.getLong(1)},""" +
-      s""""cohort_sec":${f"$cohortSec%.1f"}}""")
+    emit("soak" -> "funnel_cohort", "n_events" -> nEvents, "n_users" -> 200000,
+      "funnel_users" -> funnelCounts, "funnel_sec" -> fixed(funnelSec, 1),
+      "retention_cells" -> cohortStats.getLong(0), "cohorts" -> cohortStats.getLong(1),
+      "cohort_sec" -> fixed(cohortSec, 1))
     CacheTracker.releaseAll()
 
     // --- semantic decontamination scan with planted leaks -------------
@@ -127,8 +123,8 @@ object PipelineSoak {
     val planted = (0L until n by 5000L).toSet
     assert(flagged.map(_.getLong(0)).toSet == planted,
       s"flagged ${flagged.length} != planted ${planted.size}")
-    println(s"""{"soak":"semantic_scan","n_train":$n,"n_bench":100,""" +
-      s""""planted":${planted.size},"flagged":${flagged.length},"sec":${f"$scanSec%.1f"}}""")
+    emit("soak" -> "semantic_scan", "n_train" -> n, "n_bench" -> 100,
+      "planted" -> planted.size, "flagged" -> flagged.length, "sec" -> fixed(scanSec, 1))
     CacheTracker.releaseAll()
   }
 
@@ -210,10 +206,9 @@ object PipelineSoak {
     assert(contaminatedIn == 0, s"$contaminatedIn n-gram-contaminated docs admitted")
     assert(semLeakIn == 0, s"$semLeakIn semantic-leak docs admitted")
     assert(junkIn == 0, s"$junkIn repetition-junk docs admitted")
-    val stageJson = stages.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    println(s"""{"soak":"assemble_corpus","n_docs":$n,"e2e_sec":${f"$e2eSec%.1f"},""" +
-      s""""stages":{"input":$n,$stageJson,"packed_docs":$nPacked},""" +
-      s""""n_sequences":${packStats.getLong(1) + 1},"admitted_tokens":${packStats.getLong(2)}}""")
+    emit("soak" -> "assemble_corpus", "n_docs" -> n, "e2e_sec" -> fixed(e2eSec, 1),
+      "stages" -> json(("input" -> n) +: stages.toSeq :+ ("packed_docs" -> nPacked): _*),
+      "n_sequences" -> (packStats.getLong(1) + 1), "admitted_tokens" -> packStats.getLong(2))
     CacheTracker.releaseAll()
   }
 
@@ -241,13 +236,11 @@ object PipelineSoak {
       vecs.where(col("vec_id") < 100)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
 
-    val (am, buildSec) = timed {
+    val ((m, assigned), buildSec) = timed {
       val m = IvfTrained.train(vecs, nCentroids = nClusters, spherical = true)
-      val assigned = IvfTrained.assignWithDist(vecs, m).persist()
-      assigned.count() // materialize the serving artifact
-      (m, assigned)
+      // materialize the serving artifact
+      (m, CacheTracker.fill(IvfTrained.assignWithDist(vecs, m)))
     }
-    val (m, assigned) = am
     val (brute, bruteSec) = timed {
       Knn.knnBatch(vecs, queries, k = 10, VectorFunctions.cosine)
         .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1))).sorted.toSeq
@@ -259,39 +252,19 @@ object PipelineSoak {
           r.getAs[Long]("vec_id"))).sorted.toSeq
     }
     assert(pruned == brute, "pruned exact batch diverged from brute force")
-    assigned.unpersist()
-    println(s"""{"soak":"exact_ann_serving","n_vectors":$n,"n_queries":100,""" +
-      s""""n_cells":$nClusters,"build_sec":${f"$buildSec%.1f"},""" +
-      s""""brute_batch_sec":${f"$bruteSec%.1f"},"pruned_batch_sec":${f"$prunedSec%.1f"},""" +
-      s""""row_identical":true}""")
+    emit("soak" -> "exact_ann_serving", "n_vectors" -> n, "n_queries" -> 100,
+      "n_cells" -> nClusters, "build_sec" -> fixed(buildSec, 1),
+      "brute_batch_sec" -> fixed(bruteSec, 1), "pruned_batch_sec" -> fixed(prunedSec, 1),
+      "row_identical" -> true)
     CacheTracker.releaseAll()
   }
 
-  /** Media decode soak: n complete pixel PNGs (real deflated IDAT)
-    * decoded end-to-end — inflate + unfilter + channel stats — plus the
-    * corpus profile over the planted-corruption mixed table. The decode
-    * is map-only CPU work; the reported megapixels/s is the per-core
-    * curve the 100 TB story scales by executor count.
+  /** Media profile soak: the corpus profile over the planted-corruption
+    * mixed table at n images (the per-format decode throughput, PNG
+    * included, is the media suite's).
     */
   def mediaSoak(spark: SparkSession, n: Long): Unit = {
-    import spark.implicits._
     import graft.operators.Multimodal
-    val media = CacheTracker.pin(spark.range(n).as[Long].map { id =>
-      val w = (16 + id % 48).toInt
-      val h = (16 + (id * 7) % 48).toInt
-      (id, "image/png", Multimodal.buildPngPixels(id, w, h))
-    }.toDF("media_id", "media_type", "content"))
-    val nBytes = media.agg(sum(length(col("content")))).first().getLong(0)
-    val (dstats, decodeSec) = timed {
-      Multimodal.extractPixelStats(spark, media)
-        .agg(count(lit(1)), sum(col("n_pixels"))).first()
-    }
-    assert(dstats.getLong(0) == n, "every PNG must decode")
-    val mpx = dstats.getLong(1) / 1e6
-    println(s"""{"soak":"png_pixel_decode","n_images":$n,""" +
-      s""""fixture_mb":${nBytes / 1000000},"megapixels":${f"$mpx%.0f"},""" +
-      s""""sec":${f"$decodeSec%.1f"},"mpx_per_sec":${f"${mpx / decodeSec}%.0f"}}""")
-    CacheTracker.releaseAll()
     val mixed = CacheTracker.fill(Multimodal.synthesizeMixedImageTable(
       spark, spark.range(n).select(col("id").as("doc_id"))))
     val (prof, profSec) = timed {
@@ -299,21 +272,18 @@ object PipelineSoak {
     }
     val corrupt = prof.map(_.getAs[Long]("n_corrupt")).sum
     assert(corrupt == (n + 16) / 17, s"corrupt $corrupt != planted ${(n + 16) / 17}")
-    println(s"""{"soak":"media_profile","n_images":$n,"formats":${prof.length},""" +
-      s""""planted_corrupt":$corrupt,"sec":${f"$profSec%.1f"}}""")
+    emit("soak" -> "media_profile", "n_images" -> n, "formats" -> prof.length,
+      "planted_corrupt" -> corrupt, "sec" -> fixed(profSec, 1))
     CacheTracker.releaseAll()
   }
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "all"
     val n = if (args.length > 1) args(1).toLong else 500000L
-    val cpus = GraftSession.cpus(32)
-    val spark = GraftSession.local(cpus)
     if (mode == "ops" || mode == "all") opsSoak(spark, n)
     if (mode == "pipeline" || mode == "all") pipelineSoak(spark, n)
     if (mode == "exactann" || mode == "all") exactAnnSoak(spark, n,
       if (args.length > 2) args(2).toInt else 64)
     if (mode == "media" || mode == "all") mediaSoak(spark, n)
-    spark.stop()
   }
 }

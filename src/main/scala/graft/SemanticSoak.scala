@@ -1,24 +1,26 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.SoakKit._
 import graft.operators.SemanticDedup
 
-/** Semantic-dedup scale soak — the measured 100×-fixture point for
-  * [[SemanticDedup]], mirroring what DedupSoak does for the shingle
-  * suite: generate a distributed corpus with PLANTED near-identical
+/** Semantic-dedup scale soak (suite `semantic`) — the measured
+  * 100×-fixture point for [[SemanticDedup]], mirroring what the dedup
+  * suite does for shingles: generate a distributed corpus with PLANTED near-identical
   * embedding blobs, run semanticDedup end to end, and print one JSON
   * line, so the "cluster sizes bound the pair square" claim rests on a
   * measurement, not just the plan shape.
   *
-  * Usage: graft.SemanticSoak [nVecs] [dim] [nCentroids] [eps] [mode]
+  * Usage: graft.Soak semantic [nVecs] [dim] [nCentroids] [eps] [mode]
   * Defaults: 500000 64 707 (≈√N) 0.01 det
   * mode=trained uses MLlib spherical k-means centers
   * (IvfTrained.train → semanticDedupWith — the SemDeDup paper's
   * configuration); real cluster centers shrink the boundary-straddle
   * recall gap the deterministic-centroid mode measures.
   *
-  * Corpus (distributed, deterministic — Soak's Box-Muller policy; no
+  * Corpus (distributed, deterministic — the hnsw suite's Box-Muller policy; no
   * driver-side array): ids with id % 100 < 5 form 5-member blobs around
   * a shared Box-Muller base vector (jitter σ=0.01 per element ⇒ mutual
   * cosine distance ~5e-5, far inside eps); all other ids are unique
@@ -39,74 +41,56 @@ import graft.operators.SemanticDedup
   * shuffle: only id+vector rows × (salt+1) do).
   */
 object SemanticSoak {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 500000
     val dim = if (args.length > 1) args(1).toInt else 64
     val nCents = if (args.length > 2) args(2).toInt else math.sqrt(n.toDouble).toInt
     val eps = if (args.length > 3) args(3).toDouble else 0.01
     val mode = if (args.length > 4) args(4) else "det"
-    val cpus = GraftSession.cpus(32)
-    val spark = GraftSession.local(cpus)
 
-    val peakShuffle = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-          peakShuffle.updateAndGet(m => math.max(m, w))
-        }
-      })
+    val ((nVecs, trainSec, agg, sec, szAgg), c) = census(spark) {
+      // deterministic distributed corpus: blob members share the base
+      // id's Box-Muller vector plus a small per-member jitter (see scaladoc)
+      val emb = CacheTracker.fill(spark.range(0, n, 1, cpus(spark))
+        .select(
+          col("id").as("vec_id"),
+          when(col("id") % 100 < 5, col("id") - col("id") % 100)
+            .otherwise(col("id")).as("__base"))
+        .select(
+          col("vec_id"),
+          vector(dim, s"${gaussianElem("__base", 1, 2)} + 0.01 * ${gaussianElem("vec_id", 3, 4)}")
+            .as("embedding")))
+      val nVecs = emb.count()
 
-    // deterministic distributed corpus: blob members share the base id's
-    // Box-Muller vector plus a small per-member jitter (see scaladoc)
-    val u = (src: String, salt: Int) =>
-      s"((abs(xxhash64($src, j, $salt)) % 1000000000) + 0.5) / 1000000000.0"
-    val gauss = (src: String, s1: Int, s2: Int) =>
-      s"sqrt(-2.0 * ln(${u(src, s1)})) * cos(6.283185307179586 * ${u(src, s2)})"
-    val emb = spark.range(0, n, 1, cpus)
-      .select(
-        col("id").as("vec_id"),
-        when(col("id") % 100 < 5, col("id") - col("id") % 100)
-          .otherwise(col("id")).as("__base"))
-      .select(
-        col("vec_id"),
-        expr(s"transform(sequence(0, ${dim - 1}), j -> " +
-          s"${gauss("__base", 1, 2)} + 0.01 * ${gauss("vec_id", 3, 4)})")
-          .as("embedding"))
-      .persist()
-    val nVecs = emb.count() // materialize outside the timed window
+      // mode=trained: k-means centers first (timed separately — training
+      // is a one-off amortized over every dedup run against the model)
+      val (trainedCents, trainSec) = timed(
+        if (mode == "trained") {
+          val m = graft.operators.IvfTrained.train(emb, nCents, spherical = true)
+          import spark.implicits._
+          Some(m.centroids.toSeq.toDF("cent_id", "cv"))
+        } else None)
 
-    // mode=trained: k-means centers first (timed separately — training
-    // is a one-off amortized over every dedup run against the model)
-    val tt0 = System.nanoTime()
-    val trainedCents =
-      if (mode == "trained") {
-        val m = graft.operators.IvfTrained.train(emb, nCents, spherical = true)
-        import spark.implicits._
-        Some(m.centroids.toSeq.toDF("cent_id", "cv"))
-      } else None
-    val trainSec = (System.nanoTime() - tt0) / 1e9
-
-    val t0 = System.nanoTime()
-    val out = (trainedCents match {
-      case Some(cents) =>
-        SemanticDedup.semanticDedupWith(emb, cents, eps, "vec_id", 8)
-      case None => SemanticDedup.semanticDedup(emb, eps, nCents)
-    }).persist()
-    val agg = out.agg(
-      sum(when(col("kept") === 0, 1L).otherwise(0L)).as("dropped"),
-      sum(when(col("kept") === 0 && col("vec_id") % 100 >= 1
-        && col("vec_id") % 100 <= 4, 1L).otherwise(0L)).as("planted_dropped"),
-      sum(when(col("kept") === 0 && (col("vec_id") % 100 === 0
-        || col("vec_id") % 100 >= 5), 1L).otherwise(0L)).as("false_drops"))
-      .head()
-    val sec = (System.nanoTime() - t0) / 1e9
-
-    val sizes = out.groupBy(col("cent_id")).agg(count(lit(1)).as("sz"))
-    val szAgg = sizes.agg(
-      max(col("sz")).as("mx"),
-      sum(col("sz") * (col("sz") - 1) / 2).cast("long").as("pairs")).head()
+      val ((out, agg), sec) = timed {
+        val out = CacheTracker.pin(trainedCents match {
+          case Some(cents) =>
+            SemanticDedup.semanticDedupWith(emb, cents, eps, "vec_id", 8)
+          case None => SemanticDedup.semanticDedup(emb, eps, nCents)
+        })
+        (out, out.agg(
+          sum(when(col("kept") === 0, 1L).otherwise(0L)).as("dropped"),
+          sum(when(col("kept") === 0 && col("vec_id") % 100 >= 1
+            && col("vec_id") % 100 <= 4, 1L).otherwise(0L)).as("planted_dropped"),
+          sum(when(col("kept") === 0 && (col("vec_id") % 100 === 0
+            || col("vec_id") % 100 >= 5), 1L).otherwise(0L)).as("false_drops"))
+          .head())
+      }
+      val szAgg = out.groupBy(col("cent_id")).agg(count(lit(1)).as("sz")).agg(
+        max(col("sz")).as("mx"),
+        sum(col("sz") * (col("sz") - 1) / 2).cast("long").as("pairs")).head()
+      CacheTracker.releaseAll()
+      (nVecs, trainSec, agg, sec, szAgg)
+    }
     // count, don't derive: 4·⌊n/100⌋ miscounts a partial trailing blob
     // (e.g. n=450 has droppable members 401-404) and divides by zero
     // below 100
@@ -115,22 +99,17 @@ object SemanticSoak {
     val recall =
       if (trueDroppable == 0) 1.0
       else agg.getLong(1).toDouble / trueDroppable
-    out.unpersist(blocking = false)
-    emb.unpersist(blocking = false)
-    CacheTracker.releaseAll()
 
-    println(
-      s"""{"n_vecs":$nVecs,"dim":$dim,"n_centroids":$nCents,"eps":$eps,""" +
-      s""""mode":"$mode","train_sec":${math.round(trainSec * 100) / 100.0},""" +
-      s""""corpus_pairs":${n.toLong * (n - 1) / 2},""" +
-      s""""intra_cluster_pairs":${szAgg.getLong(1)},""" +
-      s""""max_cluster":${szAgg.getLong(0)},""" +
-      s""""n_dropped":${agg.getLong(0)},""" +
-      s""""true_droppable":$trueDroppable,""" +
-      s""""planted_recall":${math.round(recall * 10000) / 10000.0},""" +
-      s""""false_drops":${agg.getLong(2)},""" +
-      s""""dedup_sec":${math.round(sec * 100) / 100.0},""" +
-      s""""peak_shuffle_write_mb":${peakShuffle.get() / 1048576}}""")
-    spark.stop()
+    emit("n_vecs" -> nVecs, "dim" -> dim, "n_centroids" -> nCents, "eps" -> eps,
+      "mode" -> mode, "train_sec" -> rounded(trainSec, 2),
+      "corpus_pairs" -> n.toLong * (n - 1) / 2,
+      "intra_cluster_pairs" -> szAgg.getLong(1),
+      "max_cluster" -> szAgg.getLong(0),
+      "n_dropped" -> agg.getLong(0),
+      "true_droppable" -> trueDroppable,
+      "planted_recall" -> rounded(recall, 4),
+      "false_drops" -> agg.getLong(2),
+      "dedup_sec" -> rounded(sec, 2),
+      "peak_shuffle_write_mb" -> c.peakStageShuffleWrite.get / 1048576)
   }
 }

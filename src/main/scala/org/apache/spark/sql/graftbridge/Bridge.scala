@@ -75,4 +75,11 @@ object Bridge {
   def localBlockDirs(): Seq[java.io.File] =
     org.apache.spark.SparkEnv.get.blockManager
       .diskBlockManager.localDirs.toSeq
+
+  /** Block until every event posted so far has reached every listener
+    * (`LiveListenerBus` is private[spark]): a listener's counters are
+    * complete only after this returns.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -72,19 +72,29 @@ class ContractSpec extends AnyFunSuite {
     // one cache primitive: a raw persist skips the held check (a second
     // owner of one cached plan, "Asked to cache already cached data") and
     // the session owner's release. Named exceptions: the resident HNSW
-    // shard RDDs, whose lifetime their caller manages, and the soak and
-    // A/B harness mains
+    // shard RDDs, whose lifetime their caller manages
     val raw = """\.persist\(|\.cache\(\)""".r
     val exempt = Set("CacheTracker.scala", "HnswSpark.scala",
-      "HnswPersistence.scala", "AbBench.scala")
+      "HnswPersistence.scala")
     val offenders = mainSources().filterNot { case (f, _) =>
-      exempt(f.getName) || f.getName.endsWith("Soak.scala")
+      exempt(f.getName)
     }.flatMap { case (f, src) =>
       src.linesIterator.zipWithIndex.collect {
         case (line, i) if !line.trim.startsWith("*") &&
             raw.findFirstIn(line.split("//", 2)(0)).nonEmpty =>
           s"${f.getPath}:${i + 1}: ${line.trim}"
       }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("Spark listeners are added only by GraftSession and the soak kit") {
+    // a listener added outside a scope that removes it outlives its
+    // caller: every call piles one more onto a shared session (the
+    // online soak's task-retry counter did, once per runLoop)
+    val offenders = mainSources().collect {
+      case (f, src) if src.contains("addSparkListener") &&
+          !Set("GraftSession.scala", "SoakKit.scala")(f.getName) => f.getPath
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

@@ -1,8 +1,7 @@
 package graft
 
-/** Tag for soak-style tests (long-horizon composed loops, multi-minute
-  * storms). The default `sbt test` excludes them so the suite finishes
-  * inside the driver's test budget; run with SPARK_GRAFT_SOAK=true to
-  * include them (build.sbt).
+/** Tag for soak-style tests (long-horizon composed loops, one run of
+  * every `graft.Soak` suite). They run in the default `sbt test`;
+  * `-n graft.Soak` selects only them, `-l graft.Soak` leaves them out.
   */
 object SoakTag extends org.scalatest.Tag("graft.Soak")
