@@ -614,7 +614,8 @@ object CurationSoak {
           rr.state.edges.localCheckpoint(true))
         // release the SUPERSEDED generation's checkpoints so path A's
         // resident metric reads steady state, not an accumulating chain
-        memA.ranked.unpersist(false); memA.edges.unpersist(false)
+        Bridge.releaseCheckpoint(memA.ranked)
+        Bridge.releaseCheckpoint(memA.edges)
         memA = nextMem
         CacheTracker.releaseAll()
         sr.bytes + se.bytes
@@ -747,7 +748,7 @@ object CurationSoak {
         .join(removes, Seq("vec_id"), "left_anti")
         .unionByName(adds)
         .localCheckpoint(true)
-      prev.unpersist(false)
+      Bridge.releaseCheckpoint(prev)
     }
     // parity after the whole horizon (including through compactions)
     val stEnd = KnnGraphTables.readState(spark, dir)

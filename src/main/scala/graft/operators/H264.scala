@@ -767,7 +767,7 @@ object H264 {
   }
 
   /** The id → SpsSpec rule — shared by the synthesizer and the oracle's
-    * closed forms (SparkEntry) so the two cannot drift.
+    * closed forms (entry.MediaKeys) so the two cannot drift.
     */
   def specFor(id: Long): SpsSpec = SpsSpec(
     profileIdc = if (id % 2 == 0) 66 else 77,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming forms of the engine's ingest path — replacing the
@@ -208,13 +209,6 @@ object StreamingOps {
           .map(_.state)
           .getOrElse(graft.operators.Ivf
             .knnGraphBuild(next, k, nCentroids, nProbe))
-        // releases the BLOCKS of a checkpointed generation, not just the
-        // (absent) query cache: Dataset.unpersist leaves local-checkpoint
-        // blocks to the ContextCleaner, which accumulated one dead
-        // corpus-sized block per generation on an unbounded run
-        def release(df: DataFrame): Unit =
-          org.apache.spark.sql.graftbridge.Bridge.checkpointRdd(df)
-            .foreach(_.unpersist(blocking = false))
         // an empty micro-batch (or a no-op delta) returns the base state
         // ITSELF — nothing to pin or swap, but the folded corpus was
         // already checkpointed above and must not leak one corpus copy
@@ -233,14 +227,16 @@ object StreamingOps {
           // generation — the served state is checkpoint-backed outside
           // the tracker
           graft.CacheTracker.releaseAll()
-          // previous generation's checkpoint blocks (non-blocking — an
+          // previous generation's checkpoint blocks, not just its (absent)
+          // query cache — Dataset.unpersist left one dead corpus-sized
+          // block per generation to the ContextCleaner (non-blocking: an
           // in-flight probe holding the old handle finishes first)
-          release(prevState.edges)
-          release(prevState.ranked)
-          if (prevCorpus ne initialEmb) release(prevCorpus)
+          Bridge.releaseCheckpoint(prevState.edges)
+          Bridge.releaseCheckpoint(prevState.ranked)
+          if (prevCorpus ne initialEmb) Bridge.releaseCheckpoint(prevCorpus)
         } else {
           graft.CacheTracker.releaseAll() // the refresh's transient caches
-          release(next)
+          Bridge.releaseCheckpoint(next)
         }
         ()
       }

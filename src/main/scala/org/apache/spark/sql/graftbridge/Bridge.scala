@@ -51,6 +51,14 @@ object Bridge {
       case _ => None
     }
 
+  /** Release a superseded localCheckpoint generation: unpersist its
+    * blocks now instead of leaving them to the ContextCleaner, so a
+    * generation loop keeps storage flat. A frame that is not a local
+    * checkpoint is left as it is.
+    */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+
   /** CUT a DataFrame's logical lineage: re-expose its physical output
     * (typically a cached frame — pair with persist+count) as a leaf
     * LogicalRDD, so downstream plans reference a one-node subtree

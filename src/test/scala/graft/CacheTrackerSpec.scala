@@ -9,6 +9,7 @@ import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** The one cache primitive: `pin` caches a plan once and registers one
@@ -151,6 +152,18 @@ class CacheTrackerSpec extends SparkSpec {
     assert(CacheTracker.registered().exists(_.queryExecution.logical eq ds.queryExecution.logical))
     CacheTracker.releaseAll()
     assert(ds.storageLevel == StorageLevel.NONE)
+  }
+
+  test("a released local-checkpoint generation leaves the persistent RDDs") {
+    // Dataset.unpersist leaves the checkpoint's blocks to the
+    // ContextCleaner; releaseCheckpoint unpersists them at once
+    val gen = spark.range(0, 100, 1, 2).select((col("id") * 3).as("x"))
+      .localCheckpoint(true)
+    val id = Bridge.checkpointRdd(gen).get.id
+    gen.unpersist(false)
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    Bridge.releaseCheckpoint(gen)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
   }
 
   test("after releaseAll() the cache manager holds nothing the spec added") {

@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver contract itself as a spec: every oracle entry must have a
-  * query, and the rows-only set (queries without a DuckDB twin) is the
-  * EXPLICIT list of approximate/hash-seeded operators — so adding a query
-  * without an oracle is a conscious, reviewed decision, not an accident
-  * that silently downgrades the correctness gate to a rows>0 check.
+import graft.Key.key
+
+/** The query contract itself as a spec: each key is declared once (an
+  * oracle entry cannot exist without its query), and the rows-only set
+  * (queries without a DuckDB twin) is the EXPLICIT list of
+  * approximate/hash-seeded operators — so adding a query without an
+  * oracle is a conscious, reviewed decision, not an accident that
+  * silently downgrades the correctness gate to a rows>0 check.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -23,34 +27,22 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  test("no contract key is declared twice (a duplicate silently shadows)") {
-    // a Map literal keeps the LAST duplicate — nothing at compile or
-    // run time flags the earlier entry being shadowed (nearly shipped
-    // in r12: a second pii_scrub overrode the boundary-trap original).
-    // Count the literal declarations in the source and pin them to the
-    // materialized Map sizes.
-    val srcFile = new java.io.File("src/main/scala/graft/SparkEntry.scala")
-    assume(srcFile.exists, "source tree not visible from the test JVM")
-    val src = {
-      val s = scala.io.Source.fromFile(srcFile, "UTF-8")
-      try s.mkString finally s.close()
-    }
-    val qi = src.indexOf("lazy val queries"); val oi = src.indexOf("lazy val oracleSql")
-    assert(qi >= 0 && oi > qi)
-    val qkeys = """"([a-z0-9_]+)" -> \(\(s""".r
-      .findAllMatchIn(src.substring(qi, oi)).map(_.group(1)).toSeq
-    val okeys = """\n    "([a-z0-9_]+)" ->""".r
-      .findAllMatchIn(src.substring(oi)).map(_.group(1)).toSeq
-    assert(qkeys.size == qkeys.distinct.size,
-      s"duplicate query keys: ${qkeys.diff(qkeys.distinct).distinct}")
-    assert(okeys.size == okeys.distinct.size,
-      s"duplicate oracle keys: ${okeys.diff(okeys.distinct).distinct}")
-    // the literal counts must equal the Map sizes (catches declaration
-    // styles the regexes miss drifting silently too)
-    assert(qkeys.size == SparkEntry.queries.size,
-      s"parsed ${qkeys.size} query declarations vs Map ${SparkEntry.queries.size}")
-    assert(okeys.size == SparkEntry.oracleSql.size,
-      s"parsed ${okeys.size} oracle declarations vs Map ${SparkEntry.oracleSql.size}")
+  test("the registry rejects a key declared twice") {
+    // a map built from a duplicate keeps the last declaration and
+    // silently shadows the first (nearly shipped in r12: a second
+    // pii_scrub overrode the boundary-trap original)
+    val plan: (SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
+    val twice = Seq(key("a")(plan), key("b")(plan).oracle("SELECT 1"),
+      key("a")(plan).oracle("SELECT 2"))
+    val e = intercept[IllegalArgumentException](new Registry(twice))
+    assert(e.getMessage.contains("declared twice: a"))
+  }
+
+  test("building the query map builds no oracle SQL") {
+    val plan: (SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
+    val r = new Registry(Seq(key("a")(plan).oracle(sys.error("oracle built"))))
+    assert(r.queries.keySet == Set("a"))
+    intercept[RuntimeException](r.oracleSql)
   }
 
   test("sessions are built and session-keyed memos are held only in GraftSession") {
@@ -113,9 +105,18 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  test("every oracle key has a matching query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
+  test("the oracle SQL text and the query key set hold their pinned digest") {
+    // an MD5 over the sorted (key, oracle SQL) pairs and the sorted query
+    // key set: moving a declaration or splicing a shared oracle fragment
+    // must leave it unchanged; editing an oracle's SQL edits this value
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def add(s: String): Unit = {
+      md.update(s.getBytes("UTF-8")); md.update(0.toByte)
+    }
+    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (k, v) => add(k); add(v) }
+    SparkEntry.queries.keys.toSeq.sorted.foreach(add)
+    val digest = md.digest.map(b => f"${b & 0xff}%02x").mkString
+    assert(digest == "7b8dfa59d5f1c162ca9df2d2d4e96e4a")
   }
 
   test("rows-only queries are exactly the documented approximate set") {

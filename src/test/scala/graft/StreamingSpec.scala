@@ -558,7 +558,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming doc quality matches the batch perplexity face row for row") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val model = SparkEntry.FixedUnigramModel
+    val model = graft.entry.TextKeys.FixedUnigramModel
     val texts = Seq(
       (0L, "table data value in row"),
       (1L, "qqqq zzzz do in table"),
@@ -880,7 +880,7 @@ class StreamingSpec extends SparkSpec {
       (0L, "the customer data row"),
       (1L, "the query window"))
     val batchDocs = texts.toDF("doc_id", "text")
-    val vocab = graft.SparkEntry.FixedWordPieceVocab
+    val vocab = graft.entry.TextKeys.FixedWordPieceVocab
     val expected = graft.operators.WordPiece
       .encodeCorpusWithVocab(batchDocs, vocab)
       .collect()

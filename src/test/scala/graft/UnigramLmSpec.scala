@@ -309,7 +309,7 @@ class UnigramLmSpec extends SparkSpec {
   }
 
   test("docQualityWithModel: micro-nat sums match a per-word reference walk") {
-    // tiny fixed model mirroring SparkEntry's shape (integer scores)
+    // tiny fixed model mirroring TextKeys.FixedUnigramModel's shape (integer scores)
     val model = Seq("ab" -> -2.0, "cd" -> -3.0, "a" -> -4.0, "b" -> -4.0,
       "c" -> -5.0, "d" -> -5.0, "e" -> -5.0)
     val lp = model.toMap
@@ -341,7 +341,7 @@ class UnigramLmSpec extends SparkSpec {
   }
 
   test("docQualityWithModel ranks fluent text above noise on the fixture model") {
-    val model = SparkEntry.FixedUnigramModel
+    val model = graft.entry.TextKeys.FixedUnigramModel
     val docs = docsOf(Seq(
       "table data value in row",     // in-model-ish words
       "qqqq xxxx zzzz qqqq xxxx"))   // floor-heavy noise
