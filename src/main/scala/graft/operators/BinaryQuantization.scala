@@ -142,14 +142,6 @@ object BinaryQuantization {
         bit_count(col("word")).cast("long").as("n_set"))
       .orderBy(col(idCol), col("word_idx"))
 
-  /** Two-stage ANN: Hamming scan over the packed codes keeps the
-    * `k × candFactor` closest candidates (ties by id), then the exact
-    * cosine rerank over ONLY those rows emits the top k. The candidate
-    * cut is a `TakeOrderedAndProject` over the 32×-compressed frame; the
-    * rerank side is `candidates ⋈ corpus` with the bounded candidate list
-    * broadcast, so the full-precision vectors are touched `k × candFactor`
-    * times, never scanned.
-    */
   /** Batch twin of [[bqKnn]] — the knnBatch shape applied to the
     * two-stage contract: queries broadcast against the packed codes,
     * per-query candidate cut via the bounded `graft_topk` aggregate
@@ -221,15 +213,7 @@ object BinaryQuantization {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && candFactor >= 1, "k and candFactor must be >= 1")
-    val enc = bqEncode(emb, dim, idCol, vecCol)
-    val qwords = bqEncode(
-      query.select(lit(0L).as(idCol), col("qv").as(vecCol)), dim, idCol, vecCol)
-      .select(col("words").as("qwords"))
-    val cand = enc
-      .crossJoin(broadcast(qwords))
-      .select(col(idCol), hamming(col("words"), col("qwords")).as("hamming"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(k * candFactor)
+    val cand = hammingShortlist(emb, query, k * candFactor, dim, idCol, vecCol)
     Quantization.sq8Encode(emb, idCol, vecCol)
       .join(broadcast(cand), idCol)
       .crossJoin(broadcast(query.select(col("qv").cast("array<double>").as("qv"))))
@@ -244,6 +228,32 @@ object BinaryQuantization {
       .limit(k)
   }
 
+  /** The single-query Hamming shortlist: the n packed codes closest to
+    * the query's sign bits, ties by id — (id, hamming). The cut is a
+    * `TakeOrderedAndProject` over the 32×-compressed frame.
+    */
+  private def hammingShortlist(
+      emb: DataFrame, query: DataFrame, n: Int, dim: Int,
+      idCol: String, vecCol: String): DataFrame = {
+    val enc = bqEncode(emb, dim, idCol, vecCol)
+    val qwords = bqEncode(
+      query.select(lit(0L).as(idCol), col("qv").as(vecCol)), dim, idCol, vecCol)
+      .select(col("words").as("qwords"))
+    enc
+      .crossJoin(broadcast(qwords))
+      .select(col(idCol), hamming(col("words"), col("qwords")).as("hamming"))
+      .orderBy(col("hamming"), col(idCol))
+      .limit(n)
+  }
+
+  /** Two-stage ANN: Hamming scan over the packed codes keeps the
+    * `k × candFactor` closest candidates (ties by id), then the exact
+    * cosine rerank over ONLY those rows emits the top k. The candidate
+    * cut is a `TakeOrderedAndProject` over the 32×-compressed frame; the
+    * rerank side is `candidates ⋈ corpus` with the bounded candidate list
+    * broadcast, so the full-precision vectors are touched `k × candFactor`
+    * times, never scanned.
+    */
   def bqKnn(
       emb: DataFrame,
       query: DataFrame, // one row, col "qv"
@@ -253,15 +263,7 @@ object BinaryQuantization {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && candFactor >= 1, "k and candFactor must be >= 1")
-    val enc = bqEncode(emb, dim, idCol, vecCol)
-    val qwords = bqEncode(
-      query.select(lit(0L).as(idCol), col("qv").as(vecCol)), dim, idCol, vecCol)
-      .select(col("words").as("qwords"))
-    val cand = enc
-      .crossJoin(broadcast(qwords))
-      .select(col(idCol), hamming(col("words"), col("qwords")).as("hamming"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(k * candFactor)
+    val cand = hammingShortlist(emb, query, k * candFactor, dim, idCol, vecCol)
     emb
       .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
       .join(broadcast(cand), idCol)

@@ -196,17 +196,6 @@ object IvfTrained {
     }.toSeq
   }
 
-  /** EXACT top-k accelerated by the trained quantizer: seed-probe the
-    * `nProbeSeed` nearest cells for a kth-best bound τ, prune every cell
-    * the radius bound proves top-k-free, and rerank the survivors
-    * exactly. The output is the GLOBAL exact top-k by the triangle
-    * inequality — independent of model quality (a badly-trained quantizer
-    * only prunes less), so a cross-engine oracle can state it as a plain
-    * exact k-NN. Supports cosine over a spherical model (the monotone
-    * d²/2 mapping; the reference's zero-norm→1.0 convention stays exact
-    * because a zero vector's cell is never prunable at τ ≥ 1) and
-    * euclidean over a raw model.
-    */
   private def resolveSpace(metricName: String, m: Model): Boolean =
     metricName match {
       case "cosine" =>
@@ -219,6 +208,17 @@ object IvfTrained {
         throw new IllegalArgumentException(s"unsupported metric $other")
     }
 
+  /** EXACT top-k accelerated by the trained quantizer: seed-probe the
+    * `nProbeSeed` nearest cells for a kth-best bound τ, prune every cell
+    * the radius bound proves top-k-free, and rerank the survivors
+    * exactly. The output is the GLOBAL exact top-k by the triangle
+    * inequality — independent of model quality (a badly-trained quantizer
+    * only prunes less), so a cross-engine oracle can state it as a plain
+    * exact k-NN. Supports cosine over a spherical model (the monotone
+    * d²/2 mapping; the reference's zero-norm→1.0 convention stays exact
+    * because a zero vector's cell is never prunable at τ ≥ 1) and
+    * euclidean over a raw model.
+    */
   def knnExact(
       emb: DataFrame,
       query: DataFrame,

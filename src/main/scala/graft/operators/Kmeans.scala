@@ -165,15 +165,6 @@ object Kmeans {
     v.map(x => BigDecimal(x * 1e6)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong).toArray
 
-  /** Trained-quantizer ANN over the integer-exact model: assign the
-    * corpus to the fitted cells, probe the `nProbe` cells nearest the
-    * query (integer sqdist, driver-ranked over the bounded k·dim
-    * model), exact cosine over only the probed cells' members, top-k.
-    * Every stage deterministic ⇒ the WHOLE trained-ANN path is
-    * oracle-checkable INCLUDING the cell pruning — the property the
-    * MLlib-backed ivf_trained_knn (engine-internal RNG) cannot have.
-    * nProbe = k cells degrades to exact knn (spec-gated).
-    */
   /** The query's nProbe nearest cells under the model — integer sqdist
     * over the bounded k·dim matrix, ranked driver-side, ties by cent_id.
     * Shared with the residual-PQ probe.
@@ -186,6 +177,15 @@ object Kmeans {
       }
       .sorted.take(nProbe).map(_._2).toSeq
 
+  /** Trained-quantizer ANN over the integer-exact model: assign the
+    * corpus to the fitted cells, probe the `nProbe` cells nearest the
+    * query (integer sqdist, driver-ranked over the bounded k·dim
+    * model), exact cosine over only the probed cells' members, top-k.
+    * Every stage deterministic ⇒ the WHOLE trained-ANN path is
+    * oracle-checkable INCLUDING the cell pruning — the property the
+    * MLlib-backed ivf_trained_knn (engine-internal RNG) cannot have.
+    * nProbe = k cells degrades to exact knn (spec-gated).
+    */
   def trainedKnn(
       emb: DataFrame,
       query: DataFrame, // one row, col "qv" in the original space

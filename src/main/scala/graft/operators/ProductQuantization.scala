@@ -5,173 +5,34 @@ import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the standard heavy-compression ANN path:
   * split each vector into M subvectors, k-means a codebook per subspace,
-  * store one code byte per subspace. A 64-d float64 vector (512 B)
-  * becomes M=8 bytes — 64× — which is what makes billion-vector serving
-  * corpora fit in memory. Complements SQ8 (8×, oracle-checkable) at the
-  * other end of the compression/recall trade.
+  * store one small code per subspace. A 64-d float64 vector (512 B)
+  * becomes M codes, which is what makes billion-vector serving corpora
+  * fit in memory. Complements SQ8 (8×) at the other end of the
+  * compression/recall trade.
   *
   * Search uses ADC (asymmetric distance computation): per query, build an
   * M×K table of exact query-subvector→centroid distances, then every
   * corpus distance is M table lookups + adds — no decode.
   *
-  * Codebooks are trained with seeded MLlib k-means per subspace (same
-  * reproducibility contract as IvfTrained: deterministic per
-  * seed+partitioning, but not cross-engine — so quality is spec-gated,
-  * not oracle-hashed).
+  * One trainer family, integer-exact: the [[Kmeans]] discipline applied
+  * per SUBSPACE — first-k init, micro-long vectors, integer squared
+  * distances, truncating integer means — so codebooks, codes, AND the
+  * ADC distances are bit-identical in any engine, and the full ANN
+  * answer (shortlist cut included) hash-checks against a SQL replay of
+  * the training loop (the kmeans_trained_knn precedent, composed M
+  * times). Flat PQ ([[fitExact]]) and residual IVF-PQ ([[fitResidual]])
+  * share it, and every ADC face is the same three steps: an ADC
+  * shortlist of k·candFactor ids over the codes (ties by id), optionally
+  * cut to the query's probed coarse cells, then an exact cosine rerank
+  * over ONLY the survivors.
   *
   * Scale shape: training samples the corpus (k-means on M small
-  * subspaces), codebooks broadcast (M·K·dsub doubles — KBs), encoding is
-  * one narrow pass, and the encoded table is 64× smaller than the
-  * original — scans, shuffles, and caches all shrink with it.
+  * subspaces), codebooks ride the plan as literals (M·K·dsub longs —
+  * KBs), encoding is one narrow pass, and the encoded table is far
+  * smaller than the original — scans, shuffles, and caches all shrink
+  * with it.
   */
 object ProductQuantization {
-
-  /** codebooks(m)(k) = centroid k of subspace m (each of length dim/M). */
-  final case class Model(dim: Int, m: Int, codebooks: Array[Array[Array[Double]]]) {
-    def dsub: Int = dim / m
-  }
-
-  /** Train per-subspace codebooks (K centroids each) with seeded k-means. */
-  def train(
-      emb: DataFrame,
-      m: Int,
-      k: Int,
-      seed: Long = 42L,
-      maxIter: Int = 20,
-      vecCol: String = "embedding"): Model = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val vecs = emb.select(col(vecCol).cast("array<double>")).as[Seq[Double]]
-    val dim = vecs.head().length
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    val codebooks = (0 until m).map { sub =>
-      // slice + array_to_vector: the built-in MLlib boundary bridge, no UDF
-      val feats = vecs
-        .toDF("sv")
-        .select(org.apache.spark.ml.functions.array_to_vector(
-          slice(col("sv"), sub * dsub + 1, dsub)).as("features"))
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(k).setSeed(seed + sub).setMaxIter(maxIter)
-        .fit(feats)
-        .clusterCenters.map(_.toArray)
-    }.toArray
-    Model(dim, m, codebooks)
-  }
-
-  /** Encode: (id, codes ARRAY<INT>) — code(m) = nearest centroid in
-    * subspace m (euclidean, ties to the lower id). One narrow pass with
-    * broadcast codebooks.
-    */
-  def encode(
-      emb: DataFrame,
-      model: Model,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    emb.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .map { case (id, v) =>
-        val mm = bc.value
-        val codes = Array.tabulate(mm.m) { sub =>
-          val off = sub * mm.dsub
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < mm.codebooks(sub).length) {
-            val cent = mm.codebooks(sub)(c)
-            var d = 0.0; var i = 0
-            while (i < cent.length) {
-              val t = v(off + i) - cent(i); d += t * t; i += 1
-            }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          best
-        }
-        (id, codes)
-      }
-      .toDF(idCol, "codes")
-  }
-
-  /** ADC top-k: exact per-subspace distance table for the query, then
-    * each corpus row costs M lookups. Returns (id, distance) with
-    * distance = sqrt(Σ_sub ‖q_sub − centroid(code_sub)‖²) — the PQ
-    * approximation of euclidean distance.
-    */
-  def adcKnn(
-      encoded: DataFrame, // (idCol, codes)
-      model: Model,
-      query: Array[Double],
-      k: Int,
-      idCol: String = "vec_id"): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    require(query.length == model.dim)
-    val table: Array[Array[Double]] = Array.tabulate(model.m) { sub =>
-      val off = sub * model.dsub
-      model.codebooks(sub).map { cent =>
-        var d = 0.0; var i = 0
-        while (i < cent.length) { val t = query(off + i) - cent(i); d += t * t; i += 1 }
-        d
-      }
-    }
-    val bc = spark.sparkContext.broadcast(table)
-    encoded.select(col(idCol).cast("long"), col("codes"))
-      .as[(Long, Array[Int])]
-      .map { case (id, codes) =>
-        val t = bc.value
-        var d = 0.0; var sub = 0
-        while (sub < codes.length) { d += t(sub)(codes(sub)); sub += 1 }
-        (id, math.sqrt(d))
-      }
-      .toDF(idCol, "distance")
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
-  }
-
-  /** PQ as a CANDIDATE GENERATOR + exact re-rank — how PQ is actually
-    * deployed: the cheap ADC scan runs over the 64×-compressed table to
-    * produce a `shortlist`, and only those rows' full vectors are read for
-    * exact ranking. ADC collapses within-cell distances (all members of a
-    * codebook cell tie), so top-k STRAIGHT from ADC scrambles local ranks;
-    * the re-rank restores them while still touching shortlist/N of the
-    * full-precision data.
-    */
-  def adcKnnRerank(
-      encoded: DataFrame,
-      emb: DataFrame,
-      model: Model,
-      query: Array[Double],
-      k: Int,
-      shortlist: Int = 100,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val spark = encoded.sparkSession
-    val cand = adcKnn(encoded, model, query, shortlist, idCol).select(col(idCol))
-    val qLit = lit(query.toSeq.toArray)
-    emb.join(broadcast(cand), idCol)
-      .select(
-        col(idCol),
-        graft.functions.VectorFunctions
-          .roundDist(graft.functions.VectorFunctions.euclidean(
-            col(vecCol).cast("array<double>"), qLit))
-          .as("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
-  }
-
-  // ---- integer-exact PQ: the ORACLE-CHECKABLE trainer + ADC face ---------
-  //
-  // The MLlib-trained path above is deterministic per seed but not
-  // cross-engine; this one is the [[Kmeans]] discipline applied per
-  // SUBSPACE — first-k init, micro-long vectors, integer squared
-  // distances, truncating integer means — so codebooks, codes, AND the
-  // ADC distances are bit-identical in any engine: the first PQ path
-  // whose full ANN answer (shortlist cut included) hash-checks against
-  // a SQL replay of the training loop (the kmeans_trained_knn
-  // precedent, composed M times).
 
   /** Per-subspace integer-exact models. Training cost: m × Kmeans.fit
     * over the dsub-sliced corpus (each fit is `iterations`+1 narrow
@@ -298,8 +159,100 @@ object ProductQuantization {
       element_at(typedlit(t.toSeq), col(s"code_$sub").cast("int") + 1)
     }.reduce(_ + _)
 
-  private def adcColumn(tables: Array[Array[Long]]): Column =
-    adcExpr(tables).as("adc_sqdist_micro")
+  // ---- the one query path every ADC face is built from -----------------
+
+  /** The single query vector of a one-row (qv) frame. */
+  private def queryVec(query: DataFrame): Seq[Double] =
+    query.select(col("qv").cast("array<double>")).head().getSeq[Double](0)
+
+  /** Collect a bounded (query_id, qv) batch ONCE, sorted by query_id, and
+    * answer it — the legs, the empty guard, and the rerank broadcast all
+    * derive from the same materialized rows, so an expensive or
+    * nondeterministic query frame (e.g. an unordered limit) is evaluated
+    * exactly one time. An empty batch (an idle streaming micro-batch)
+    * answers the typed empty (query_id, id, adc_sqdist_micro, distance,
+    * rank) frame, not a reduce-on-empty crash.
+    */
+  private def withQueries(emb: DataFrame, queries: DataFrame, idCol: String)(
+      answer: Array[(Long, Seq[Double])] => DataFrame): DataFrame = {
+    val qRows = queries
+      .select(col("query_id").cast("long"), col("qv").cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .sortBy(_._1)
+    if (qRows.isEmpty)
+      emb.limit(0).select(lit(0L).as("query_id"),
+        col(idCol), lit(0L).as("adc_sqdist_micro"),
+        lit(0.0).as("distance"), lit(0L).as("rank"))
+    else answer(qRows)
+  }
+
+  /** The shortlist leg: the n codes with the smallest ADC distance, ties
+    * by id — (id, adc_sqdist_micro).
+    */
+  private def shortlist(
+      codes: DataFrame, adc: Column, n: Int, idCol: String): DataFrame =
+    codes
+      .select(col(idCol), adc.as("adc_sqdist_micro"))
+      .orderBy(col("adc_sqdist_micro"), col(idCol))
+      .limit(n)
+
+  private def cosineDistance(vecCol: String): Column =
+    graft.functions.VectorFunctions.roundDist(
+      graft.functions.VectorFunctions.cosine(col(vecCol), col("qv")))
+      .as("distance")
+
+  /** Exact cosine rerank of one query's shortlist: the bq_knn shape
+    * (id, adc_sqdist_micro, distance), top k by (distance, id).
+    */
+  private def rerank(
+      emb: DataFrame, cand: DataFrame, query: DataFrame, k: Int,
+      idCol: String, vecCol: String): DataFrame =
+    emb
+      .join(broadcast(cand), Seq(idCol))
+      .crossJoin(broadcast(query))
+      .select(col(idCol), col("adc_sqdist_micro"), cosineDistance(vecCol))
+      .orderBy(col("distance"), col(idCol))
+      .limit(k)
+
+  /** Batch rerank-and-rank tail over (query_id, id, adc_sqdist_micro)
+    * candidates: exact cosine against the broadcast query rows, rank per
+    * query — the bq_knn_batch shape (query_id, id, adc_sqdist_micro,
+    * distance, rank).
+    */
+  private def rerankRanked(
+      emb: DataFrame, cands: DataFrame, qRows: Array[(Long, Seq[Double])],
+      k: Int, idCol: String, vecCol: String): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("distance"), col(idCol))
+    emb
+      .join(broadcast(cands), Seq(idCol))
+      .join(broadcast(qRows.toSeq.toDF("query_id", "qv")), Seq("query_id"))
+      .select(col("query_id"), col(idCol), col("adc_sqdist_micro"),
+        cosineDistance(vecCol))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** The leg-shaped batch: one bounded shortlist leg per query — `leg`
+    * gives the query's code frame and ADC column — unioned, then the
+    * rerank-and-rank tail.
+    */
+  private def legBatch(
+      emb: DataFrame, qRows: Array[(Long, Seq[Double])], k: Int,
+      candFactor: Int, idCol: String, vecCol: String)(
+      leg: Seq[Double] => (DataFrame, Column)): DataFrame = {
+    val cands = qRows.map { case (qid, qv) =>
+      val (codes, adc) = leg(qv)
+      shortlist(codes, adc, k * candFactor, idCol)
+        .select(lit(qid).as("query_id"), col(idCol), col("adc_sqdist_micro"))
+    }.reduce(_.unionByName(_))
+    rerankRanked(emb, cands, qRows, k, idCol, vecCol)
+  }
 
   /** Integer-exact PQ ANN: ADC shortlist of k·candFactor ids over the
     * compressed codes (ties by id), exact cosine rerank over ONLY the
@@ -320,21 +273,9 @@ object ProductQuantization {
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && candFactor >= 1, "bad k/candFactor")
     val models = fitExact(emb, dim, m, kSub, iterations, idCol, vecCol)
-    val qv = query.select(col("qv").cast("array<double>"))
-      .head().getSeq[Double](0)
-    val cand = encodeExact(emb, models, dim, idCol, vecCol)
-      .select(col(idCol), adcColumn(adcTables(models, qv)))
-      .orderBy(col("adc_sqdist_micro"), col(idCol))
-      .limit(k * candFactor)
-    emb
-      .join(broadcast(cand), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), col("adc_sqdist_micro"),
-        graft.functions.VectorFunctions.roundDist(
-          graft.functions.VectorFunctions.cosine(col(vecCol), col("qv")))
-          .as("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    val cand = shortlist(encodeExact(emb, models, dim, idCol, vecCol),
+      adcExpr(adcTables(models, queryVec(query))), k * candFactor, idCol)
+    rerank(emb, cand, query, k, idCol, vecCol)
   }
 
   /** Batch twin: codes computed ONCE (persisted), one bounded
@@ -374,45 +315,12 @@ object ProductQuantization {
       k: Int,
       candFactor: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    // collect ONCE: the legs, the empty guard, and the rerank broadcast
-    // all derive from the same materialized rows, so a query frame that
-    // is expensive (or nondeterministic, e.g. an unordered limit) is
-    // evaluated exactly one time
-    val qRows = queries
-      .select(col("query_id").cast("long"), col("qv").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    if (qRows.isEmpty)
-      return emb.limit(0).select(lit(0L).as("query_id"),
-        col(idCol), lit(0L).as("adc_sqdist_micro"),
-        lit(0.0).as("distance"), lit(0L).as("rank"))
-    val spark0 = emb.sparkSession
-    import spark0.implicits._
-    val qLocal = qRows.toSeq.toDF("query_id", "qv")
-    val legs = qRows.map { case (qid, qv) =>
-      encoded
-        .select(col(idCol), adcColumn(adcTables(models, qv)))
-        .orderBy(col("adc_sqdist_micro"), col(idCol))
-        .limit(k * candFactor)
-        .select(lit(qid).as("query_id"), col(idCol), col("adc_sqdist_micro"))
+      vecCol: String = "embedding"): DataFrame =
+    withQueries(emb, queries, idCol) { qRows =>
+      legBatch(emb, qRows, k, candFactor, idCol, vecCol) { qv =>
+        (encoded, adcExpr(adcTables(models, qv)))
+      }
     }
-    val cands = legs.reduce(_.unionByName(_))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("distance"), col(idCol))
-    emb
-      .join(broadcast(cands), Seq(idCol))
-      .join(broadcast(qLocal), Seq("query_id"))
-      .select(col("query_id"), col(idCol), col("adc_sqdist_micro"),
-        graft.functions.VectorFunctions.roundDist(
-          graft.functions.VectorFunctions.cosine(col(vecCol), col("qv")))
-          .as("distance"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
-  }
 
   // ---- residual (IVF-)PQ: the at-scale remedy to within-cluster
   // blindness, still oracle-checkable ------------------------------------
@@ -524,6 +432,36 @@ object ProductQuantization {
       query, nProbe, k, candFactor, idCol, vecCol)
   }
 
+  /** The query's nProbe nearest coarse cells (integer sqdist,
+    * driver-ranked, ties by cent_id), each with the integer ADC tables of
+    * the query RESIDUAL against that cell — bounded nProbe·m·kSub longs,
+    * all driver-side.
+    */
+  private def probeTables(
+      rm: ResidualModel, qv: Seq[Double],
+      nProbe: Int): Seq[(Long, Array[Array[Long]])] = {
+    val qMicro = Kmeans.microOf(qv)
+    val ordered = rm.coarse.centroids.sortBy(_._1)
+    Kmeans.probeCellsFor(rm.coarse, qMicro, nProbe).map { c =>
+      val cv = ordered(c.toInt)._2
+      val qr = qMicro.zip(cv).map { case (a, b) => (a - b).toDouble / 1e6 }
+      (c, adcTables(rm.books, qr.toIndexedSeq))
+    }
+  }
+
+  /** One query's residual leg: the codes cut to its probed cells, and
+    * the ADC column that picks each row's per-cell tables.
+    */
+  private def probeLeg(
+      rm: ResidualModel, codes: DataFrame, qv: Seq[Double],
+      nProbe: Int): (DataFrame, Column) = {
+    val perCell = probeTables(rm, qv, nProbe)
+    val adc = perCell.foldRight(lit(null).cast("long")) {
+      case ((c, t), acc) => when(col("cent_id") === c, adcExpr(t)).otherwise(acc)
+    }
+    (codes.where(col("cent_id").isin(perCell.map(_._1): _*)), adc)
+  }
+
   /** [[residualAdcKnn]] over a PRE-TRAINED model and PRE-ENCODED codes
     * — the serve-many face.
     */
@@ -537,35 +475,9 @@ object ProductQuantization {
       candFactor: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val qv = query.select(col("qv").cast("array<double>"))
-      .head().getSeq[Double](0)
-    val qMicro = Kmeans.microOf(qv)
-    val probeCells = Kmeans.probeCellsFor(rm.coarse, qMicro, nProbe)
-    val ordered = rm.coarse.centroids.sortBy(_._1)
-    // per probed cell: the query RESIDUAL against that cell, and its
-    // integer ADC tables — bounded nProbe·m·kSub longs, all driver-side
-    val perCell = probeCells.map { c =>
-      val cv = ordered(c.toInt)._2
-      val qr = qMicro.zip(cv).map { case (a, b) => (a - b).toDouble / 1e6 }
-      (c, adcTables(rm.books, qr.toIndexedSeq))
-    }
-    val adcCol = perCell.foldRight(lit(null).cast("long")) {
-      case ((c, t), acc) => when(col("cent_id") === c, adcExpr(t)).otherwise(acc)
-    }
-    val cand = encoded
-      .where(col("cent_id").isin(probeCells: _*))
-      .select(col(idCol), adcCol.as("adc_sqdist_micro"))
-      .orderBy(col("adc_sqdist_micro"), col(idCol))
-      .limit(k * candFactor)
-    emb
-      .join(broadcast(cand), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), col("adc_sqdist_micro"),
-        graft.functions.VectorFunctions.roundDist(
-          graft.functions.VectorFunctions.cosine(col(vecCol), col("qv")))
-          .as("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    val (cut, adc) = probeLeg(rm, encoded, queryVec(query), nProbe)
+    rerank(emb, shortlist(cut, adc, k * candFactor, idCol), query, k,
+      idCol, vecCol)
   }
 
   /** Batch twin of [[residualAdcKnn]]: model + codes once, one bounded
@@ -613,58 +525,10 @@ object ProductQuantization {
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && candFactor >= 1 && nProbe >= 1 &&
       nProbe <= rm.coarse.centroids.length, "bad k/candFactor/nProbe")
-    val encoded = codes
-    val ordered = rm.coarse.centroids.sortBy(_._1)
-    // collect ONCE: the legs, the empty guard (an idle streaming
-    // micro-batch answers an empty typed frame, not a reduce-on-empty
-    // crash), and the rerank broadcast all derive from the same
-    // materialized rows — an expensive or nondeterministic query frame
-    // (e.g. an unordered limit) is evaluated exactly one time
-    val qRows = queries
-      .select(col("query_id").cast("long"), col("qv").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    if (qRows.isEmpty)
-      return emb.limit(0).select(lit(0L).as("query_id"),
-        col(idCol), lit(0L).as("adc_sqdist_micro"),
-        lit(0.0).as("distance"), lit(0L).as("rank"))
-    val spark0 = emb.sparkSession
-    import spark0.implicits._
-    val qLocal = qRows.toSeq.toDF("query_id", "qv")
-    val legs = qRows.map { case (qid, qv) =>
-      val qMicro = Kmeans.microOf(qv)
-      val probeCells = Kmeans.probeCellsFor(rm.coarse, qMicro, nProbe)
-      val perCell = probeCells.map { c =>
-        val cv = ordered(c.toInt)._2
-        val qr = qMicro.zip(cv).map { case (a, b) => (a - b).toDouble / 1e6 }
-        (c, adcTables(rm.books, qr.toIndexedSeq))
-      }
-      val adcCol = perCell.foldRight(lit(null).cast("long")) {
-        case ((c, t), acc) =>
-          when(col("cent_id") === c, adcExpr(t)).otherwise(acc)
-      }
-      encoded
-        .where(col("cent_id").isin(probeCells: _*))
-        .select(col(idCol), adcCol.as("adc_sqdist_micro"))
-        .orderBy(col("adc_sqdist_micro"), col(idCol))
-        .limit(k * candFactor)
-        .select(lit(qid).as("query_id"), col(idCol), col("adc_sqdist_micro"))
+    withQueries(emb, queries, idCol) { qRows =>
+      legBatch(emb, qRows, k, candFactor, idCol, vecCol)(
+        probeLeg(rm, codes, _, nProbe))
     }
-    val cands = legs.reduce(_.unionByName(_))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("distance"), col(idCol))
-    emb
-      .join(broadcast(cands), Seq(idCol))
-      .join(broadcast(qLocal), Seq("query_id"))
-      .select(col("query_id"), col(idCol), col("adc_sqdist_micro"),
-        graft.functions.VectorFunctions.roundDist(
-          graft.functions.VectorFunctions.cosine(col(vecCol), col("qv")))
-          .as("distance"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** JOIN-SHAPED bulk twin of [[residualAdcKnnBatchFrom]] — same math,
@@ -693,67 +557,43 @@ object ProductQuantization {
     import spark.implicits._
     require(k >= 1 && candFactor >= 1 && nProbe >= 1 &&
       nProbe <= rm.coarse.centroids.length, "bad k/candFactor/nProbe")
-    val ordered = rm.coarse.centroids.sortBy(_._1)
-    val qRows = queries
-      .select(col("query_id").cast("long"), col("qv").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    if (qRows.isEmpty)
-      return emb.limit(0).select(lit(0L).as("query_id"),
-        col(idCol), lit(0L).as("adc_sqdist_micro"),
-        lit(0.0).as("distance"), lit(0L).as("rank"))
-    val qLocal = qRows.toSeq.toDF("query_id", "qv")
-    val partialRows: Seq[(Long, Long, Int, Long, Long)] =
-      qRows.toSeq.flatMap { case (qid, qv) =>
-        val qMicro = Kmeans.microOf(qv)
-        Kmeans.probeCellsFor(rm.coarse, qMicro, nProbe).flatMap { c =>
-          val cv = ordered(c.toInt)._2
-          val qr = qMicro.zip(cv).map { case (a, b) => (a - b).toDouble / 1e6 }
-          adcTables(rm.books, qr.toIndexedSeq).toSeq.zipWithIndex.flatMap {
-            case (tbl, book) => tbl.toSeq.zipWithIndex.map { case (v, code) =>
-              (qid, c, book, code.toLong, v)
+    withQueries(emb, queries, idCol) { qRows =>
+      val partialRows: Seq[(Long, Long, Int, Long, Long)] =
+        qRows.toSeq.flatMap { case (qid, qv) =>
+          probeTables(rm, qv, nProbe).flatMap { case (c, tables) =>
+            tables.toSeq.zipWithIndex.flatMap { case (tbl, book) =>
+              tbl.toSeq.zipWithIndex.map { case (v, code) =>
+                (qid, c, book, code.toLong, v)
+              }
             }
           }
         }
-      }
-    val partials = partialRows
-      .toDF("query_id", "cent_id", "book", "code", "partial")
-    val allCells = partialRows.map(_._2).distinct
-    val qCells = partialRows.map(p => (p._1, p._2)).distinct
-      .toDF("query_id", "cent_id")
-    val codeArr = array((0 until rm.m).map(s => col(s"code_$s")): _*)
-    val melted = codes
-      // static cell cut FIRST: on the partitioned layout this prunes
-      // every directory outside the union of probed cells at listing
-      .where(col("cent_id").isin(allCells: _*))
-      .join(broadcast(qCells), Seq("cent_id"))
-      .select(col("query_id"), col(idCol), col("cent_id"),
-        posexplode(codeArr).as(Seq("book", "code")))
-    val adc = melted
-      .join(broadcast(partials), Seq("query_id", "cent_id", "book", "code"))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("partial")).as("adc_sqdist_micro"))
-    val wCut = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_sqdist_micro"), col(idCol))
-    val cands = adc
-      .withColumn("cut", row_number().over(wCut))
-      .where(col("cut") <= k * candFactor)
-      .select(col("query_id"), col(idCol), col("adc_sqdist_micro"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("distance"), col(idCol))
-    emb
-      .join(broadcast(cands), Seq(idCol))
-      .join(broadcast(qLocal), Seq("query_id"))
-      .select(col("query_id"), col(idCol), col("adc_sqdist_micro"),
-        graft.functions.VectorFunctions.roundDist(
-          graft.functions.VectorFunctions.cosine(col(vecCol), col("qv")))
-          .as("distance"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+      val partials = partialRows
+        .toDF("query_id", "cent_id", "book", "code", "partial")
+      val allCells = partialRows.map(_._2).distinct
+      val qCells = partialRows.map(p => (p._1, p._2)).distinct
+        .toDF("query_id", "cent_id")
+      val codeArr = array((0 until rm.m).map(s => col(s"code_$s")): _*)
+      val melted = codes
+        // static cell cut FIRST: on the partitioned layout this prunes
+        // every directory outside the union of probed cells at listing
+        .where(col("cent_id").isin(allCells: _*))
+        .join(broadcast(qCells), Seq("cent_id"))
+        .select(col("query_id"), col(idCol), col("cent_id"),
+          posexplode(codeArr).as(Seq("book", "code")))
+      val adc = melted
+        .join(broadcast(partials), Seq("query_id", "cent_id", "book", "code"))
+        .groupBy(col("query_id"), col(idCol))
+        .agg(sum(col("partial")).as("adc_sqdist_micro"))
+      val wCut = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("adc_sqdist_micro"), col(idCol))
+      val cands = adc
+        .withColumn("cut", row_number().over(wCut))
+        .where(col("cut") <= k * candFactor)
+        .select(col("query_id"), col(idCol), col("adc_sqdist_micro"))
+      rerankRanked(emb, cands, qRows, k, idCol, vecCol)
+    }
   }
 
   /** Materialize the residual quantizer as a PARTITIONED LAYOUT: the
@@ -844,11 +684,76 @@ object ProductQuantization {
       readResidualModel(spark, path), queries, nProbe, k, candFactor,
       idCol, vecCol)
 
-  /** The DuckDB twin of [[residualAdcKnn]]: the coarse Lloyd chain, a
-    * residual source CTE (micro − final centroid), one residual chain
-    * per subspace trained FROM that source, per-(cell, code) integer
-    * ADC tables for the query, member cut by probed cell, shortlist,
-    * exact rerank.
+  // ---- the DuckDB twins ------------------------------------------------
+
+  /** The residual replay both residual twins start from: the coarse Lloyd
+    * chain (`cg_`), the residual source CTE `rsrc` (micro − final
+    * centroid), and one residual chain per subspace trained FROM it.
+    */
+  private def residualChainsSql(
+      table: String, dim: Int, kCoarse: Int, coarseIters: Int,
+      m: Int, kSub: Int, pqIters: Int): String = {
+    val dsub = dim / m
+    val cFin = coarseIters + 1
+    val coarseChain = Kmeans.iterationCtes(table, kCoarse, coarseIters, "cg_")
+    val residChains = (0 until m).map { s =>
+      Kmeans.iterationCtes(table, kSub, pqIters, s"s${s}_", s * dsub, dsub,
+        srcCte = "rsrc")
+    }.mkString(",\n")
+    s"""$coarseChain,
+       |rsrc AS MATERIALIZED (SELECT m.vec_id, m.i, m.x - c.v AS x
+       |  FROM cg_m m
+       |  JOIN cg_a$cFin a ON a.vec_id = m.vec_id
+       |  JOIN cg_c$coarseIters c ON c.cent_id = a.cent_id AND c.i = m.i),
+       |$residChains""".stripMargin
+  }
+
+  /** The single-query twins' tail: the shortlist cut over the `adc` CTE,
+    * the query row (vec_id 0), exact rerank, top k.
+    */
+  private def pointTailSql(
+      table: String, k: Int, candFactor: Int,
+      dist: (String, String) => String): String =
+    s"""cand AS (SELECT vec_id, adc_sqdist_micro FROM adc
+       |  ORDER BY adc_sqdist_micro, vec_id LIMIT ${k * candFactor}),
+       |q AS (SELECT embedding::DOUBLE[] AS qv FROM $table WHERE vec_id = 0)
+       |SELECT c.vec_id, c.adc_sqdist_micro,
+       |  round(${dist("e.embedding::DOUBLE[]", "q.qv")}, 6) + 0.0 AS distance
+       |FROM $table e
+       |JOIN cand c ON c.vec_id = e.vec_id, q
+       |ORDER BY distance, c.vec_id
+       |LIMIT $k""".stripMargin
+
+  /** The batch twins' tail: the per-query shortlist window over the `adc`
+    * CTE into `cand`, the query rows `qb` (vec_id < 5), the exact rerank
+    * `rr`, and the per-query rank cut.
+    */
+  private def batchTailSql(
+      table: String, adc: String, cand: String, k: Int, candFactor: Int,
+      dist: (String, String) => String): String =
+    s"""$cand AS (SELECT query_id, vec_id, adc_sqdist_micro FROM (
+       |  SELECT query_id, vec_id, adc_sqdist_micro,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY adc_sqdist_micro, vec_id) AS rn
+       |  FROM $adc) WHERE rn <= ${k * candFactor}),
+       |qb AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |  FROM $table WHERE vec_id < 5),
+       |rr AS (SELECT c.query_id, c.vec_id, c.adc_sqdist_micro,
+       |  round(${dist("e.embedding::DOUBLE[]", "q.qv")}, 6) + 0.0 AS distance
+       |  FROM $cand c
+       |  JOIN $table e ON e.vec_id = c.vec_id
+       |  JOIN qb q ON q.query_id = c.query_id)
+       |SELECT query_id, vec_id, adc_sqdist_micro, distance, rank FROM (
+       |  SELECT query_id, vec_id, adc_sqdist_micro, distance,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY distance, vec_id) AS rank
+       |  FROM rr)
+       |WHERE rank <= $k
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** The DuckDB twin of [[residualAdcKnn]]: the residual replay,
+    * per-(cell, code) integer ADC tables for the query, member cut by
+    * probed cell, shortlist, exact rerank.
     */
   def residualOracleSql(
       table: String, dim: Int, kCoarse: Int, coarseIters: Int,
@@ -858,11 +763,6 @@ object ProductQuantization {
     val dsub = dim / m
     val cFin = coarseIters + 1
     val pqFin = pqIters + 1
-    val coarseChain = Kmeans.iterationCtes(table, kCoarse, coarseIters, "cg_")
-    val residChains = (0 until m).map { s =>
-      Kmeans.iterationCtes(table, kSub, pqIters, s"s${s}_", s * dsub, dsub,
-        srcCte = "rsrc")
-    }.mkString(",\n")
     val tables = (0 until m).map { s =>
       val off = s * dsub
       s"""s${s}_t AS (SELECT qr.cent_id AS cell, cb.cent_id AS code,
@@ -878,12 +778,9 @@ object ProductQuantization {
         .stripMargin
     }.mkString("\n  ")
     val total = (0 until m).map(s => s"t$s.sq").mkString(" + ")
-    s"""WITH $coarseChain,
-       |rsrc AS MATERIALIZED (SELECT m.vec_id, m.i, m.x - c.v AS x
-       |  FROM cg_m m
-       |  JOIN cg_a$cFin a ON a.vec_id = m.vec_id
-       |  JOIN cg_c$coarseIters c ON c.cent_id = a.cent_id AND c.i = m.i),
-       |$residChains,
+    val chains =
+      residualChainsSql(table, dim, kCoarse, coarseIters, m, kSub, pqIters)
+    s"""WITH $chains,
        |qm0 AS MATERIALIZED (SELECT i, x FROM cg_m WHERE vec_id = 0),
        |qd AS (SELECT c.cent_id, sum((q.x - c.v) * (q.x - c.v)) AS sq
        |       FROM qm0 q JOIN cg_c$coarseIters c ON c.i = q.i GROUP BY 1),
@@ -899,15 +796,7 @@ object ProductQuantization {
        |  CAST($total AS BIGINT) AS adc_sqdist_micro
        |  FROM mem
        |  $codeJoins),
-       |cand AS (SELECT vec_id, adc_sqdist_micro FROM adc
-       |  ORDER BY adc_sqdist_micro, vec_id LIMIT ${k * candFactor}),
-       |q AS (SELECT embedding::DOUBLE[] AS qv FROM $table WHERE vec_id = 0)
-       |SELECT c.vec_id, c.adc_sqdist_micro,
-       |  round(${dist("e.embedding::DOUBLE[]", "q.qv")}, 6) + 0.0 AS distance
-       |FROM $table e
-       |JOIN cand c ON c.vec_id = e.vec_id, q
-       |ORDER BY distance, c.vec_id
-       |LIMIT $k""".stripMargin
+       |${pointTailSql(table, k, candFactor, dist)}""".stripMargin
   }
 
   /** The DuckDB twin of [[residualAdcKnnBatch]]: the single-query
@@ -923,11 +812,6 @@ object ProductQuantization {
     val dsub = dim / m
     val cFin = coarseIters + 1
     val pqFin = pqIters + 1
-    val coarseChain = Kmeans.iterationCtes(table, kCoarse, coarseIters, "cg_")
-    val residChains = (0 until m).map { s =>
-      Kmeans.iterationCtes(table, kSub, pqIters, s"s${s}_", s * dsub, dsub,
-        srcCte = "rsrc")
-    }.mkString(",\n")
     val tables = (0 until m).map { s =>
       val off = s * dsub
       s"""s${s}_tb AS (SELECT qr.query_id, qr.cent_id AS cell,
@@ -945,12 +829,9 @@ object ProductQuantization {
         .stripMargin
     }.mkString("\n  ")
     val total = (0 until m).map(s => s"t$s.sq").mkString(" + ")
-    s"""WITH $coarseChain,
-       |rsrc AS MATERIALIZED (SELECT m.vec_id, m.i, m.x - c.v AS x
-       |  FROM cg_m m
-       |  JOIN cg_a$cFin a ON a.vec_id = m.vec_id
-       |  JOIN cg_c$coarseIters c ON c.cent_id = a.cent_id AND c.i = m.i),
-       |$residChains,
+    val chains =
+      residualChainsSql(table, dim, kCoarse, coarseIters, m, kSub, pqIters)
+    s"""WITH $chains,
        |qmb AS MATERIALIZED (SELECT vec_id AS query_id, i, x FROM cg_m
        |  WHERE vec_id < 5),
        |qdb AS (SELECT q.query_id, c.cent_id,
@@ -973,25 +854,7 @@ object ProductQuantization {
        |  CAST($total AS BIGINT) AS adc_sqdist_micro
        |  FROM mem
        |  $codeJoins),
-       |candb AS (SELECT query_id, vec_id, adc_sqdist_micro FROM (
-       |  SELECT query_id, vec_id, adc_sqdist_micro,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc_sqdist_micro, vec_id) AS rn
-       |  FROM adcb) WHERE rn <= ${k * candFactor}),
-       |qb AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-       |  FROM $table WHERE vec_id < 5),
-       |rr AS (SELECT c.query_id, c.vec_id, c.adc_sqdist_micro,
-       |  round(${dist("e.embedding::DOUBLE[]", "q.qv")}, 6) + 0.0 AS distance
-       |  FROM candb c
-       |  JOIN $table e ON e.vec_id = c.vec_id
-       |  JOIN qb q ON q.query_id = c.query_id)
-       |SELECT query_id, vec_id, adc_sqdist_micro, distance, rank FROM (
-       |  SELECT query_id, vec_id, adc_sqdist_micro, distance,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY distance, vec_id) AS rank
-       |  FROM rr)
-       |WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
+       |${batchTailSql(table, "adcb", "candb", k, candFactor, dist)}""".stripMargin
   }
 
   /** The DuckDB twin of [[exactAdcKnn]]: one prefixed Lloyd CTE chain
@@ -1032,15 +895,7 @@ object ProductQuantization {
        |  CAST($total AS BIGINT) AS adc_sqdist_micro
        |  FROM s0_adc
        |  $joins),
-       |cand AS (SELECT vec_id, adc_sqdist_micro FROM adc
-       |  ORDER BY adc_sqdist_micro, vec_id LIMIT ${k * candFactor}),
-       |q AS (SELECT embedding::DOUBLE[] AS qv FROM $table WHERE vec_id = 0)
-       |SELECT c.vec_id, c.adc_sqdist_micro,
-       |  round(${dist("e.embedding::DOUBLE[]", "q.qv")}, 6) + 0.0 AS distance
-       |FROM $table e
-       |JOIN cand c ON c.vec_id = e.vec_id, q
-       |ORDER BY distance, c.vec_id
-       |LIMIT $k""".stripMargin
+       |${pointTailSql(table, k, candFactor, dist)}""".stripMargin
   }
 
   /** The DuckDB twin of [[exactAdcKnnBatch]]: the same chains, the ADC
@@ -1082,24 +937,6 @@ object ProductQuantization {
        |  CAST($total AS BIGINT) AS adc_sqdist_micro
        |  FROM s0_adc
        |  $joins),
-       |cand AS (SELECT query_id, vec_id, adc_sqdist_micro FROM (
-       |  SELECT query_id, vec_id, adc_sqdist_micro,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc_sqdist_micro, vec_id) AS rn
-       |  FROM adc) WHERE rn <= ${k * candFactor}),
-       |qb AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-       |  FROM $table WHERE vec_id < 5),
-       |rr AS (SELECT c.query_id, c.vec_id, c.adc_sqdist_micro,
-       |  round(${dist("e.embedding::DOUBLE[]", "q.qv")}, 6) + 0.0 AS distance
-       |  FROM cand c
-       |  JOIN $table e ON e.vec_id = c.vec_id
-       |  JOIN qb q ON q.query_id = c.query_id)
-       |SELECT query_id, vec_id, adc_sqdist_micro, distance, rank FROM (
-       |  SELECT query_id, vec_id, adc_sqdist_micro, distance,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY distance, vec_id) AS rank
-       |  FROM rr)
-       |WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
+       |${batchTailSql(table, "adc", "cand", k, candFactor, dist)}""".stripMargin
   }
 }

@@ -262,41 +262,6 @@ object StreamingOps {
       cent.as("cent_id"), sq.as("sqdist_micro"))
   }
 
-  /** Streaming SQ8 encode-on-ingest: (vmin, vmax, codes) is a pure
-    * per-row function of the vector alone — map-only, stateless,
-    * append mode, EXACT batch parity by construction. The
-    * quality-gate-before-landing pattern applied to the serving
-    * artifact: quantized codes land next to the mutation log per
-    * micro-batch instead of re-encoding the corpus later.
-    */
-  def streamingSq8Encode(
-      vecs: DataFrame /* streaming (vec_id, embedding) */): DataFrame =
-    graft.operators.Quantization.sq8Encode(vecs)
-
-  /** Streaming PQ encode-on-ingest under TRAINED integer-exact
-    * codebooks: the bounded m·kSub·dsub model rides the plan as
-    * literals inside the codegen argmin, so every ingest row encodes
-    * map-only with the EXACT batch semantics (same micro quantization,
-    * argmin, tie rule — StreamingSpec row-parity-gated). Train offline
-    * (`ProductQuantization.fitExact`), encode the stream forever.
-    */
-  def streamingPqEncode(
-      vecs: DataFrame, // streaming (vec_id, embedding)
-      models: Array[graft.operators.Kmeans.Model],
-      dim: Int): DataFrame =
-    graft.operators.ProductQuantization.encodeExact(vecs, models, dim)
-
-  /** Residual-PQ twin: coarse argmin + residual lookup-subtract + m
-    * residual argmins, all from literal trained models — still one
-    * map-only stateless pass, so ingest rows land with their coarse
-    * cell AND fine codes in the same micro-batch (the serving layout's
-    * full write path, streamed).
-    */
-  def streamingResidualPqEncode(
-      vecs: DataFrame, // streaming (vec_id, embedding)
-      rm: graft.operators.ProductQuantization.ResidualModel): DataFrame =
-    graft.operators.ProductQuantization.encodeResidual(vecs, rm)
-
   /** Streaming ANN serving: a stream of query vectors probed against the
     * broadcast HNSW sub-indexes, micro-batch at a time — the closest Spark
     * gets to the reference's online `POST /search` (BASELINE.json notes
@@ -320,27 +285,6 @@ object StreamingOps {
       }
   }
 
-  /** Streaming unigram tokenization — the live-ingest twin of
-    * [[graft.operators.UnigramLm.encodeCorpus]]: a trained piece
-    * inventory (bounded by construction: vocabSize + alphabet) rides the
-    * task closure and Viterbi-encodes every token of each micro-batch
-    * MAP-ONLY — no state, no shuffle, plain append mode, so the operator
-    * runs at scan speed on an unbounded stream. Learn offline on the
-    * corpus, apply forever on the ingest path. Same per-word DP and the
-    * same dense piece-id rank as the batch encoder, so outputs match the
-    * batch operator row for row (StreamingSpec parity gate).
-    */
-  /** Streaming per-document LM quality — the live-ingest twin of
-    * [[graft.operators.UnigramLm.docQualityWithModel]]: the fixed
-    * (piece, score) model rides the task closure (bounded) and every
-    * document scores map-only — no word-vocabulary join (a micro-batch
-    * has no vocabulary worth deduplicating against), no shuffle, no
-    * state — so a quality filter can gate ingest BEFORE anything lands.
-    * Same Viterbi, same micro-nat integer sums, same floor/UNK rules;
-    * documents with zero scoreable tokens emit nothing (the batch
-    * face's groupBy contract). StreamingSpec gates row parity across
-    * micro-batch boundaries.
-    */
   /** Streaming twin of [[graft.operators.TrainingPipeline.mixtureExecute]]
     * — the quality-gate-before-landing pattern applied to the mixture:
     * a live ingest stream keeps each document iff its integer md5 draw
@@ -372,6 +316,17 @@ object StreamingOps {
     docs.where(draw * lit(1000000L) < keepCol * lit(4294967296L))
   }
 
+  /** Streaming per-document LM quality — the live-ingest twin of
+    * [[graft.operators.UnigramLm.docQualityWithModel]]: the fixed
+    * (piece, score) model rides the task closure (bounded) and every
+    * document scores map-only — no word-vocabulary join (a micro-batch
+    * has no vocabulary worth deduplicating against), no shuffle, no
+    * state — so a quality filter can gate ingest BEFORE anything lands.
+    * Same Viterbi, same micro-nat integer sums, same floor/UNK rules;
+    * documents with zero scoreable tokens emit nothing (the batch
+    * face's groupBy contract). StreamingSpec gates row parity across
+    * micro-batch boundaries.
+    */
   def streamingDocQuality(
       docs: DataFrame, model: Seq[(String, Double)]): DataFrame = {
     val spark = docs.sparkSession
@@ -405,6 +360,12 @@ object StreamingOps {
         "mean_neg_logp_micro")
   }
 
+  /** Micro-batches of more queries than this take the join-shaped bulk
+    * face in [[streamingResidualPqServe]]; smaller ones take the
+    * leg-shaped batch face.
+    */
+  final val ResidualPqServeBulkQueries = 32L
+
   /** Streaming ANN over the persisted residual-PQ layout — the
     * compressed-serving twin of the broadcast-HNSW `servingKnn`: query
     * vectors stream in, every micro-batch is answered against the
@@ -423,8 +384,7 @@ object StreamingOps {
       nProbe: Int,
       k: Int,
       candFactor: Int,
-      sink: (DataFrame, Long) => Unit,
-      bulkThreshold: Long = 32L)
+      sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
     val rm = graft.operators.ProductQuantization
@@ -433,11 +393,11 @@ object StreamingOps {
     queries.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         // small interactive batches take the leg face (per-query cell
-        // pruning); bursts above the threshold take the join-shaped
+        // pruning); bursts above the constant take the join-shaped
         // bulk face whose plan size is batch-independent — identical
         // rows either way (spec-gated)
         val answer =
-          if (batch.count() > bulkThreshold)
+          if (batch.count() > ResidualPqServeBulkQueries)
             graft.operators.ProductQuantization.residualAdcKnnBulk(
               emb, codes, rm, batch, nProbe, k, candFactor)
           else
@@ -512,6 +472,16 @@ object StreamingOps {
       .toDF("doc_id", "n_feats", "logw")
   }
 
+  /** Streaming unigram tokenization — the live-ingest twin of
+    * [[graft.operators.UnigramLm.encodeCorpus]]: a trained piece
+    * inventory (bounded by construction: vocabSize + alphabet) rides the
+    * task closure and Viterbi-encodes every token of each micro-batch
+    * MAP-ONLY — no state, no shuffle, plain append mode, so the operator
+    * runs at scan speed on an unbounded stream. Learn offline on the
+    * corpus, apply forever on the ingest path. Same per-word DP and the
+    * same dense piece-id rank as the batch encoder, so outputs match the
+    * batch operator row for row (StreamingSpec parity gate).
+    */
   def streamingTokenize(
       docs: DataFrame, pieces: Map[String, Long]): DataFrame = {
     val spark = docs.sparkSession
@@ -592,13 +562,6 @@ object StreamingOps {
       .toDF("doc_id", "pos", "spos", "subword", "subword_id")
   }
 
-  /** Streaming sessionization — the streaming twin of
-    * Relational.userSessions: gap-merge session windows (30-minute
-    * inactivity) per user, emitted when the watermark closes the session.
-    * session_window merges windows as events arrive, so state per
-    * (user, open session) is one window — bounded by the watermark, the
-    * property that makes this run forever on an unbounded stream.
-    */
   /** Streaming rolling per-user activity — the live twin of
     * [[graft.operators.Relational.rollingUserActivityOf]]: for each
     * event, the same user's strictly-prior-window count and value sum
@@ -746,6 +709,13 @@ object StreamingOps {
       .toDF("event_id", "user_id", "n_prev_hour", "value_prev_hour")
   }
 
+  /** Streaming sessionization — the streaming twin of
+    * Relational.userSessions: gap-merge session windows (30-minute
+    * inactivity) per user, emitted when the watermark closes the session.
+    * session_window merges windows as events arrive, so state per
+    * (user, open session) is one window — bounded by the watermark, the
+    * property that makes this run forever on an unbounded stream.
+    */
   def userSessionsStream(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
@@ -871,41 +841,9 @@ object StreamingOps {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (fp: String, rows: Iterator[(Long, java.sql.Timestamp, String)],
             state: GroupState[PassagePending]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            if (s.resolved) { // TTL eviction firing on a tombstone
-              state.remove()
-              Iterator.empty
-            } else {
-              state.update(s.copy(resolved = true))
-              ttlMs.foreach(t =>
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t))
-              Iterator.single((s.docId, fp))
-            }
-          } else {
-            val cur = state.getOption
-            if (cur.exists(_.resolved)) {
-              // out-of-contract straggler on a tombstone: drop, and re-arm
-              // the eviction clock (a function invocation clears any
-              // previously set timeout)
-              ttlMs.foreach(t =>
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t))
-              Iterator.empty
-            } else {
-              var best = cur.orNull
-              for ((d, ts, _) <- rows) {
-                val t = ts.getTime
-                best =
-                  if (best == null) PassagePending(d, 0, t, resolved = false)
-                  else PassagePending(math.min(d, best.docId), 0,
-                    math.min(t, best.minEventMs), resolved = false)
-              }
-              state.update(best)
-              state.setTimeoutTimestamp(math.max(
-                best.minEventMs + delayMs, state.getCurrentWatermarkMs() + 1))
-              Iterator.empty
-            }
-          }
+          eventTimeKeeper(delayMs, ttlMs, state,
+            rows.map { case (d, ts, _) => (d, 0, ts.getTime) })(
+            s => (s.docId, fp))
       }
   }
 
@@ -916,6 +854,66 @@ object StreamingOps {
     */
   case class PassagePending(
       docId: Long, pidx: Int, minEventMs: Long, resolved: Boolean)
+
+  /** The keeper state function both event-time dedups share. Admitted
+    * instances (doc_id, pidx, event ms) fold into the smallest
+    * (doc_id, pidx) candidate and the earliest event time; once the
+    * watermark passes `earliest + delay` the candidate emits and stays as
+    * a resolved tombstone, evicted `ttl` of event time later when a TTL
+    * is set. The state lifecycle is documented on
+    * [[streamingDedupEventTime]].
+    */
+  private def eventTimeKeeper[O](
+      delayMs: Long, ttlMs: Option[Long], state: GroupState[PassagePending],
+      instances: Iterator[(Long, Int, Long)])(
+      emit: PassagePending => O): Iterator[O] =
+    if (state.hasTimedOut) {
+      val s = state.get
+      if (s.resolved) { // TTL eviction firing on a tombstone
+        state.remove()
+        Iterator.empty
+      } else {
+        // resolution point: the candidate is final among admitted rows
+        state.update(s.copy(resolved = true))
+        ttlMs.foreach(t => // default: no new timeout — tombstone kept
+          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t))
+        Iterator.single(emit(s))
+      }
+    } else {
+      val cur = state.getOption
+      if (cur.exists(_.resolved)) {
+        // post-resolution straggler (out-of-contract by construction:
+        // in-contract rows are watermark-late and filtered before this
+        // function): drop, and re-arm the eviction clock if TTL is on (a
+        // function invocation clears any previously set timeout)
+        ttlMs.foreach(t =>
+          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t))
+        Iterator.empty
+      } else {
+        var best = cur.orNull
+        for ((d, p, t) <- instances) {
+          best =
+            if (best == null) PassagePending(d, p, t, resolved = false)
+            else {
+              val smaller =
+                d < best.docId || (d == best.docId && p < best.pidx)
+              PassagePending(
+                if (smaller) d else best.docId,
+                if (smaller) p else best.pidx,
+                math.min(t, best.minEventMs), resolved = false)
+            }
+        }
+        state.update(best)
+        // the watermark may already sit past minEvent+delay (the
+        // candidate arrived right at the admission edge) — a timeout
+        // at/behind the watermark is rejected by Spark, so clamp forward
+        // one tick; resolution is still "watermark has passed
+        // minEvent+delay"
+        state.setTimeoutTimestamp(math.max(
+          best.minEventMs + delayMs, state.getCurrentWatermarkMs() + 1))
+        Iterator.empty
+      }
+    }
 
   /** Event-time streaming passage dedup — [[streamingPassageDedup]] made
     * ARRIVAL-ORDER INDEPENDENT under bounded disorder.
@@ -971,53 +969,9 @@ object StreamingOps {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (passage: String, rows: Iterator[(Long, java.sql.Timestamp, Int, String)],
             state: GroupState[PassagePending]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            if (s.resolved) { // TTL eviction firing on a tombstone
-              state.remove()
-              Iterator.empty
-            } else {
-              // resolution point: the candidate is final among admitted rows
-              state.update(s.copy(resolved = true))
-              ttlMs.foreach(t => // default: no new timeout — tombstone kept
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t))
-              Iterator.single((s.docId, s.pidx, passage))
-            }
-          } else {
-            val cur = state.getOption
-            if (cur.exists(_.resolved)) {
-              // post-resolution straggler (out-of-contract by construction:
-              // in-contract rows are watermark-late and filtered before this
-              // function); re-arm the eviction clock if TTL is on
-              ttlMs.foreach(t =>
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t))
-              Iterator.empty
-            } else {
-              var best = cur.orNull
-              for ((d, ts, p, _) <- rows) {
-                val t = ts.getTime
-                best =
-                  if (best == null) PassagePending(d, p, t, resolved = false)
-                  else {
-                    val smaller =
-                      d < best.docId || (d == best.docId && p < best.pidx)
-                    PassagePending(
-                      if (smaller) d else best.docId,
-                      if (smaller) p else best.pidx,
-                      math.min(t, best.minEventMs), resolved = false)
-                  }
-              }
-              state.update(best)
-              // the watermark may already sit past minEvent+delay (the
-              // candidate arrived right at the admission edge) — a
-              // timeout at/behind the watermark is rejected by Spark, so
-              // clamp forward one tick; resolution is still "watermark
-              // has passed minEvent+delay"
-              state.setTimeoutTimestamp(math.max(
-                best.minEventMs + delayMs, state.getCurrentWatermarkMs() + 1))
-              Iterator.empty
-            }
-          }
+          eventTimeKeeper(delayMs, ttlMs, state,
+            rows.map { case (d, ts, p, _) => (d, p, ts.getTime) })(
+            s => (s.docId, s.pidx, passage))
       }
   }
 

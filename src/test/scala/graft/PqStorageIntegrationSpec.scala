@@ -8,9 +8,9 @@ import graft.functions.VectorFunctions
 import graft.operators.{Knn, ProductQuantization => PQ}
 
 /** End-to-end compressed-serving flow: train codebooks → encode → persist
-  * the 64×-smaller code table as parquet → reload → ADC shortlist → exact
-  * rerank against the full-precision table. The shape a 100 TB deployment
-  * uses: the scan-heavy step reads only the code table.
+  * the code table as parquet → reload → ADC shortlist → exact rerank
+  * against the full-precision table. The shape a 100 TB deployment uses:
+  * the scan-heavy step reads only the code table.
   */
 class PqStorageIntegrationSpec extends SparkSpec {
 
@@ -19,15 +19,19 @@ class PqStorageIntegrationSpec extends SparkSpec {
     val rnd = new java.util.Random(17L)
     val dim = 32
     val centers = Array.fill(8)(Array.fill(dim)(rnd.nextGaussian() * 2.0))
+    // unit-norm like the engine's embeddings: there the euclidean ADC
+    // shortlist and the cosine rerank rank in the same order
     val rows = (0 until 1000).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(x => x + 0.2 * rnd.nextGaussian()).toSeq)
+      val v = centers(i % 8).map(x => x + 0.2 * rnd.nextGaussian())
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      (i.toLong, v.map(_ / norm).toSeq)
     }
     val data = rows.toDF("vec_id", "embedding")
-    val model = PQ.train(data, m = 4, k = 16)
+    val models = PQ.fitExact(data, dim, m = 4, kSub = 16, iterations = 5)
 
     val dir = Files.createTempDirectory("graft_pq").toString
-    PQ.encode(data, model).write.mode("overwrite").parquet(s"$dir/codes")
+    PQ.encodeExact(data, models, dim)
+      .write.mode("overwrite").parquet(s"$dir/codes")
     data.write.mode("overwrite").parquet(s"$dir/full")
 
     // compression is real on disk: the code table is much smaller than
@@ -40,13 +44,14 @@ class PqStorageIntegrationSpec extends SparkSpec {
 
     val codes = spark.read.parquet(s"$dir/codes")
     val full = spark.read.parquet(s"$dir/full")
-    val q = rows(3)._2.toArray
-    val exact = Knn.knn(full,
-        full.where(col("vec_id") === 3).select(col("embedding").as("qv")),
-        10, VectorFunctions.euclidean)
+    val q = full.where(col("vec_id") === 3)
+    val exact = Knn.knn(full, q.select(col("embedding").as("qv")), 10,
+        VectorFunctions.cosine)
       .collect().map(_.getLong(0)).toSet
-    val served = PQ.adcKnnRerank(codes, full, model, q, k = 10, shortlist = 80)
-      .collect().map(_.getLong(0)).toSet
+    val served = PQ.exactAdcKnnBatchFrom(full, codes, models,
+        q.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
+        k = 10, candFactor = 8)
+      .collect().map(_.getLong(1)).toSet
     assert((exact & served).size >= 9, s"exact=$exact served=$served")
   }
 }

@@ -1,39 +1,57 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.operators.{Knn, ProductQuantization => PQ}
+import graft.operators.{Kmeans, Knn, ProductQuantization => PQ}
 
-/** PQ invariants: compression, reproducibility, and ADC recall. */
+/** PQ invariants: compression, reproducibility, ADC recall, and the
+  * integer-exact faces' parity with their exact and single-query twins.
+  */
 class ProductQuantizationSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sfDir)
-  private lazy val model = PQ.train(emb, m = 8, k = 16)
+  // m = 8 subspaces of 8 dims with 16 cells each: a 512 B vector becomes
+  // 8 codes below 16 — one byte each packed, the 64x shape
+  private lazy val models =
+    PQ.fitExact(emb, dim = 64, m = 8, kSub = 16, iterations = 2)
+  private lazy val codes = PQ.encodeExact(emb, models, dim = 64)
+
+  private def queriesOf(df: DataFrame, ids: Long*): DataFrame =
+    df.where(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+
+  private def flat(ms: Array[Kmeans.Model]) =
+    ms.toSeq.map(_.centroids.map { case (c, v) => (c, v.toSeq) }.toSeq)
 
   test("codes are one small int per subspace — the 64x compression shape") {
-    val enc = PQ.encode(emb, model)
-    assert(enc.count() == emb.count())
-    val bad = enc.where(
-      size(col("codes")) =!= 8 ||
-      exists(col("codes"), c => c < 0 || c >= 16)).count()
+    assert(codes.count() == emb.count())
+    assert(codes.columns.toSeq == "vec_id" +: (0 until 8).map(s => s"code_$s"))
+    val bad = codes.where((0 until 8)
+      .map(s => col(s"code_$s") < 0 || col(s"code_$s") >= 16)
+      .reduce(_ || _)).count()
     assert(bad == 0)
   }
 
   test("training and encoding are reproducible at a fixed seed") {
-    val again = PQ.train(emb, m = 8, k = 16)
-    assert(model.codebooks.flatten.flatten.toSeq == again.codebooks.flatten.flatten.toSeq)
+    // the integer-exact trainer's seed is its first-k init: a retrain
+    // gives bit-identical codebooks, hence identical codes
+    val again = PQ.fitExact(emb, dim = 64, m = 8, kSub = 16, iterations = 2)
+    assert(flat(again) == flat(models))
+    def rows(ms: Array[Kmeans.Model]) = PQ.encodeExact(emb, ms, dim = 64)
+      .orderBy(col("vec_id")).collect().toSeq
+    assert(rows(again) == rows(models))
   }
 
   test("self-match survives 64x quantization on the fixture") {
     // near-random high-dim vectors are nearly equidistant, so PQ (like any
     // coarse quantizer) cannot rank strangers there — but the query's own
-    // row must still land in its ADC top-10
-    val q = emb.where(col("vec_id") === 100)
-      .select(col("embedding").cast("array<double>"))
-      .collect()(0).getAs[scala.collection.Seq[Double]](0).toArray
-    val adc = PQ.adcKnn(PQ.encode(emb, model), model, q, k = 10)
-      .collect().map(_.getLong(0)).toSet
+    // row must still land in its ADC top-10 (candFactor 1: the shortlist
+    // IS the ADC top-10, the rerank only reorders it)
+    val adc = PQ.exactAdcKnnBatchFrom(emb, codes, models,
+        queriesOf(emb, 100L), k = 10, candFactor = 1)
+      .collect().map(_.getLong(1)).toSet
     assert(adc.contains(100L), adc.toString)
   }
 
@@ -47,20 +65,20 @@ class ProductQuantizationSpec extends SparkSpec {
       (i.toLong, c.map(x => x + 0.2 * rnd.nextGaussian()).toSeq)
     }
     val data = rows.toDF("vec_id", "embedding")
-    val m = PQ.train(data, m = 4, k = 32)
-    val q = rows(7)._2.toArray
-    val exact = Knn.knn(data,
-        data.where(col("vec_id") === 7).select(col("embedding").as("qv")),
-        10, VectorFunctions.euclidean)
+    val ms = PQ.fitExact(data, dim, m = 4, kSub = 32, iterations = 5)
+    val enc = PQ.encodeExact(data, ms, dim)
+    val q = queriesOf(data, 7L)
+    val exact = Knn.knn(data, q.select(col("qv")), 10, VectorFunctions.cosine)
       .collect().map(_.getLong(0)).toSet
-    val enc = PQ.encode(data, m)
-    // raw ADC: every candidate is from the query's cluster (codebook cells
-    // align with clusters; within-cell ranks tie)
-    val adc = PQ.adcKnn(enc, m, q, k = 10).collect().map(_.getLong(0))
+    // raw ADC (candFactor 1): every candidate is from the query's cluster
+    // (codebook cells align with clusters; within-cell ranks tie)
+    val adc = PQ.exactAdcKnnBatchFrom(data, enc, ms, q, k = 10, candFactor = 1)
+      .collect().map(_.getLong(1))
     assert(adc.forall(id => id % 16 == 7), adc.mkString(","))
     // deployed shape: ADC shortlist of 100 (5% of corpus) + exact re-rank
-    val reranked = PQ.adcKnnRerank(enc, data, m, q, k = 10, shortlist = 100)
-      .collect().map(_.getLong(0)).toSet
+    val reranked = PQ.exactAdcKnnBatchFrom(data, enc, ms, q, k = 10,
+        candFactor = 10)
+      .collect().map(_.getLong(1)).toSet
     assert((exact & reranked).size >= 9, s"exact=$exact reranked=$reranked")
   }
 
@@ -183,9 +201,22 @@ class ProductQuantizationSpec extends SparkSpec {
       nProbe = 2, k = 10, candFactor = 8))
     assert(bulk == leg)
     assert(bulk.size == 70)
-    // empty query batch: typed empty frame, not a crash
-    assert(PQ.residualAdcKnnBulk(emb, codes, rm,
-      queries.where(col("query_id") < 0), nProbe = 2, k = 10).isEmpty)
+    // empty query batch: every batch face answers the same typed empty
+    // frame (not a crash), with the non-empty answer's five columns
+    val shape = PQ.residualAdcKnnBatchFrom(emb, codes, rm, queries,
+      nProbe = 2, k = 10).schema.map(f => (f.name, f.dataType))
+    assert(shape.map(_._1) ==
+      Seq("query_id", "vec_id", "adc_sqdist_micro", "distance", "rank"))
+    val none = queries.where(col("query_id") < 0)
+    Seq(
+      PQ.residualAdcKnnBulk(emb, codes, rm, none, nProbe = 2, k = 10),
+      PQ.residualAdcKnnBatchFrom(emb, codes, rm, none, nProbe = 2, k = 10),
+      PQ.exactAdcKnnBatchFrom(emb, this.codes, models, none, k = 10,
+        candFactor = 8)
+    ).foreach { empty =>
+      assert(empty.collect().isEmpty)
+      assert(empty.schema.map(f => (f.name, f.dataType)) == shape)
+    }
   }
 
   test("residual PQ layout: probe equals in-memory face and prunes cell dirs") {

@@ -698,7 +698,7 @@ class StreamingSpec extends SparkSpec {
     s1.addData(rows.take(40).toSeq)
     s1.addData(rows.slice(40, 90).toSeq)
     s1.addData(rows.drop(90).toSeq) // three micro-batches, map-only
-    val q1 = StreamingOps.streamingSq8Encode(
+    val q1 = graft.operators.Quantization.sq8Encode(
       s1.toDF().toDF("vec_id", "embedding"))
       .writeStream.format("memory").queryName("sq8_encode_test")
       .outputMode(OutputMode.Append).start()
@@ -716,7 +716,7 @@ class StreamingSpec extends SparkSpec {
     val s2 = MemoryStream[(Long, Seq[Double])]
     s2.addData(rows.take(70).toSeq)
     s2.addData(rows.drop(70).toSeq)
-    val q2 = StreamingOps.streamingPqEncode(
+    val q2 = graft.operators.ProductQuantization.encodeExact(
       s2.toDF().toDF("vec_id", "embedding"), models, dim = 64)
       .writeStream.format("memory").queryName("pq_encode_test")
       .outputMode(OutputMode.Append).start()
@@ -734,7 +734,7 @@ class StreamingSpec extends SparkSpec {
     val s3 = MemoryStream[(Long, Seq[Double])]
     s3.addData(rows.take(55).toSeq)
     s3.addData(rows.drop(55).toSeq)
-    val q3 = StreamingOps.streamingResidualPqEncode(
+    val q3 = graft.operators.ProductQuantization.encodeResidual(
       s3.toDF().toDF("vec_id", "embedding"), rm)
       .writeStream.format("memory").queryName("ivfpq_encode_test")
       .outputMode(OutputMode.Append).start()
@@ -753,30 +753,38 @@ class StreamingSpec extends SparkSpec {
       emb, dim = 64, kCoarse = 4, coarseIters = 2, m = 4, kSub = 8,
       pqIters = 2)
     graft.operators.ProductQuantization.writeResidualLayout(emb, rm, path)
-    val qRows = emb.where(col("vec_id") < 5)
+    // two small micro-batches take the leg face; one burst above the
+    // bulk constant takes the join-shaped bulk face
+    val burst = StreamingOps.ResidualPqServeBulkQueries.toInt + 1
+    val qRows = emb.where(col("vec_id") < 5 + burst)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val want = graft.operators.ProductQuantization
-      .residualAdcKnnBatchFromLayout(spark, path, emb,
-        qRows.toSeq.toDF("query_id", "qv"), nProbe = 2, k = 10)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
-      .sortBy(t => (t._1, t._4))
+      .sortBy(_._1)
+    def batchFace(rs: Seq[(Long, Seq[Double])]) =
+      graft.operators.ProductQuantization
+        .residualAdcKnnBatchFromLayout(spark, path, emb,
+          rs.toDF("query_id", "qv"), nProbe = 2, k = 10)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
+        .sortBy(t => (t._1, t._4)).toSeq
+    val chunks = Seq(qRows.take(2).toSeq, qRows.slice(2, 5).toSeq,
+      qRows.drop(5).toSeq)
     val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Double, Long)]
+      .empty[Seq[(Long, Long, Double, Long)]]
     val s = MemoryStream[(Long, Seq[Double])]
-    s.addData(qRows.take(2).toSeq)
-    s.addData(qRows.drop(2).toSeq) // two micro-batches + possible empties
     val q = StreamingOps.streamingResidualPqServe(
       s.toDF().toDF("query_id", "qv"), path, emb,
       nProbe = 2, k = 10, candFactor = 8,
       (out, _) => got.synchronized {
-        got ++= out.collect().map(r =>
+        val rows = out.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
+        if (rows.nonEmpty) got += rows.sortBy(t => (t._1, t._4)).toSeq
       })
-    try q.processAllAvailable() finally q.stop()
-    assert(got.sortBy(t => (t._1, t._4)).toSeq == want.toSeq)
-    assert(want.length == 50) // 5 queries × k
+    try chunks.foreach { c => s.addData(c); q.processAllAvailable() }
+    finally q.stop()
+    // one answer per micro-batch, each the batch face's rows for it
+    assert(got.toSeq == chunks.map(batchFace))
+    assert(got.map(_.length).toSeq == Seq(20, 30, burst * 10))
   }
 
   test("streaming DSIR scores equal the batch face under the same fixed model") {
